@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: times every catalog query at SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line. A warmup pass (tiny parquet read + codegen
@@ -9,29 +8,9 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects;
-      // read as long and convert explicitly (Queries.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // q29 writes bucketed managed tables; keep the warehouse off the
-      // driver's CWD so the write never depends on repo-dir permissions
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warmup: JIT + codegen + parquet reader init, not counted
-    spark.range(1000000).select(sum(col("id"))).collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(sum(length(col("text")))).collect()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
+    GraftSession.warmUp(spark, sfDir)
 
     // optional comma-separated name-prefix filter for local iteration,
     // e.g. SPARK_GRAFT_ONLY=q97,q83
@@ -117,7 +96,7 @@ object Bench {
       // LAST and replace the 32-core detail (r13's r14.json held the
       // c8 numbers). Additions-only: the main-core filename and JSON
       // shape are unchanged (plus a "cpus" field for provenance).
-      val mainCores = cpus == Runtime.getRuntime.availableProcessors.toString
+      val mainCores = cpus == Runtime.getRuntime.availableProcessors
       val fname = if (mainCores) f"r$r%02d.json" else f"r$r%02d_c$cpus.json"
       java.nio.file.Files.write(
         dDir.resolve(fname), detailJson.getBytes("UTF-8"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× growth probe for the dedup family (SCALE.md §9): replicate the
@@ -21,23 +21,11 @@ object GrowthProbe {
     val factors =
       if (args.nonEmpty) args(0).split(",").toSeq.map(_.toInt)
       else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
+    GraftSession.warmUp(spark, sfDir)
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    // warmup: reader + codegen init off the clock
-    base.select(sum(length(col("text")))).collect()
 
     // IVFADC fixtures: centroids/codebooks/queries come from the BASE
     // table and stay fixed across factors, so growth measures only the

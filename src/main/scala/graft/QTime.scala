@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Optimization-round measurement harness (guide §1): times the named
   * catalog queries REPS times each (min reported — the sandbox disk
@@ -15,29 +13,13 @@ import org.apache.spark.sql.functions._
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val names = sys.env.getOrElse("SPARK_GRAFT_QTIME", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planTag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same warmup as Bench
-    spark.range(1000000).select(sum(col("id"))).collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(sum(length(col("text")))).collect()
+    val spark = GraftSession.local(GraftSession.cpus)
+    GraftSession.warmUp(spark, sfDir)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.startsWith) }
     selected.foreach { case (name, fn) =>

@@ -1702,8 +1702,7 @@ object functions {
     * and final merge. */
   def collect_min_k(e: Column, k: Int): Column = {
     require(k >= 1, s"collect_min_k needs k >= 1, got $k")
-    toCol(new org.apache.spark.sql.catalyst.expressions.aggregate
-      .CollectTopK(expression(e), k, true, 0, 0).toAggregateExpression())
+    org.apache.spark.sql.graft.Shim.collectTopK(e, k, reverse = true)
   }
 
   def interleave_bits(cols: Seq[Column], bits: Int = 21): Column =

@@ -51,12 +51,3 @@ object CachedStage {
   def around(cacheDir: String)(stages: Mapper*): CachedStage =
     CachedStage(cacheDir, Pipeline(stages.flatMap(_.stages).toVector))
 }
-
-/** In-memory persist — `df.persist()` as a pipeline stage (the
-  * lightweight sibling of CachedStage for intra-job reuse). */
-final case class PersistStage(
-    level: String = "MEMORY_AND_DISK"
-) extends Mapper {
-  override protected def build(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.fromString(level))
-}

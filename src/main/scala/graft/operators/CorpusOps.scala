@@ -456,48 +456,14 @@ object FingerprintOverlap {
   ): DataFrame = {
     val inverted =
       df.select(col(idField).as("__fo_id"), col(fpField).as("__fo_f"))
-    maxBucketSize match {
-      case Some(cap) =>
-        // POSTINGS shape (r13): one groupBy on the fingerprint builds
-        // each posting list, keeps the `cap` members ranked first by
-        // (salted hash, id) — the exact (hash, id) order the previous
-        // row_number window used — and emits the posting's ≤
-        // cap·(cap−1)/2 pairs in-row via
-        // [[graft.functions.functions.pair_combos]]. The window shuffle,
-        // the self-join (two more exchanges), and the persist/checkpoint
-        // bookkeeping they required all disappear; the per-pair shared
-        // count (and so the output) is identical. r14: the cap is a
-        // BOUNDED-HEAP aggregate ([[graft.functions.functions
-        // .collect_min_k]]) — same ascending order as the r13
-        // `array_sort(collect_list)` slice, but a hot fingerprint's
-        // buffer never exceeds cap and partial aggregation caps what
-        // each map partition ships.
-        inverted
-          .select(col("__fo_f"),
-            struct(
-              hasher(concat_ws("|", col("__fo_id"), col("__fo_f"))).as("h"),
-              col("__fo_id").as("id")).as("__fo_r"))
-          .groupBy(col("__fo_f"))
-          .agg(graft.functions.functions.collect_min_k(col("__fo_r"), cap)
-            .as("__fo_kept"))
-          .select(explode(graft.functions.functions.pair_combos(
-            transform(col("__fo_kept"), r => r.getField("id")))).as("__fo_p"))
-          .select(col("__fo_p").getField("id_a").as("id_a"),
-            col("__fo_p").getField("id_b").as("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-      case None =>
-        inverted.as("a")
-          .join(
-            inverted.as("b"),
-            col("a.__fo_f") === col("b.__fo_f") &&
-              col("a.__fo_id") < col("b.__fo_id"))
-          .select(col("a.__fo_id").as("id_a"), col("b.__fo_id").as("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("shared"))
-          .filter(col("shared") >= minShared)
-    }
+    // capped: bounded postings per fingerprint (see [[Postings]]), ranked
+    // by the salted hash(id|fp). Either leg emits one row per shared
+    // fingerprint, so rows per pair are its `shared` count.
+    Postings.candidatePairs(inverted, Seq("__fo_f"), "__fo_id",
+      hasher(concat_ws("|", col("__fo_id"), col("__fo_f"))), maxBucketSize)
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
   }
 }
 

@@ -237,47 +237,14 @@ object MinHashLSH {
           )
         ).as(Seq("band", "bh"))
       )
-    maxBucketSize match {
-      case Some(cap) =>
-        // POSTINGS shape (r14, the PrefixFilterJoin/FingerprintOverlap
-        // discipline applied to the banding cap): ONE groupBy on the
-        // bucket key keeps the `cap` members ranked first by (salted
-        // hash, id) through a BOUNDED heap
-        // ([[graft.functions.functions.collect_min_k]] — ascending
-        // (h, id), exactly the order the row_number window used) and
-        // emits each bucket's ≤ cap·(cap−1)/2 pairs in-row via
-        // pair_combos. Replaces the window shuffle + sort, the persist/
-        // count materialization job, and the self-join's two exchanges
-        // with a single exchange — pair set identical (parity-spec'd) —
-        // and a degenerate hot bucket folds to ≤ cap rows per map
-        // partition instead of sorting its full membership.
-        bandedAll
-          .select(col("band"), col("bh"),
-            struct(
-              hasher(concat_ws("|", col("__graft_id"), col("band"))).as("h"),
-              col("__graft_id").as("id")).as("__graft_r"))
-          .groupBy(col("band"), col("bh"))
-          .agg(graft.functions.functions.collect_min_k(col("__graft_r"), cap)
-            .as("__graft_kept"))
-          .select(explode(graft.functions.functions.pair_combos(
-            transform(col("__graft_kept"), r => r.getField("id"))))
-            .as("__graft_p"))
-          .select(col("__graft_p").getField("id_a").as("id_a"),
-            col("__graft_p").getField("id_b").as("id_b"))
-          .distinct()
-      case None =>
-        val banded = bandedAll.persist()
-        banded.count() // materialize once; both self-join legs read the cache
-        val a = banded.as("a")
-        val b = banded.as("b")
-        a.join(
-            b,
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.__graft_id") < col("b.__graft_id")
-          )
-          .select(col("a.__graft_id").as("id_a"), col("b.__graft_id").as("id_b"))
-          .distinct()
-    }
+    // uncapped: materialize the banding once so both self-join legs
+    // read the cache. Capped: bounded postings per (band, bucket) (see
+    // [[Postings]]), ranked by hash(id|band) — one exchange, no window
+    // or self-join.
+    if (maxBucketSize.isEmpty) bandedAll.persist().count()
+    Postings.candidatePairs(bandedAll, Seq("band", "bh"), "__graft_id",
+      hasher(concat_ws("|", col("__graft_id"), col("band"))), maxBucketSize)
+      .distinct()
   }
 
   /** Containment pairing — Broder 1997 distinguishes RESEMBLANCE
@@ -342,10 +309,7 @@ object MinHashLSH {
         .collect_min_k(col("__ct_id"), maxShingleDf.toInt + 1).as("__ct_ids"))
       .filter(size(col("__ct_ids")) >= 2 &&
         size(col("__ct_ids")) <= maxShingleDf.toInt)
-      .select(explode(graft.functions.functions.pair_combos(col("__ct_ids")))
-        .as("__ct_p"))
-      .select(col("__ct_p").getField("id_a").as("id_a"),
-        col("__ct_p").getField("id_b").as("id_b"))
+      .transform(Postings.pairsOf(col("__ct_ids")))
       .distinct()
     val out = cand
       .join(shingled.select(col("__ct_id").as("id_a"),
@@ -373,6 +337,37 @@ object MinHashLSH {
     ckpt
   }
 
+  /** The exact-verified near-dup pairs behind [[dedup]] and the cluster
+    * variants: signature → uncapped banding → join both sides' distinct
+    * shingle sets → keep `(id_a, id_b)` with Jaccard ≥ `minJaccard`. */
+  private def verifiedPairs(
+      df: DataFrame,
+      wordsField: String,
+      idField: String,
+      shingleSize: Int,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double
+  ): DataFrame = {
+    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
+    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
+    val shingled = df.select(
+      col(idField).as("__id"),
+      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)).as("__sh")
+    )
+    pairs
+      .join(shingled.withColumnRenamed("__id", "id_a")
+        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
+      .join(shingled.withColumnRenamed("__id", "id_b")
+        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
+      .withColumn("inter",
+        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
+      .withColumn("jac",
+        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
+      .filter(col("jac") >= minJaccard)
+      .select("id_a", "id_b")
+  }
+
   /** Full near-dedup: signature → banding → connected-via-pairs removal
     * (keep the smallest id of each candidate pair's right side removed).
     * Single-linkage transitive closure is deliberately NOT computed
@@ -388,29 +383,8 @@ object MinHashLSH {
       bands: Int = 4,
       minJaccard: Double = 0.8
   ): DataFrame = {
-    val withSig =
-      MinHashSignature(wordsField, shingleSize, numHashes)(df)
-    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
-    val shingled = df.select(
-      col(idField).as("__id"),
-      array_distinct(TextShingles.shingles(col(wordsField), shingleSize))
-        .as("__sh")
-    )
-    val verified = pairs
-      .join(shingled.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(shingled.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn(
-        "inter",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType)
-      )
-      .withColumn(
-        "jac",
-        col("inter") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      )
-      .filter(col("jac") >= minJaccard)
+    val verified = verifiedPairs(df, wordsField, idField, shingleSize,
+      numHashes, bands, minJaccard)
     val toDrop = verified.select(col("id_b").as(idField)).distinct()
     df.join(toDrop, Seq(idField), "left_anti")
   }
@@ -429,23 +403,8 @@ object MinHashLSH {
       minJaccard: Double = 0.8,
       maxIter: Int = 20
   ): DataFrame = {
-    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
-    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
-    val shingled = df.select(
-      col(idField).as("__id"),
-      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)).as("__sh")
-    )
-    val verified = pairs
-      .join(shingled.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(shingled.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn("inter",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
-      .withColumn("jac",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jac") >= minJaccard)
-      .select("id_a", "id_b")
+    val verified = verifiedPairs(df, wordsField, idField, shingleSize,
+      numHashes, bands, minJaccard)
     val comps = ConnectedComponents.components(verified, maxIter = maxIter)
     // drop every clustered row that is not its cluster's minimum
     val losers = comps.filter(col("id") =!= col("comp"))
@@ -563,23 +522,8 @@ object MinHashLSH {
       minJaccard: Double = 0.8,
       maxIter: Int = 20
   ): DataFrame = {
-    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
-    val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
-    val shingled = df.select(
-      col(idField).as("__id"),
-      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)).as("__sh")
-    )
-    val verified = pairs
-      .join(shingled.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(shingled.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn("inter",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
-      .withColumn("jac",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jac") >= minJaccard)
-      .select("id_a", "id_b")
+    val verified = verifiedPairs(df, wordsField, idField, shingleSize,
+      numHashes, bands, minJaccard)
     val comps = ConnectedComponents.components(verified, maxIter = maxIter)
     val quality = df.select(
       col(idField).as("id"),
@@ -864,10 +808,8 @@ object BbitMinHash {
   *
   * Scale shape: linear band explode (`bands` rows/doc, each an 8-byte
   * chunk key), shuffle keyed on (band, chunk), join work bounded per
-  * bucket — with the same deterministic hot-bucket down-sample as
-  * [[MinHashLSH.candidatePairs]] for degenerate chunks (all-zero
-  * simhashes of empty docs). 64-bit hashes with 16-bit chunks give
-  * 65k buckets per band; the verify is one codegen'd popcount. */
+  * bucket. 64-bit hashes with 16-bit chunks give 65k buckets per band;
+  * the verify is one codegen'd popcount. */
 object SimHashNearDup {
 
   def candidatePairs(
@@ -876,9 +818,7 @@ object SimHashNearDup {
       simhashField: String,
       bits: Int = 64,
       bands: Int = 4,
-      maxHamming: Int = 3,
-      maxBucketSize: Option[Int] = None,
-      hasher: Column => Column = c => xxhash64(c)
+      maxHamming: Int = 3
   ): DataFrame = {
     require(bits % bands == 0,
       s"bits ($bits) must be divisible by bands ($bands)")
@@ -899,27 +839,11 @@ object SimHashNearDup {
             .bitwiseAND(lit(mask))): _*)
       ).as(Seq("__sh_band", "__sh_chunk"))
     )
-    val kept = (maxBucketSize match {
-      case Some(cap) =>
-        banded
-          .withColumn(
-            "__sh_rn",
-            row_number().over(
-              Window.partitionBy(col("__sh_band"), col("__sh_chunk"))
-                .orderBy(
-                  hasher(concat_ws("|", col("__sh_id"), col("__sh_band"),
-                    col("__sh_chunk"))),
-                  col("__sh_id")))
-          )
-          .filter(col("__sh_rn") <= cap)
-          .drop("__sh_rn")
-      case None => banded
-    }).persist()
-    // r13: materialize once — the upstream simhash expression (per-word
-    // hash + bit fold) is the expensive part, and without the persist
-    // BOTH self-join legs recompute it (the MinHashLSH.candidatePairs
-    // discipline applied here, including leaving the cache to the
-    // session: a checkpoint would truncate the plan callers audit)
+    // materialize once: without the persist BOTH self-join legs
+    // recompute the upstream simhash (per-word hash + bit fold). The
+    // cache is left to the session; a checkpoint would truncate the plan
+    // callers audit.
+    val kept = banded.persist()
     kept.count()
     kept.as("a")
       .join(

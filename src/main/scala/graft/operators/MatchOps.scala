@@ -301,7 +301,6 @@ final case class PhraseReplace(
   * oracles, the [[Medoid]]/[[DeterministicSample]] portable twin). */
 object PrefixFilterJoin {
   import graft.functions.functions.integral_divide
-  import org.apache.spark.sql.expressions.Window
 
   /** All pairs (id_a < id_b) with set-Jaccard >= minJaccardPpm/1e6:
     * (id_a, id_b, jaccard_ppm). */
@@ -334,43 +333,12 @@ object PrefixFilterJoin {
       .cast("int") + 1
     val prefAll = ordered.select(col("__pf_id"),
       explode(slice(col("toks"), lit(1), p)).as("ptok"))
-    val cand = maxPrefixDf match {
-      case Some(cap) =>
-        // POSTINGS shape (r13): one groupBy on the prefix token builds
-        // each posting list, keeps the `cap` members ranked first by
-        // (salted hash, id), and emits the posting's ≤ cap·(cap−1)/2
-        // pairs IN-ROW via [[graft.functions.functions.pair_combos]].
-        // Replaces the window shuffle + self-join (which re-evaluated
-        // the rank hash and the window once PER JOIN LEG) with a single
-        // exchange; the pair set is identical. The rank hash stays
-        // salted with the token so a hot document is not the one
-        // dropped everywhere. r14: the cap selection is a BOUNDED-HEAP
-        // aggregate ([[graft.functions.functions.collect_min_k]], same
-        // ascending (h, id) order the r13 `array_sort(collect_list)`
-        // slice produced) — a hyper-hot prefix token no longer builds
-        // an unbounded per-key buffer before being capped, and map-side
-        // partial aggregation ships ≤ cap rows per (partition, token).
-        prefAll
-          .select(col("ptok"),
-            struct(
-              hasher(concat_ws("|", col("__pf_id"), col("ptok"))).as("h"),
-              col("__pf_id").as("id")).as("__pf_r"))
-          .groupBy(col("ptok"))
-          .agg(graft.functions.functions.collect_min_k(col("__pf_r"), cap)
-            .as("__pf_kept"))
-          .select(explode(graft.functions.functions.pair_combos(
-            transform(col("__pf_kept"), r => r.getField("id")))).as("__pf_p"))
-          .select(col("__pf_p").getField("id_a").as("id_a"),
-            col("__pf_p").getField("id_b").as("id_b"))
-          .distinct()
-      case None =>
-        val pref = prefAll
-        pref.as("a")
-          .join(pref.as("b"),
-            col("a.ptok") === col("b.ptok") && col("a.__pf_id") < col("b.__pf_id"))
-          .select(col("a.__pf_id").as("id_a"), col("b.__pf_id").as("id_b"))
-          .distinct()
-    }
+    // capped: bounded postings per prefix token (see [[Postings]]); the
+    // rank hash is salted with the token so a hot document is not the
+    // one dropped everywhere
+    val cand = Postings.candidatePairs(prefAll, Seq("ptok"), "__pf_id",
+      hasher(concat_ws("|", col("__pf_id"), col("ptok"))), maxPrefixDf)
+      .distinct()
     val full = cand
       .join(ordered.select(col("__pf_id").as("id_a"), col("toks").as("__ta")), "id_a")
       .join(ordered.select(col("__pf_id").as("id_b"), col("toks").as("__tb")), "id_b")

@@ -981,15 +981,6 @@ object TextRepair {
     unwrapSingleNewlines(normalizeBlankRuns(dehyphenate(text)))
 }
 
-/** Mapper: repair hard-wrapped text fields in place. */
-final case class RepairText(fields: Seq[String]) extends Mapper {
-  override def inputFields: Seq[String] = fields
-  override def outputFields: Seq[String] = fields
-  override protected def build(df: DataFrame): DataFrame =
-    fields.foldLeft(df)((acc, f) =>
-      acc.withColumn(f, TextRepair.repair(col(f))))
-}
-
 /** Quotation profile — how much of a document is quoted speech:
   * forum scrapes, chat logs, and quote-farm spam carry high quote
   * density, while encyclopedic prose sits low; the longest-quote

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
 
@@ -50,9 +49,7 @@ object GroupTopK {
       else struct(sortKeys :+ struct(payload.map(col): _*).as("__gtk_p"): _*)
     // reverse=false keeps the num LARGEST under the struct ordering and
     // emits them descending — exactly the `largest` contract.
-    val topk = Shim.column(
-      new CollectTopK(Shim.expression(elem), k, !largest, 0, 0)
-        .toAggregateExpression())
+    val topk = Shim.collectTopK(elem, k, reverse = !largest)
     val exploded = df
       .groupBy(groupCols.map(col): _*)
       .agg(topk.as("__gtk"))

@@ -198,6 +198,33 @@ class MatchOpsSpec extends SparkSpec {
       "id", "toks", 300000L, maxPrefixDf = Some(4)))
     assert(capHot2 == capHot)
   }
+
+  test("PlanTrace: a job description with '/' still returns pairs and writes the plan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plantrace")
+    // sys.env re-reads System.getenv() on every call; the JVM is started
+    // with java.util opened, so the test can set the variable in-process
+    val env = {
+      val f = System.getenv().getClass.getDeclaredField("m")
+      f.setAccessible(true)
+      f.get(System.getenv()).asInstanceOf[java.util.Map[String, String]]
+    }
+    val sc = spark.sparkContext
+    env.put("SPARK_GRAFT_PLAN_DIR", dir.toString)
+    sc.setJobDescription("a/b")
+    try {
+      val rows = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a", "b", "c")))
+        .toDF("id", "toks")
+      val got = PrefixFilterJoin.pairs(rows, "id", "toks", 600000L,
+        maxPrefixDf = Some(4))
+        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSeq
+      assert(got == Seq((1L, 2L)))
+      assert(java.nio.file.Files.exists(dir.resolve("a_b__pairs_before.txt")),
+        dir.toFile.list().toSeq)
+    } finally {
+      env.remove("SPARK_GRAFT_PLAN_DIR")
+      sc.setJobDescription(null)
+    }
+  }
 }
 
 class SortedNeighborhoodSpec extends SparkSpec {

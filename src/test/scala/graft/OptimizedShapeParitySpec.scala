@@ -197,6 +197,63 @@ class OptimizedShapeParitySpec extends SparkSpec {
     assert(viaWindow.exceptAll(viaPostings).count() === 0)
   }
 
+  /** Postings of the three key shapes the candidate sites use — a
+    * string prefix token, an LSH (band, bucket) and a long fingerprint
+    * — with one HOT key of 40 members on top of postings of 0..9, ids
+    * distinct per key. Each entry: (name, postings, keys, rank). */
+  private def postingShapes = {
+    val ids = (k: Long) => (0L until (det(k, 61) % 10 + 10) % 10)
+      .map(i => (det(k * 100 + i, 62) % 300 + 300) % 300).distinct
+    val hot = (0L until 40L).map(_ * 7)
+    val tok = ((0L until 30L).flatMap(k => ids(k).map(i => (s"t$k", i))) ++
+      hot.map(i => ("hot", i))).toDF("ptok", "id")
+    val band = ((0L until 30L).flatMap(k => ids(k).map(i => ((k % 4).toInt, s"b${k / 4}", i))) ++
+      hot.map(i => (2, "hot", i))).toDF("band", "bh", "id")
+    val fp = ((0L until 30L).flatMap(k => ids(k).map(i => (det(k, 63), i))) ++
+      hot.map(i => (Long.MinValue, i))).toDF("fp", "id")
+    Seq(
+      ("string token", tok, Seq("ptok"),
+        xxhash64(concat_ws("|", col("id"), col("ptok")))),
+      ("(band, bh)", band, Seq("band", "bh"),
+        md5(concat_ws("|", col("id"), col("band")))),
+      ("long fingerprint", fp, Seq("fp"),
+        xxhash64(concat_ws("|", col("id"), col("fp")))))
+  }
+
+  private def sameMultiset(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    assert(a.exceptAll(b).count() === 0, what)
+    assert(b.exceptAll(a).count() === 0, what)
+  }
+
+  test("Postings.candidatePairs: cap >= largest posting == the uncapped self-join (multiset)") {
+    import graft.operators.Postings
+    postingShapes.foreach { case (name, df, keys, rank) =>
+      sameMultiset(
+        Postings.candidatePairs(df, keys, "id", rank, Some(40)),
+        Postings.candidatePairs(df, keys, "id", rank, None),
+        s"$name: capped at the largest posting diverged from uncapped")
+    }
+  }
+
+  test("Postings.candidatePairs: a hot key over cap == row_number window + self-join (multiset)") {
+    import graft.operators.Postings
+    val cap = 4
+    postingShapes.foreach { case (name, df, keys, rank) =>
+      val kept = df
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(keys.map(col): _*).orderBy(rank, col("id"))))
+        .filter(col("rn") <= cap)
+      val sameKey = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+      val reference = kept.as("a")
+        .join(kept.as("b"), sameKey && col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      sameMultiset(
+        Postings.candidatePairs(df, keys, "id", rank, Some(cap)), reference,
+        s"$name: capped postings diverged from the window reference")
+    }
+  }
+
   test("word_shingles matches the TextShingles HOF (null array, null words, short, unicode)") {
     import graft.operators.TextShingles
     val vocab = Seq("a", "bb", "日本語", "", null, "x y", "zz")

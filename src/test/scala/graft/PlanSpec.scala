@@ -143,6 +143,16 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("bh"), plan)
   }
 
+  test("capped Postings.candidatePairs: one Exchange, no Window, no self-join") {
+    val df = (0L until 200L).map(i => (s"t${i % 13}", i)).toDF("tok", "id")
+    val out = Postings.candidatePairs(df, Seq("tok"), "id",
+      xxhash64(concat_ws("|", col("id"), col("tok"))), Some(3))
+    val plan = out.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(plan).length == 1, plan)
+    assert(!plan.contains("Window"), plan)
+    assert(!plan.contains("Join"), plan)
+  }
+
   test("jinja recipe chain is narrow: no Exchange anywhere in the plan") {
     val letters = "abcdefghijklmnopqrstuvwxyz".map(_.toString)
     val vocab =
