@@ -565,7 +565,9 @@ object MinHashLSH {
   * (join + groupBy); `localCheckpoint` truncates the lineage so plans
   * stay bounded. The driver only coordinates the loop — all data stays
   * distributed. Duplicate clusters in corpus dedup are shallow (near-dup
-  * groups), so the iteration cap is generous, not load-bearing. */
+  * groups), so the iteration cap is generous, not load-bearing; a loop
+  * that reaches it unconverged throws instead of returning partial
+  * labels. */
 object ConnectedComponents {
 
   /** pairs (idA, idB) as undirected edges → (id, comp) with comp = the
@@ -578,7 +580,8 @@ object ConnectedComponents {
     * the distributed loop's per-round job scheduling dwarfs the actual
     * work. Above the threshold (billions of docs → possibly billions of
     * edges) the distributed min-label propagation below runs; it never
-    * funnels data to the driver. */
+    * funnels data to the driver, and throws `IllegalStateException` if
+    * labels still change after `maxIter` rounds. */
   def components(
       pairs: DataFrame,
       idA: String = "id_a",
@@ -586,6 +589,7 @@ object ConnectedComponents {
       maxIter: Int = 20,
       localThreshold: Long = 2000000L
   ): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     // materialize the (possibly expensive) pair subtree ONCE before the
     // symmetric union references it twice
     PlanTrace.dump("cc_edges", pairs)
@@ -614,8 +618,8 @@ object ConnectedComponents {
       .repartition(loopParts)
       .localCheckpoint()
     var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
+    var changed = -1L
+    while (i < maxIter && changed != 0L) {
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("comp").as("ncomp")), Seq("dst"))
         .groupBy(col("src"))
@@ -646,15 +650,17 @@ object ConnectedComponents {
         )
         .repartition(loopParts)
         .localCheckpoint()
-      val changed = newLabels
+      changed = newLabels
         .agg(coalesce(sum(when(col("comp") =!= col("oldComp"), 1L)), lit(0L)))
         .head()
         .getLong(0)
       labels = newLabels.drop("oldComp")
-      converged = changed == 0
       i += 1
     }
     edges.unpersist()
+    if (changed != 0L)
+      throw new IllegalStateException(s"ConnectedComponents did not converge " +
+        s"within maxIter = $maxIter rounds: $changed labels still changed in the last round")
     labels
   }
 

@@ -273,18 +273,30 @@ final case class PhraseReplace(
   * S-curve) and [[MinHashLSH.containmentPairs]] (containment): when the
   * contract is "every pair above t, provably", this is the operator.
   *
-  * Tokens are ordered rarest-first (ascending document frequency, ties
-  * by token) — the canonical ordering that makes prefixes selective:
-  * the prefix carries a document's rarest tokens, so hot boilerplate
-  * words never generate candidates. Deterministic end to end (integral
-  * ceil, (df, token) struct sort, scaled-integral Jaccard), so a SQL
-  * oracle replays candidates AND survivors exactly.
+  * Rarest-first order: each document's distinct tokens sort by
+  * ascending document frequency (df), ties by token, so a prefix
+  * carries the document's rarest tokens and hot boilerplate words never
+  * generate candidates. Deterministic end to end (integral ceil,
+  * (df, token) struct sort, scaled-integral Jaccard), so a SQL oracle
+  * replays candidates AND survivors exactly.
   *
-  * Scale shape: one df partial-agg, one (id, token) re-aggregation into
-  * ordered arrays, a prefix explode of <= p rows/doc, the inverted-index
-  * equi-join on the prefix token (AQE skew-split covers residual hot
-  * prefixes), and a row-local verify on the two candidate arrays —
-  * token arrays shuffle only for candidate pairs.
+  * df ≥ 2 postings: the same order makes most prefix tokens occur in
+  * ONE document (df = 1). Such a posting has a single member, so
+  * neither leg can pair it — the capped leg's `pair_combos` over one
+  * kept id emits nothing, and neither does the `a.id < b.id`
+  * self-join. The prefix explode therefore skips df = 1 tokens; the
+  * prefix LENGTH p still counts them, and the verify legs still see
+  * every token, so candidates, survivors and `jaccard_ppm` are
+  * identical to indexing the whole prefix.
+  *
+  * Scale shape: df is attached by ONE window partitioned by the token
+  * over the exploded (id, token) rows — every row must reach a
+  * df-annotated output keyed by token, so a map-side partial combine
+  * would save nothing, and the window's per-token buffer spills. Then
+  * one (id, token) re-aggregation into ordered arrays, a prefix explode
+  * of <= p df ≥ 2 rows/doc, the inverted-index equi-join on the prefix
+  * token, and a row-local verify on the two candidate arrays — token
+  * arrays shuffle only for candidate pairs.
   *
   * `maxPrefixDf` is the deterministic hot-postings cap — the
   * [[MinHashLSH.candidatePairs]] `maxBucketSize` discipline applied to
@@ -301,6 +313,7 @@ final case class PhraseReplace(
   * oracles, the [[Medoid]]/[[DeterministicSample]] portable twin). */
 object PrefixFilterJoin {
   import graft.functions.functions.integral_divide
+  import org.apache.spark.sql.expressions.Window
 
   /** All pairs (id_a < id_b) with set-Jaccard >= minJaccardPpm/1e6:
     * (id_a, id_b, jaccard_ppm). */
@@ -316,55 +329,69 @@ object PrefixFilterJoin {
       s"threshold must be in (0, 1e6], got $minJaccardPpm")
     require(maxPrefixDf.forall(_ >= 2),
       s"maxPrefixDf must be >= 2 (a 1-doc posting pairs nothing), got $maxPrefixDf")
-    val ex = df
-      .select(col(idField).as("__pf_id"),
-        explode(array_distinct(col(tokensField))).as("tok"))
-    val dfreq = ex.groupBy("tok").agg(count(lit(1)).as("df"))
-    val ordered = ex.join(dfreq, "tok")
-      .groupBy("__pf_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("__st"))
-      .select(col("__pf_id"),
-        transform(col("__st"), s => s.getField("tok")).as("toks"))
-      .persist()
-    ordered.count() // one ordered-token build feeds prefix + both verify legs
-    val n = size(col("toks"))
+    // one ordered-token build feeds the prefix and both verify legs
+    val ordered = orderedTokens(df, idField, tokensField, minJaccardPpm).persist()
+    try {
+      ordered.count()
+      val prefAll = ordered.select(col("__pf_id"), explode(col("ptoks")).as("ptok"))
+      // capped: bounded postings per prefix token (see [[Postings]]); the
+      // rank hash is salted with the token so a hot document is not the
+      // one dropped everywhere
+      val cand = Postings.candidatePairs(prefAll, Seq("ptok"), "__pf_id",
+        hasher(concat_ws("|", col("__pf_id"), col("ptok"))), maxPrefixDf)
+        .distinct()
+      val full = cand
+        .join(ordered.select(col("__pf_id").as("id_a"), col("toks").as("__ta")), "id_a")
+        .join(ordered.select(col("__pf_id").as("id_b"), col("toks").as("__tb")), "id_b")
+        .withColumn("__inter", graft.functions.functions.intersect_size(col("__ta"), col("__tb")).cast("long"))
+        .withColumn("jaccard_ppm",
+          integral_divide(lit(1000000L) * col("__inter"),
+            size(col("__ta")).cast("long") + size(col("__tb")).cast("long") - col("__inter")))
+        // the threshold predicate is pushed into the verify join's
+        // CONDITION by Catalyst, where every column reference is inlined —
+        // written as `jaccard_ppm >= min` it evaluated intersect_size
+        // THREE times per candidate (twice in the floor division, once in
+        // the projection). Algebraic twin with ONE intersection: for
+        // D = |A|+|B|−I ≥ 1, floor(1e6·I / D) ≥ min ⟺ 1e6·I ≥ min·D ⟺
+        // I·(1e6+min) ≥ min·(|A|+|B|). Identical row set (integer-exact,
+        // pinned by the parity spec); jaccard_ppm itself is still
+        // computed the original way, for survivors only.
+        .filter(col("__inter") * lit(1000000L + minJaccardPpm) >=
+          lit(minJaccardPpm) *
+            (size(col("__ta")).cast("long") + size(col("__tb")).cast("long")))
+        .select("id_a", "id_b", "jaccard_ppm")
+      // the checkpoint below makes the final plan opaque (Scan
+      // ExistingRDD); dump the candidate+verify path when measuring
+      PlanTrace.dump("pairs", full)
+      full.localCheckpoint()
+    } finally ordered.unpersist()
+  }
+
+  /** One row per document: `toks`, its distinct non-null tokens in
+    * rarest-first order, and `ptoks`, the df ≥ 2 tokens of its first
+    * p = |toks| - ceil(t·|toks|) + 1 (see the object doc). Documents
+    * with no token are absent. */
+  private[graft] def orderedTokens(
+      df: DataFrame,
+      idField: String,
+      tokensField: String,
+      minJaccardPpm: Long
+  ): DataFrame = {
+    val st = col("__st")
+    val n = size(st)
     val p = n - integral_divide(
       lit(minJaccardPpm) * n.cast("long") + lit(999999L), lit(1000000L))
       .cast("int") + 1
-    val prefAll = ordered.select(col("__pf_id"),
-      explode(slice(col("toks"), lit(1), p)).as("ptok"))
-    // capped: bounded postings per prefix token (see [[Postings]]); the
-    // rank hash is salted with the token so a hot document is not the
-    // one dropped everywhere
-    val cand = Postings.candidatePairs(prefAll, Seq("ptok"), "__pf_id",
-      hasher(concat_ws("|", col("__pf_id"), col("ptok"))), maxPrefixDf)
-      .distinct()
-    val full = cand
-      .join(ordered.select(col("__pf_id").as("id_a"), col("toks").as("__ta")), "id_a")
-      .join(ordered.select(col("__pf_id").as("id_b"), col("toks").as("__tb")), "id_b")
-      .withColumn("__inter", graft.functions.functions.intersect_size(col("__ta"), col("__tb")).cast("long"))
-      .withColumn("jaccard_ppm",
-        integral_divide(lit(1000000L) * col("__inter"),
-          size(col("__ta")).cast("long") + size(col("__tb")).cast("long") - col("__inter")))
-      // r14: the threshold predicate is pushed into the verify join's
-      // CONDITION by Catalyst, where every column reference is inlined —
-      // written as `jaccard_ppm >= min` it evaluated intersect_size
-      // THREE times per candidate (twice in the floor division, once in
-      // the projection). Algebraic twin with ONE intersection: for
-      // D = |A|+|B|−I ≥ 1, floor(1e6·I / D) ≥ min ⟺ 1e6·I ≥ min·D ⟺
-      // I·(1e6+min) ≥ min·(|A|+|B|). Identical row set (integer-exact,
-      // pinned by the parity spec); jaccard_ppm itself is still
-      // computed the original way, for survivors only.
-      .filter(col("__inter") * lit(1000000L + minJaccardPpm) >=
-        lit(minJaccardPpm) *
-          (size(col("__ta")).cast("long") + size(col("__tb")).cast("long")))
-      .select("id_a", "id_b", "jaccard_ppm")
-    // the checkpoint below makes the final plan opaque (Scan
-    // ExistingRDD); dump the candidate+verify path when measuring
-    PlanTrace.dump("pairs", full)
-    val out = full.localCheckpoint()
-    ordered.unpersist()
-    out
+    df.select(col(idField).as("__pf_id"),
+        explode(array_distinct(col(tokensField))).as("tok"))
+      .filter(col("tok").isNotNull)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("tok")))
+      .groupBy("__pf_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("__st"))
+      .select(col("__pf_id"),
+        transform(st, s => s.getField("tok")).as("toks"),
+        transform(filter(slice(st, lit(1), p), s => s.getField("df") >= 2),
+          s => s.getField("tok")).as("ptoks"))
   }
 }
 

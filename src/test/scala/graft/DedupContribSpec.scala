@@ -79,6 +79,19 @@ class DedupContribSpec extends SparkSpec {
     assert(local(23L) == 5L && local(4L) == 1L)
   }
 
+  test("ConnectedComponents: distributed loop throws when maxIter ends unconverged") {
+    // a 64-node path needs several path-halving rounds, never one
+    val path = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      ConnectedComponents.components(path, maxIter = 1, localThreshold = 0L)
+    }
+    assert(e.getMessage.contains("maxIter = 1"), e.getMessage)
+    assert(e.getMessage.matches("(?s).*: [1-9][0-9]* labels still changed.*"), e.getMessage)
+    val comps = ConnectedComponents.components(path, localThreshold = 0L)
+      .as[(Long, Long)].collect().toMap
+    assert(comps.size == 64 && comps.values.toSet == Set(0L), comps)
+  }
+
   test("dedupClusters keeps one survivor per transitive cluster") {
     // base = 20 words; doc2 changes word 10, doc3 changes words 10+5:
     // jaccard(1,2) ≈ jaccard(2,3) ≈ 0.71 (≥ 0.6) but jaccard(1,3) ≈ 0.5

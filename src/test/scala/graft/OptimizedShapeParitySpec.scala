@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.functions.{pair_combos, pq_adc_dist, pq_encode}
 import graft.operators.ProductQuantizer
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -251,6 +252,78 @@ class OptimizedShapeParitySpec extends SparkSpec {
       sameMultiset(
         Postings.candidatePairs(df, keys, "id", rank, Some(cap)), reference,
         s"$name: capped postings diverged from the window reference")
+    }
+  }
+
+  /** The prefix-filter join as it stood before df ≥ 2 postings: df from
+    * a groupBy joined back onto the exploded rows, and every prefix
+    * token — df = 1 included — exploded into the postings. */
+  private def prefixPairsRef(df: org.apache.spark.sql.DataFrame,
+      minJaccardPpm: Long, maxPrefixDf: Option[Int], hasher: Column => Column) = {
+    import graft.functions.functions.{integral_divide, intersect_size}
+    import graft.operators.Postings
+    val ex = df.select(col("id").as("__pf_id"),
+      explode(array_distinct(col("toks"))).as("tok"))
+    val dfreq = ex.groupBy("tok").agg(count(lit(1)).as("df"))
+    val ordered = ex.join(dfreq, "tok")
+      .groupBy("__pf_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("__st"))
+      .select(col("__pf_id"), transform(col("__st"), s => s.getField("tok")).as("toks"))
+    val n = size(col("toks"))
+    val p = n - integral_divide(
+      lit(minJaccardPpm) * n.cast("long") + lit(999999L), lit(1000000L)).cast("int") + 1
+    val prefAll = ordered.select(col("__pf_id"),
+      explode(slice(col("toks"), lit(1), p)).as("ptok"))
+    Postings.candidatePairs(prefAll, Seq("ptok"), "__pf_id",
+        hasher(concat_ws("|", col("__pf_id"), col("ptok"))), maxPrefixDf)
+      .distinct()
+      .join(ordered.select(col("__pf_id").as("id_a"), col("toks").as("__ta")), "id_a")
+      .join(ordered.select(col("__pf_id").as("id_b"), col("toks").as("__tb")), "id_b")
+      .withColumn("__inter", intersect_size(col("__ta"), col("__tb")).cast("long"))
+      .withColumn("jaccard_ppm", integral_divide(lit(1000000L) * col("__inter"),
+        size(col("__ta")).cast("long") + size(col("__tb")).cast("long") - col("__inter")))
+      .filter(col("jaccard_ppm") >= minJaccardPpm)
+      .select("id_a", "id_b", "jaccard_ppm")
+  }
+
+  test("PrefixFilterJoin.pairs (window df, df >= 2 postings) == groupBy+join df over whole prefixes (multiset)") {
+    import graft.operators.PrefixFilterJoin
+    // near-dup corpus: 12 base documents of 10..19 tokens, half drawn
+    // from a 60-word vocabulary (hot postings) and half private to the
+    // base, each with 1..3 perturbed copies (one token swapped for a
+    // unique one, a shared token repeated) — so clusters of two share
+    // only df = 2 rare tokens
+    val base = (0L until 12L).map { b =>
+      (0L until (10 + b % 10)).map(i =>
+        if (i % 2 == 0) s"r${b}_$i" else s"w${(det(b * 50 + i, 71) % 60 + 60) % 60}")
+    }
+    val nearDup = base.zipWithIndex.flatMap { case (toks, b) =>
+      toks +: (1 to b % 3 + 1).map(c => toks.updated(c % toks.size, s"u${b}_$c") :+ toks.head)
+    }.zipWithIndex.map { case (t, i) => (i.toLong, Option(t)) }
+    // doc 100: at t = 0.5 its prefix (p = 5 of 8 tokens) is all df = 1
+    // solo tokens; null / empty arrays, a null element; an exact copy
+    val edges = Seq(
+      (100L, Option(Seq("solo1", "solo2", "solo3", "solo4", "solo5", "solo6", "w1", "w2"))),
+      (101L, None), (102L, Option(Seq.empty[String])),
+      (103L, Option(Seq("w1", null, "w2", "w2"))), (104L, Option(Seq(null: String))),
+      (105L, Option(base.head)))
+    val mixed = (nearDup ++ edges).toDF("id", "toks")
+    // identical documents: every token's df (30) is above the cap
+    val identical = (0L until 30L).map(i => (i, Seq("x", "y", "z", "x"))).toDF("id", "toks")
+    val xx: Column => Column = c => xxhash64(c)
+    val md5Rank: Column => Column = c => substring(md5(c), 1, 8)
+    val legs = Seq(("uncapped", None, xx), ("cap 3 xxhash64", Some(3), xx),
+      ("cap 3 md5", Some(3), md5Rank))
+    for ((corpus, df) <- Seq(("near-dup", mixed), ("identical", identical));
+         t <- Seq(1L, 500000L, 1000000L);
+         (leg, cap, h) <- legs) {
+      val got = PrefixFilterJoin.pairs(df, "id", "toks", t, cap, h)
+      val want = prefixPairsRef(df, t, cap, h)
+      sameMultiset(got, want, s"$corpus, t = $t ppm, $leg")
+      if (corpus == "near-dup" && cap.isEmpty)
+        assert(want.count() > 0, s"$corpus, t = $t ppm: empty reference")
+      if (corpus == "near-dup" && t == 500000L)
+        assert(got.filter(col("id_a") === 100L || col("id_b") === 100L).count() === 0)
     }
   }
 

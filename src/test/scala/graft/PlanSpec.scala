@@ -153,6 +153,35 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Join"), plan)
   }
 
+  test("PrefixFilterJoin ordered tokens: one token-partitioned Window, no Join; postings hold only df >= 2 tokens") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+    val df = Seq(
+      (1L, Seq("a", "b", "c", "d")),
+      (2L, Seq("a", "b", "c", "e")),
+      (3L, Seq("q", "x", "y", "z"))
+    ).toDF("id", "toks")
+    val ordered = PrefixFilterJoin.orderedTokens(df, "id", "toks", 500000L)
+    val plan = ordered.queryExecution.optimizedPlan
+    // unlike ParagraphDedup's survivor choice, where a min-aggregation
+    // collapses every copy of a hot key map-side, every (id, token) row
+    // must come out annotated with its df: a partial combine saves no
+    // rows, so one Window keyed by the token replaces the groupBy, the
+    // join back and the second explode (its per-key buffer spills)
+    val windows = plan.collect { case w: Window => w }
+    assert(windows.size == 1, plan)
+    assert(windows.head.partitionSpec.flatMap(_.references.map(_.name)) == Seq("tok"), plan)
+    assert(plan.collect { case j: Join => j }.isEmpty, plan)
+    // t = 0.5 over 4 tokens: p = 3. Rarest first, doc 1's prefix is
+    // d, a, b and doc 2's e, a, b; doc 3's q, x, y are all df = 1
+    val got = ordered.select($"__pf_id", $"toks", $"ptoks")
+      .as[(Long, Seq[String], Seq[String])].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got == Map(
+      1L -> (Seq("d", "a", "b", "c"), Seq("a", "b")),
+      2L -> (Seq("e", "a", "b", "c"), Seq("a", "b")),
+      3L -> (Seq("q", "x", "y", "z"), Seq.empty[String])), got)
+    assert(ordered.select(explode($"ptoks")).count() == 4)
+  }
+
   test("jinja recipe chain is narrow: no Exchange anywhere in the plan") {
     val letters = "abcdefghijklmnopqrstuvwxyz".map(_.toString)
     val vocab =
