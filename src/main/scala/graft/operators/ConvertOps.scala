@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.Mapper
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,11 +47,13 @@ object MlHandoff {
   * (converters.py:22-102) + the collator's rectangular batches
   * (collators.py:99-105): shard the collated table deterministically by
   * id hash, one parquet file per shard directory, rows ordered by id
-  * within each shard. A DataLoader `map`s the shard files directly
-  * (parquet is Arrow-compatible); because both the shard assignment and
-  * the intra-shard order are pure functions of the id, a re-run — on any
-  * cluster size — reproduces the exact same layout, which is what makes
-  * checkpoint-resume across pipeline re-executions sound. */
+  * within each shard, written by one task per shard, plus a row-count
+  * manifest counted during the write. A DataLoader `map`s the shard
+  * files directly (parquet is Arrow-compatible); because both the shard
+  * assignment and the intra-shard order are pure functions of the id, a
+  * re-run — on any cluster size — reproduces the exact same layout,
+  * which is what makes checkpoint-resume across pipeline re-executions
+  * sound. */
 object TrainingExport {
 
   /** Deterministic shard of an id: codegen'd xxhash64 by default; the
@@ -70,43 +74,69 @@ object TrainingExport {
       pmod(xxhash64(id.cast(StringType)), lit(numShards.toLong))
         .cast(IntegerType)
 
-  /** Write `df` as `path/shard=K/part-*.parquet`, K in [0, numShards).
-    * Exactly one file per shard dir (each shard's rows are hash-routed
-    * to one task), sorted by `idField`. A `_manifest.json` beside the
-    * shards lists per-shard row counts (an O(numShards) aggregate — the
-    * DataLoader reads it to size its workers without touching parquet
-    * footers). */
+  /** Write `df` as `path/shard=K/part-*.parquet`, K in [0, numShards),
+    * replacing anything at `path`. The rows go through one exchange
+    * partitioned by the shard id itself (`repartitionById`), so write
+    * task K holds exactly shard K: one file per shard dir, sorted by
+    * `idField`, and every shard is written in parallel. (A hash
+    * repartition on the shard number would put several shards in one
+    * task — for 4 shards, three of them — and leave other tasks empty.)
+    *
+    * A `_manifest.json` beside the shards lists per-shard row counts so
+    * a DataLoader can size its workers without touching parquet footers.
+    * The counts are taken by the write itself: an `Observation` on the
+    * rows entering the exchange, one O(1) array-slot increment per row,
+    * exact under task retries — no read-back of the export, no extra
+    * job. An empty `df` writes an all-zero manifest. */
   def writeShards(
       df: DataFrame,
       path: String,
       idField: String,
       numShards: Int,
-      portable: Boolean = false,
-      mode: String = "overwrite",
-      writeManifest: Boolean = true
+      portable: Boolean = false
   ): Unit = {
     require(numShards > 0, "numShards must be positive")
+    val observation = new org.apache.spark.sql.Observation()
+    val shardRows = udaf(new ShardCounts(numShards), Encoders.scalaInt)
     df.withColumn("shard", shardCol(col(idField), numShards, portable))
-      .repartition(numShards, col("shard"))
+      .observe(observation, shardRows(coalesce(col("shard"), lit(-1))).as("rows"))
+      .repartitionById(numShards, col("shard"))
       .sortWithinPartitions(col("shard"), col(idField))
-      .write.mode(mode).partitionBy("shard").parquet(path)
-    if (writeManifest) {
-      val counts = df.sparkSession.read.parquet(path)
-        .groupBy(col("shard")).agg(count(lit(1)).as("rows"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getLong(1))
-        .toMap
-      val json = (0 until numShards)
-        .map(k => s"""  "shard=$k": ${counts.getOrElse(k, 0L)}""")
-        .mkString("{\n", ",\n", "\n}\n")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path),
-        df.sparkSession.sparkContext.hadoopConfiguration)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(path, "_manifest.json"), true)
-      try out.write(json.getBytes("UTF-8"))
-      finally out.close()
+      .write.mode("overwrite").partitionBy("shard").parquet(path)
+    // an empty input may report no metric row at all: a missing count is 0
+    val counts = observation.get.get("rows") match {
+      case Some(c: scala.collection.Seq[_]) => c.map(_.asInstanceOf[Long])
+      case _                                => Nil
     }
+    val json = (0 until numShards)
+      .map(k => s"""  "shard=$k": ${counts.lift(k).getOrElse(0L)}""")
+      .mkString("{\n", ",\n", "\n}\n")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path),
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(path, "_manifest.json"), true)
+    try out.write(json.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Rows per shard, one array slot each; out-of-range ids (a null
+    * shard arrives as -1) are not counted. */
+  private final class ShardCounts(numShards: Int)
+      extends Aggregator[Int, Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](numShards)
+    def reduce(b: Array[Long], shard: Int): Array[Long] = {
+      if (shard >= 0 && shard < numShards) b(shard) += 1
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < numShards) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** Read a shard export back; the `shard` partition column comes back

@@ -265,7 +265,7 @@ object HfTokenizerJson {
     flatPreTokenizers(root).flatMap { n =>
       val t = Option(n.get("type")).map(_.asText()).getOrElse("missing")
       (modelType, t) match {
-        // WordPiece's basicTokenize IS Bert/Whitespace pre-tokenization
+        // WordPiece's word split IS Bert/Whitespace pre-tokenization
         case ("WordPiece", "BertPreTokenizer" | "Whitespace" |
             "WhitespaceSplit") => Seq.empty
         // BPE's GPT-2 regex IS ByteLevel(use_regex=true)

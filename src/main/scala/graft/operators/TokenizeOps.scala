@@ -71,7 +71,22 @@ trait GraftTokenizer extends Serializable {
 }
 
 /** BERT-style WordPiece over an explicit vocab (token → id).
-  * `lowercase` mirrors bert-base-uncased's basic tokenizer. */
+  * `lowercase` mirrors bert-base-uncased's basic tokenizer.
+  *
+  * One scanner serves both [[encode]] and [[encodePieces]]: it splits on
+  * whitespace, splits punctuation into one-char words, normalizes each
+  * word, runs the greedy longest-match-first split with "##"
+  * continuations, and appends ids (and, for pieces, char spans) to
+  * growable primitive arrays — no per-word substring, no tuple per piece.
+  *
+  * An all-ASCII word takes a fast path: `A`–`Z` are lowercased
+  * arithmetically and the offset map is the identity. This is exact, not
+  * an approximation: NFD maps every ASCII char to itself and no ASCII
+  * char is a non-spacing mark, so the general path would yield the same
+  * chars and the same map. ASCII punctuation is likewise exactly BERT's
+  * four ASCII ranges, with no `Character.getType` call. A word with any
+  * non-ASCII char goes through the per-char lowercase + NFD + mark-strip
+  * path, which keeps the map back to the original chars exact. */
 final case class WordPieceTokenizer(
     vocab: Map[String, Long],
     lowercase: Boolean = true,
@@ -81,6 +96,7 @@ final case class WordPieceTokenizer(
     unkToken: String = "[UNK]",
     maxInputCharsPerWord: Int = 100
 ) extends GraftTokenizer {
+  import WordPieceTokenizer.isPunct
 
   private val inv: Map[Long, String] = vocab.map(_.swap)
   override val padId: Long = vocab.getOrElse(padToken, 0L)
@@ -93,67 +109,13 @@ final case class WordPieceTokenizer(
 
   private val specialTokens = Set(clsToken, sepToken, padToken, unkToken)
 
-  /** Basic tokenization: split on whitespace, then split punctuation into
-    * standalone tokens; track char offsets. */
-  private def basicTokenize(text: String): Array[(String, Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (Character.isWhitespace(c)) i += 1
-      else if (isPunct(c)) { out += ((text.substring(i, i + 1), i, i + 1)); i += 1 }
-      else {
-        var j = i
-        while (j < n && !Character.isWhitespace(text.charAt(j)) &&
-          !isPunct(text.charAt(j))) j += 1
-        out += ((text.substring(i, j), i, j))
-        i = j
-      }
-    }
-    out.toArray
-  }
-
-  private def isPunct(c: Char): Boolean = {
-    // BERT's definition: ASCII non-alphanumeric printables + Unicode P*
-    val cp = c.toInt
-    val asciiPunct = (cp >= 33 && cp <= 47) || (cp >= 58 && cp <= 64) ||
-      (cp >= 91 && cp <= 96) || (cp >= 123 && cp <= 126)
-    val unicodePunct = Character.getType(c) match {
-      case Character.CONNECTOR_PUNCTUATION | Character.DASH_PUNCTUATION |
-          Character.START_PUNCTUATION | Character.END_PUNCTUATION |
-          Character.INITIAL_QUOTE_PUNCTUATION |
-          Character.FINAL_QUOTE_PUNCTUATION | Character.OTHER_PUNCTUATION =>
-        true
-      case _ => false
-    }
-    asciiPunct || unicodePunct
-  }
-
-  /** Per-char lowercase + NFD accent-strip (as bert-uncased does) with an
-    * index map back to the original word: normalized char i originates
-    * from original char map(i). Per-char lowercasing keeps the map exact
-    * (whole-string toLowerCase may change length for a few code points). */
-  private def normalizeWithMap(w: String): (String, Array[Int]) = {
-    val sb = new java.lang.StringBuilder(w.length)
-    val map = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < w.length) {
-      val c = if (lowercase) Character.toLowerCase(w.charAt(i)) else w.charAt(i)
-      val nfd = java.text.Normalizer
-        .normalize(String.valueOf(c), java.text.Normalizer.Form.NFD)
-      var j = 0
-      while (j < nfd.length) {
-        val ch = nfd.charAt(j)
-        if (Character.getType(ch) != Character.NON_SPACING_MARK) {
-          sb.append(ch); map += i
-        }
-        j += 1
-      }
-      i += 1
-    }
-    (sb.toString, map.toArray)
-  }
+  /** The special tokens the splitter can emit as one word (a run of word
+    * chars, or one punctuation char), which map straight to their id;
+    * bracketed ones like "[CLS]" are split and never match. */
+  private val specialWords: Array[String] = specialTokens.iterator.filter { t =>
+    t.nonEmpty && (t.forall(c => !Character.isWhitespace(c) && !isPunct(c)) ||
+      (t.length == 1 && isPunct(t.charAt(0))))
+  }.toArray
 
   /** Two tries (word-initial and "##"-continuation pieces) make the
     * greedy longest-match scan O(L) probes per position with ZERO
@@ -164,48 +126,150 @@ final case class WordPieceTokenizer(
   @transient private lazy val contTrie: WordPieceTokenizer.TrieNode =
     WordPieceTokenizer.buildTrie(vocab, continuation = true)
 
-  /** Greedy longest-match-first WordPiece split of one (normalized) word,
-    * with the char bounds of each piece within the word. */
-  private def wordpieceBounds(word: String): Array[(Long, Int, Int)] = {
-    val n = word.length
-    if (n == 0) return Array.empty
-    if (n > maxInputCharsPerWord) return Array((unkId, 0, n))
-    val pieces = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-    var start = 0
-    while (start < n) {
-      var node = if (start == 0) rootTrie else contTrie
-      var i = start
-      var found = -1L
-      var foundEnd = -1
-      while (i < n && node != null) {
-        node = node.child(word.charAt(i))
-        i += 1
-        if (node != null && node.id >= 0) { found = node.id; foundEnd = i }
-      }
-      if (found < 0) return Array((unkId, 0, n)) // whole word becomes UNK
-      pieces += ((found, start, foundEnd))
-      start = foundEnd
-    }
-    pieces.toArray
-  }
+  /** One call's scan of `text`: the normalized-word buffer with its map
+    * back to word chars, and the growable output (spans only if asked). */
+  private final class Scanner(text: String, spans: Boolean) {
+    private val root = rootTrie
+    private val cont = contTrie
+    private var norm = new Array[Char](32)
+    private var map = new Array[Int](32)
+    var ids = new Array[Long](math.max(16, text.length / 4))
+    var starts: Array[Int] = if (spans) new Array[Int](ids.length) else null
+    var ends: Array[Int] = if (spans) new Array[Int](ids.length) else null
+    var size = 0
 
-  override def encodePieces(text: String): Array[(Long, Int, Int)] =
-    basicTokenize(text).flatMap { case (w, s, e) =>
-      if (specialTokens.contains(w)) Array((vocab(w), s, e))
-      else {
-        val (norm, map) = normalizeWithMap(w)
-        // map piece bounds from normalized space back to original chars
-        wordpieceBounds(norm).map { case (id, a, b) =>
-          val so = if (a < map.length) s + map(a) else e
-          val eo = if (b > 0 && b - 1 < map.length) s + map(b - 1) + 1 else e
-          (id, so, eo)
+    def emit(id: Long, start: Int, end: Int): Unit = {
+      if (size == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, size * 2)
+        if (spans) {
+          starts = java.util.Arrays.copyOf(starts, size * 2)
+          ends = java.util.Arrays.copyOf(ends, size * 2)
+        }
+      }
+      ids(size) = id
+      if (spans) { starts(size) = start; ends(size) = end }
+      size += 1
+    }
+
+    def run(): Unit = {
+      val n = text.length
+      var i = 0
+      while (i < n) {
+        val c = text.charAt(i)
+        if (Character.isWhitespace(c)) i += 1
+        else {
+          var ascii = c < 128
+          var j = i + 1
+          if (!isPunct(c)) {
+            while (j < n && !Character.isWhitespace(text.charAt(j)) &&
+              !isPunct(text.charAt(j))) {
+              if (text.charAt(j) >= 128) ascii = false
+              j += 1
+            }
+          }
+          word(i, j, ascii)
+          i = j
         }
       }
     }
 
+    private def isSpecial(s: Int, e: Int): Boolean =
+      specialWords.exists(t => t.length == e - s && text.regionMatches(s, t, 0, e - s))
+
+    /** Greedy longest-match-first WordPiece split of text[s, e); an
+      * unmatched remainder turns the whole word into one UNK. */
+    private def word(s: Int, e: Int, ascii: Boolean): Unit = {
+      if (specialWords.nonEmpty && isSpecial(s, e)) {
+        emit(vocab(text.substring(s, e)), s, e)
+        return
+      }
+      val len = if (ascii) e - s else normalize(s, e)
+      if (len == 0) return
+      if (len > maxInputCharsPerWord) { piece(unkId, 0, len, s, ascii); return }
+      if (ascii) lowerAscii(s, e)
+      val mark = size
+      var start = 0
+      while (start < len) {
+        var node = if (start == 0) root else cont
+        var k = start
+        var found = -1L
+        var foundEnd = -1
+        while (k < len && node != null) {
+          node = node.child(norm(k))
+          k += 1
+          if (node != null && node.id >= 0) { found = node.id; foundEnd = k }
+        }
+        if (found < 0) { size = mark; piece(unkId, 0, len, s, ascii); return }
+        piece(found, start, foundEnd, s, ascii)
+        start = foundEnd
+      }
+    }
+
+    /** Emit normalized span [a, b) of the word starting at text char `s`,
+      * mapped back to original chars. */
+    private def piece(id: Long, a: Int, b: Int, s: Int, ascii: Boolean): Unit =
+      if (ascii) emit(id, s + a, s + b)
+      else emit(id, s + map(a), s + map(b - 1) + 1)
+
+    /** Grow `norm` and `map` together to hold `n` chars. */
+    private def reserve(n: Int): Unit =
+      if (norm.length < n) {
+        val cap = math.max(n, norm.length * 2)
+        norm = java.util.Arrays.copyOf(norm, cap)
+        map = java.util.Arrays.copyOf(map, cap)
+      }
+
+    private def lowerAscii(s: Int, e: Int): Unit = {
+      reserve(e - s)
+      var k = s
+      while (k < e) {
+        val c = text.charAt(k)
+        norm(k - s) =
+          if (lowercase && c >= 'A' && c <= 'Z') (c + ('a' - 'A')).toChar else c
+        k += 1
+      }
+    }
+
+    /** Per-char lowercase + NFD accent-strip (as bert-uncased does) into
+      * `norm`, with `map(k)` = the word char normalized char k comes from.
+      * Per-char lowercasing keeps the map exact (whole-string toLowerCase
+      * may change length for a few code points). Returns the length. */
+    private def normalize(s: Int, e: Int): Int = {
+      var len = 0
+      var i = s
+      while (i < e) {
+        val c = if (lowercase) Character.toLowerCase(text.charAt(i)) else text.charAt(i)
+        val nfd = java.text.Normalizer
+          .normalize(String.valueOf(c), java.text.Normalizer.Form.NFD)
+        var j = 0
+        while (j < nfd.length) {
+          val ch = nfd.charAt(j)
+          if (Character.getType(ch) != Character.NON_SPACING_MARK) {
+            reserve(len + 1)
+            norm(len) = ch
+            map(len) = i - s
+            len += 1
+          }
+          j += 1
+        }
+        i += 1
+      }
+      len
+    }
+  }
+
+  override def encodePieces(text: String): Array[(Long, Int, Int)] = {
+    val sc = new Scanner(text, spans = true)
+    sc.run()
+    Array.tabulate(sc.size)(k => (sc.ids(k), sc.starts(k), sc.ends(k)))
+  }
+
   override def encode(text: String, addSpecialTokens: Boolean): Array[Long] = {
-    val body = encodePieces(text).map(_._1)
-    if (addSpecialTokens) clsId +: body :+ sepId else body
+    val sc = new Scanner(text, spans = false)
+    if (addSpecialTokens) sc.emit(clsId, 0, 0)
+    sc.run()
+    if (addSpecialTokens) sc.emit(sepId, 0, 0)
+    java.util.Arrays.copyOf(sc.ids, sc.size)
   }
 
   override def decode(ids: Seq[Long], skipSpecialTokens: Boolean): String = {
@@ -235,6 +299,23 @@ final case class WordPieceTokenizer(
 }
 
 object WordPieceTokenizer {
+
+  /** BERT's punctuation: the four ASCII ranges of non-alphanumeric
+    * printables (a superset of every ASCII Unicode P* char), plus Unicode
+    * P* beyond ASCII. */
+  private[operators] def isPunct(c: Char): Boolean =
+    if (c < 128)
+      (c >= 33 && c <= 47) || (c >= 58 && c <= 64) ||
+        (c >= 91 && c <= 96) || (c >= 123 && c <= 126)
+    else
+      Character.getType(c) match {
+        case Character.CONNECTOR_PUNCTUATION | Character.DASH_PUNCTUATION |
+            Character.START_PUNCTUATION | Character.END_PUNCTUATION |
+            Character.INITIAL_QUOTE_PUNCTUATION |
+            Character.FINAL_QUOTE_PUNCTUATION | Character.OTHER_PUNCTUATION =>
+          true
+        case _ => false
+      }
 
   /** Sparse char trie; `id` >= 0 marks a vocab piece ending here. */
   final class TrieNode {

@@ -258,11 +258,36 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("bucket"), plan)
   }
 
-  test("TrainingExport round-trip plan: one hash shuffle in, plain pruned scan out") {
+  test("TrainingExport round-trip plan: one shard-id exchange in, plain pruned scan out") {
     import graft.operators.TrainingExport
     val d = java.nio.file.Files.createTempDirectory("graft_export_plan").toString
     val df = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
-    TrainingExport.writeShards(df, d, "id", numShards = 4)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def writePlan: Option[String] =
+      plans.toArray.map(_.toString).find(_.contains("InsertIntoHadoopFsRelation"))
+    spark.listenerManager.register(listener)
+    try TrainingExport.writeShards(df, d, "id", numShards = 4)
+    finally {
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writePlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      spark.listenerManager.unregister(listener)
+    }
+    val write = writePlan.getOrElse(fail(s"no write plan captured: $plans"))
+    // task k writes exactly shard k: the shard id IS the partition id
+    // (a hash exchange on shard would fold 3 of 4 shards into one task)
+    assert(("""Exchange shufflepartitionidpassthrough\(""" +
+      """direct_shuffle_partition_id\(shard#\d+\), 4\)""").r
+      .findFirstIn(write).isDefined, write)
+    assert(!write.contains("hashpartitioning(shard") && !write.contains("coalesced"),
+      write)
     val back = TrainingExport.readShards(spark, d).filter(col("shard") === 2)
     val plan = back.queryExecution.executedPlan.toString
     // shard is a hive partition column: the filter must prune partitions,

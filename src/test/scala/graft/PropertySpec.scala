@@ -213,6 +213,65 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("WordPiece: encode and encodePieces equal the reference on any text") {
+    // vocab: every lowercase letter/digit as word-initial and "##" piece,
+    // a few multi-char and uppercase pieces, some punctuation and
+    // accented/CJK pieces; everything else falls to UNK
+    val single = ('a' to 'z') ++ ('0' to '9')
+    val pieces = single.map(_.toString) ++ single.map("##" + _) ++ Seq(
+      "the", "##the", "ing", "##ing", "un", "##un", "ab", "##ab", "cd",
+      "The", "A", "##B", ".", ",", "-", "_", "!", "#", "[", "]", "|",
+      "\u00e9", "##\u00e9", "\u00f1", "##\u00f1", "\u4e2d", "##\u6587",
+      "\u00bf", "\u2014", "PAD", "[CLS]", "[SEP]", "[PAD]", "[UNK]")
+    val vocab = pieces.distinct.zipWithIndex.map { case (t, i) => t -> i.toLong }.toMap
+    val asciiWord = Gen.chooseNum(1, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(5 -> Gen.alphaLowerChar,
+        2 -> Gen.alphaUpperChar, 1 -> Gen.numChar)).map(_.mkString))
+    val fragment: Gen[String] = Gen.frequency(
+      8 -> asciiWord,
+      3 -> Gen.oneOf(" ", " ", "\t", "\n", "\u00a0"),
+      3 -> Gen.oneOf(".", ",", "_", "-", "?", "'", "[", "]", "#", "~", "|",
+        "\u00bf", "\u2014", "\u201c"),
+      3 -> Gen.oneOf("\u00c9", "\u00f1", "\u00d1and\u00fa", "e\u0301", "\u4e2d\u6587",
+        "\ud83d\ude00", "\u0130", "\u0301"),
+      // over either word-length cap (10 and 100 below) and over the
+      // scanner's initial 32-char word buffer
+      1 -> Gen.oneOf("abcdefghijklmn", "ABCDEFGHIJKL", "\u00e9" * 11, "e\u0301" * 6,
+        "ab" * 20, "\u00e9" * 40, "ab" * 51, "\u00f1" * 101),
+      1 -> Gen.oneOf("[CLS]", "[UNK]", "PAD", "qqqz", "xyzzy"))
+    val textGen: Gen[String] =
+      Gen.chooseNum(0, 24).flatMap(n => Gen.listOfN(n, fragment).map(_.mkString))
+    val configs = for {
+      lower <- Seq(true, false)
+      // a plain-word and a single-punctuation special token, which the
+      // splitter emits as one word
+      (pad, sep) <- Seq(("[PAD]", "[SEP]"), ("PAD", "|"))
+      maxChars <- Seq(10, 100)
+    } yield (WordPieceTokenizer(vocab, lower, padToken = pad, sepToken = sep,
+        maxInputCharsPerWord = maxChars),
+      WordPieceReference(vocab, lower, padToken = pad, sepToken = sep,
+        maxInputCharsPerWord = maxChars))
+    var nonAscii, unk = 0
+    configs.foreach { case (tok, ref) =>
+      def check(t: String): Unit = {
+        for (specials <- Seq(false, true))
+          assert(tok.encode(t, specials) sameElements ref.encode(t, specials),
+            s"encode(specials=$specials) lowercase=${tok.lowercase} on '$t'")
+        val got = tok.encodePieces(t)
+        assert(got sameElements ref.encodePieces(t),
+          s"encodePieces lowercase=${tok.lowercase} on '$t': ${got.toSeq}")
+        if (t.exists(_ >= 128)) nonAscii += 1
+        if (got.exists(_._1 == tok.unkId)) unk += 1
+      }
+      forAll(textGen, n = 100)(check)
+      check("")
+      // a long ASCII word, then a long accented one through the same buffer
+      check("ab" * 20 + " " + "\u00e9" * 40)
+    }
+    // the sample exercised both word paths and the UNK fallback
+    assert(nonAscii > 100 && unk > 100, s"nonAscii=$nonAscii unk=$unk")
+  }
+
   test("unigram Viterbi: optimal vs exhaustive segmentation on random vocab/text") {
     // random piece vocab over {a,b} + random short text; the Viterbi
     // score must equal the max over ALL segmentations enumerated brute

@@ -19,42 +19,66 @@ class SinkSaltSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && !plan.contains("PushedFilters: [IsNotNull(p)"))
   }
 
-  test("TrainingExport: round-trip identity, one file per shard, deterministic layout") {
-    import graft.operators.TrainingExport
-    val dir = java.nio.file.Files.createTempDirectory("graft_export").toString
-    val df = (0L until 200L).map(i => (i, Seq.fill(4)(i % 7))).toDF("id", "ids")
-    TrainingExport.writeShards(df, dir, "id", numShards = 4, portable = true)
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard="))
-    assert(shardDirs.length == 4)
-    // exactly one parquet file per shard dir (a DataLoader maps one file per shard)
-    shardDirs.foreach { d =>
-      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.getName)
-    }
-    // manifest lists every shard with its row count, summing to the total
+  private def manifestCounts(dir: String): Map[Int, Long] = {
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_manifest.json")), "UTF-8")
-    val counts = "\"shard=(\\d+)\": (\\d+)".r
+    "\"shard=(\\d+)\": (\\d+)".r
       .findAllMatchIn(manifest).map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    assert(counts.keySet == Set(0, 1, 2, 3) && counts.values.sum == 200L, manifest)
-    val back = TrainingExport.readShards(spark, dir)
-    assert(back.count() == 200)
-    assert(back.select("id", "ids").except(df).count() == 0)
-    assert(df.except(back.select("id", "ids")).count() == 0)
-    // shard column matches the portable hash replayed in SQL arithmetic
-    val bad = back
-      .withColumn("expect",
-        shiftright((col("id") * 2654435761L).bitwiseAND(lit(4294967295L)) * 4L,
-          32).cast("int"))
-      .filter(col("shard") =!= col("expect"))
-    assert(bad.count() == 0)
-    // re-writing produces the identical deterministic layout (same
-    // per-shard row sets and in-file order)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_export2").toString
-    TrainingExport.writeShards(df, dir2, "id", numShards = 4, portable = true)
-    val a = spark.read.parquet(dir).selectExpr("shard", "id").collect().map(_.toSeq)
-    val b = spark.read.parquet(dir2).selectExpr("shard", "id").collect().map(_.toSeq)
-    assert(a.sortBy(_.toString()) sameElements b.sortBy(_.toString()))
+  }
+
+  test("TrainingExport: round-trip identity, one file per shard, deterministic layout") {
+    import graft.operators.TrainingExport
+    val df = (0L until 200L).map(i => (i, Seq.fill(4)(i % 7))).toDF("id", "ids")
+    for (portable <- Seq(true, false)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_export").toString
+      TrainingExport.writeShards(df, dir, "id", numShards = 4, portable = portable)
+      val shardDirs = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("shard="))
+      assert(shardDirs.length == 4)
+      // exactly one parquet file per shard dir (a DataLoader maps one file per shard)
+      shardDirs.foreach { d =>
+        assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.getName)
+      }
+      val back = TrainingExport.readShards(spark, dir)
+      assert(back.count() == 200)
+      assert(back.select("id", "ids").except(df).count() == 0)
+      assert(df.except(back.select("id", "ids")).count() == 0)
+      // the manifest, counted during the write, lists every shard with
+      // exactly the row count read back from that shard
+      val readBack = back.groupBy("shard").count().as[(Int, Long)].collect().toMap
+      val counts = manifestCounts(dir)
+      assert(counts.keySet == Set(0, 1, 2, 3), s"portable=$portable $counts")
+      assert(counts == (0 until 4).map(k => k -> readBack.getOrElse(k, 0L)).toMap,
+        s"portable=$portable manifest $counts vs read-back $readBack")
+      assert(counts.values.sum == 200L)
+      // shard column matches the hash replayed in SQL
+      val expect =
+        if (portable)
+          shiftright((col("id") * 2654435761L).bitwiseAND(lit(4294967295L)) * 4L,
+            32).cast("int")
+        else pmod(xxhash64(col("id").cast("string")), lit(4L)).cast("int")
+      assert(back.filter(col("shard") =!= expect).count() == 0)
+      // re-writing produces the identical deterministic layout (same
+      // per-shard row sets and in-file order)
+      val dir2 = java.nio.file.Files.createTempDirectory("graft_export2").toString
+      TrainingExport.writeShards(df, dir2, "id", numShards = 4, portable = portable)
+      val a = spark.read.parquet(dir).selectExpr("shard", "id").collect().map(_.toSeq)
+      val b = spark.read.parquet(dir2).selectExpr("shard", "id").collect().map(_.toSeq)
+      assert(a.sortBy(_.toString()) sameElements b.sortBy(_.toString()))
+    }
+  }
+
+  test("TrainingExport: an empty export writes an all-zero manifest") {
+    import graft.operators.TrainingExport
+    // empty at run time (a filter) and at plan time (an empty local relation)
+    val empties = Seq(
+      spark.range(100).filter(col("id") < 0).select(col("id"), lit("x").as("v")),
+      Seq.empty[(Long, String)].toDF("id", "v"))
+    for (empty <- empties; portable <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_export_empty").toString
+      TrainingExport.writeShards(empty, dir, "id", numShards = 3, portable = portable)
+      assert(manifestCounts(dir) == Map(0 -> 0L, 1 -> 0L, 2 -> 0L))
+    }
   }
 
   test("bucketed table join avoids the shuffle on the bucketed key") {
