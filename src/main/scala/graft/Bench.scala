@@ -18,10 +18,12 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+    // query name → exception class of every failed run
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOne(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val (dt, failure) = time(fn(spark, sfDir).count())
+      failure.foreach(failed(name) = _)
       // queries are self-contained; drop any intra-query persists so
       // later queries aren't taxed by earlier cache residency or the
       // garbage they generated
@@ -41,9 +43,10 @@ object Bench {
     // changes.
     val retimeThreshold =
       sys.env.get("SPARK_GRAFT_RETIME_SEC").map(_.toDouble).getOrElse(1.0)
-    val cold = selected.map { case (name, fn) => (name, fn, timeOne(fn)) }
+    val cold = selected.map { case (name, fn) => (name, fn, timeOne(name, fn)) }
     val results = cold.map { case (name, fn, c) =>
-      if (c >= retimeThreshold) name -> math.min(c, timeOne(fn)) else name -> c
+      if (c >= retimeThreshold) name -> math.min(c, timeOne(name, fn))
+      else name -> c
     }
     val retimed = cold.filter(_._3 >= retimeThreshold)
     val coldSum = retimed.map(_._3).sum
@@ -60,7 +63,7 @@ object Bench {
     val sideDir = java.nio.file.Paths.get("/tmp/graft_bench")
     java.nio.file.Files.createDirectories(sideDir)
     val detailJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"retimed":${retimed.size},"coldsum":${fmt(coldSum)},"cpus":$cpus,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"retimed":${retimed.size},"coldsum":${fmt(coldSum)},"cpus":$cpus,"sf":"$sfDir","failed":${failedJson(failed.toSeq)}}"""
     java.nio.file.Files.write(
       sideDir.resolve("queries.json"), detailJson.getBytes("UTF-8"))
     // per-query history IN-REPO: /tmp/graft_bench/queries.json is
@@ -104,4 +107,19 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{"all":${fmt(total)}},"nq":${results.size},"retimed":${retimed.size},"coldsum":${fmt(coldSum)},"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Seconds `run` took, and the class of what it threw, if anything:
+    * a failed query still has a time, but it is not a result. */
+  private[graft] def time(run: => Unit): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val failure =
+      try { run; None }
+      catch { case e: Throwable => Some(e.getClass.getName) }
+    ((System.nanoTime() - t0) / 1e9, failure)
+  }
+
+  /** `{"query":"exception class",...}` for the detail JSON. */
+  private[graft] def failedJson(failed: Seq[(String, String)]): String =
+    failed.map { case (q, e) => "\"" + q + "\":\"" + e + "\"" }
+      .mkString("{", ",", "}")
 }

@@ -98,37 +98,11 @@ final case class BytePairTokenizer(
   @transient private lazy val bpeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
 
-  /** Greedy BPE: repeatedly merge the adjacent pair with the lowest merge
-    * rank until no mergeable pair remains. */
+  /** [[BytePairTokenizer.merge]] of one pre-token's chars, memoized. */
   private def bpe(preTok: String): Array[String] = {
     val cached = bpeCache.get(preTok)
     if (cached != null) return cached
-    var word: Array[String] = preTok.map(_.toString).toArray
-    var done = word.length < 2
-    while (!done) {
-      var bestRank = Int.MaxValue
-      var bestIdx = -1
-      var i = 0
-      while (i < word.length - 1) {
-        val r = mergeRanks.getOrElse((word(i), word(i + 1)), Int.MaxValue)
-        if (r < bestRank) { bestRank = r; bestIdx = i }
-        i += 1
-      }
-      if (bestIdx < 0) done = true
-      else {
-        // merge every occurrence of the winning pair, left to right
-        val (a, b) = (word(bestIdx), word(bestIdx + 1))
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var j = 0
-        while (j < word.length) {
-          if (j < word.length - 1 && word(j) == a && word(j + 1) == b) {
-            out += (a + b); j += 2
-          } else { out += word(j); j += 1 }
-        }
-        word = out.toArray
-        if (word.length < 2) done = true
-      }
-    }
+    val word = merge(preTok.toArray.map(_.toString), mergeRanks)
     if (bpeCache.size < 65536) bpeCache.put(preTok, word)
     word
   }
@@ -204,33 +178,15 @@ final case class BytePairTokenizer(
     out.toArray
   }
 
-  override def encode(text: String, addSpecialTokens: Boolean): Array[Long] = {
-    val body = encodePieces(text).map(_._1)
-    // GPT-2 files add nothing; Llama-3-style files prepend their bos
-    if (addSpecialTokens && bosIds.nonEmpty) (bosIds ++ body).toArray
-    else body
-  }
-
   override def decode(ids: Seq[Long], skipSpecialTokens: Boolean): String = {
-    val sb = new StringBuilder
-    val bytes = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def flushBytes(): Unit =
-      if (bytes.nonEmpty) {
-        sb.append(new String(bytes.toArray, StandardCharsets.UTF_8))
-        bytes.clear()
-      }
+    val out = new ByteFallback.Utf8Text
     ids.foreach { id =>
       specialInv.get(id) match {
-        case Some(s) =>
-          if (!skipSpecialTokens) { flushBytes(); sb.append(s) }
-        case None =>
-          inv.get(id).foreach { tok =>
-            tok.foreach { c => bytes += charToByte(c) }
-          }
+        case Some(s) => if (!skipSpecialTokens) out.append(s)
+        case None    => inv.get(id).foreach(_.foreach(c => out.byte(charToByte(c))))
       }
     }
-    flushBytes()
-    val raw = sb.result()
+    val raw = out.result()
     if (!cleanUpTokenizationSpaces) raw
     else
       raw
@@ -268,6 +224,55 @@ object BytePairTokenizer {
       java.util.regex.Pattern.UNICODE_CHARACTER_CLASS
     )
 
+  /** Merge every left-to-right, non-overlapping occurrence of the
+    * adjacent pair (a, b) in `symbols`. */
+  private[operators] def applyMerge(symbols: Array[String], a: String,
+      b: String): Array[String] = {
+    val out = new Array[String](symbols.length)
+    var n, j = 0
+    while (j < symbols.length) {
+      if (j + 1 < symbols.length && symbols(j) == a && symbols(j + 1) == b) {
+        out(n) = a + b; j += 2
+      } else { out(n) = symbols(j); j += 1 }
+      n += 1
+    }
+    java.util.Arrays.copyOf(out, n)
+  }
+
+  /** The GPT-2 `bpe()` loop: apply the merge of the lowest-ranked adjacent
+    * pair until no adjacent pair has a rank. Ranks are unique, so the pair
+    * with that rank is the one merged everywhere. */
+  private[operators] def merge(symbols: Array[String],
+      ranks: Map[(String, String), Int]): Array[String] = {
+    var word = symbols
+    while (word.length > 1) {
+      var best = -1
+      var bestRank = Int.MaxValue
+      var i = 0
+      while (i < word.length - 1) {
+        val r = ranks.getOrElse((word(i), word(i + 1)), Int.MaxValue)
+        if (r < bestRank) { bestRank = r; best = i }
+        i += 1
+      }
+      if (best < 0) return word
+      word = applyMerge(word, word(best), word(best + 1))
+    }
+    word
+  }
+
+  /** Merge ranks by list position. Fails fast when a merge's product is
+    * not in `vocab`: that piece would otherwise encode silently as the
+    * fallback id. Byte units may be absent (a deliberately restricted
+    * vocab omits unused ones), so only merge products are required. */
+  private[operators] def ranks(merges: Seq[(String, String)],
+      vocab: Map[String, Long], source: String): Map[(String, String), Int] = {
+    val missing = merges.iterator.map { case (a, b) => a + b }
+      .filterNot(vocab.contains).take(5).toSeq
+    require(missing.isEmpty, s"inconsistent $source: merge products " +
+      s"missing from vocab, e.g. ${missing.mkString(", ")}")
+    merges.zipWithIndex.toMap
+  }
+
   /** Load from the public `vocab.json` + `merges.txt` file pair (the
     * GPT-2/RoBERTa release format; merges ranked by line order). */
   def fromFiles(
@@ -275,38 +280,23 @@ object BytePairTokenizer {
       mergesPath: String,
       specials: Seq[String] = Seq("<|endoftext|>")
   ): BytePairTokenizer = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(new java.io.File(vocabJsonPath))
-    val vocab = scala.collection.mutable.Map.empty[String, Long]
-    node.properties().forEach { e => vocab(e.getKey) = e.getValue.asLong() }
+    val vocab = HfTokenizerJson.vocabOf(
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(vocabJsonPath)))
     val src = scala.io.Source.fromFile(mergesPath, "UTF-8")
     val merges =
       try
         src.getLines()
           .filter(line => !line.startsWith("#") && line.contains(' '))
-          .zipWithIndex
-          .map { case (line, i) =>
+          .map { line =>
             val Array(a, b) = line.split(" ", 2)
-            (a, b) -> i
+            (a, b)
           }
-          .toMap
+          .toList
       finally src.close()
-    // fail fast on an inconsistent pair: a merge whose product is absent
-    // from vocab would otherwise silently encode as eotId — corrupt ids,
-    // no error (a deliberately-restricted vocab may omit unused byte
-    // units, so only merge PRODUCTS are required)
-    val missingMerges = merges.keysIterator
-      .map { case (a, b) => a + b }
-      .filterNot(vocab.contains)
-      .take(5)
-      .toSeq
-    require(
-      missingMerges.isEmpty,
-      s"inconsistent $vocabJsonPath/$mergesPath: merge products missing " +
-        s"from vocab, e.g. ${missingMerges.mkString(", ")}"
-    )
     val spec = specials.flatMap(s => vocab.get(s).map(s -> _)).toMap
-    BytePairTokenizer(vocab.toMap, merges, spec)
+    BytePairTokenizer(vocab, ranks(merges, vocab, s"$vocabJsonPath/$mergesPath"),
+      spec)
   }
 
   /** Build a self-consistent tokenizer from a merge list alone: vocab =

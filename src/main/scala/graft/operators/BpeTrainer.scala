@@ -82,14 +82,7 @@ object BpeTrainer {
         val b = top(0).getString(1)
         merges += ((a, b))
         val applyMerge = udf { (syms: Seq[String]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
-          var j = 0
-          while (j < syms.length) {
-            if (j < syms.length - 1 && syms(j) == a && syms(j + 1) == b) {
-              out += (a + b); j += 2
-            } else { out += syms(j); j += 1 }
-          }
-          out.toSeq
+          BytePairTokenizer.applyMerge(syms.toArray, a, b).toSeq
         }
         // narrow map; localCheckpoint truncates lineage every round
         words = words

@@ -158,29 +158,45 @@ object HfTokenizerJson {
       }
     }
 
+  /** A `vocab` object (token → id), as in `tokenizer.json` models and the
+    * GPT-2 `vocab.json` file. */
+  private[operators] def vocabOf(node: JsonNode): Map[String, Long] = {
+    val vocab = Map.newBuilder[String, Long]
+    node.properties().forEach(e => vocab += e.getKey -> e.getValue.asLong())
+    vocab.result()
+  }
+
+  private def typeOf(n: JsonNode): String =
+    Option(n.get("type")).map(_.asText()).getOrElse("missing")
+
+  /** The `field` config flattened to a Sequence-free list; a `Sequence`
+    * holds its children under `children`. */
+  private def flat(root: JsonNode, field: String,
+      children: String): Seq[JsonNode] = {
+    def go(n: JsonNode): Seq[JsonNode] =
+      if (typeOf(n) == "Sequence")
+        Option(n.get(children)).toSeq.flatMap(ns =>
+          (0 until ns.size).flatMap(i => go(ns.get(i))))
+      else Seq(n)
+    Option(root.get(field)).filterNot(_.isNull).toSeq.flatMap(go)
+  }
+  private def normalizers(root: JsonNode) =
+    flat(root, "normalizer", "normalizers")
+  private def preTokenizers(root: JsonNode) =
+    flat(root, "pre_tokenizer", "pretokenizers")
+  private def decoders(root: JsonNode) = flat(root, "decoder", "decoders")
+
   /** Lowercase flag from the normalizer config (BertNormalizer /
     * Lowercase, possibly nested in a Sequence). */
   private def lowercaseOf(root: JsonNode): Boolean =
-    flatNormalizers(root).exists { n =>
-      Option(n.get("type")).map(_.asText()) match {
-        case Some("BertNormalizer") =>
+    normalizers(root).exists { n =>
+      typeOf(n) match {
+        case "BertNormalizer" =>
           Option(n.get("lowercase")).forall(_.asBoolean())
-        case Some("Lowercase") => true
+        case "Lowercase" => true
         case _ => false
       }
     }
-
-  /** The normalizer config flattened to a Sequence-free list. */
-  private def flatNormalizers(root: JsonNode): Seq[JsonNode] = {
-    def flat(n: JsonNode): Seq[JsonNode] =
-      Option(n.get("type")).map(_.asText()) match {
-        case Some("Sequence") =>
-          Option(n.get("normalizers")).toSeq.flatMap(ns =>
-            (0 until ns.size).flatMap(i => flat(ns.get(i))))
-        case _ => Seq(n)
-      }
-    Option(root.get("normalizer")).filterNot(_.isNull).toSeq.flatMap(flat)
-  }
 
   /** Replace node's pattern: `{"String": s}` or `{"Regex": r}`. */
   private def replaceOf(n: JsonNode, path: String): NormStep.Replace = {
@@ -201,7 +217,7 @@ object HfTokenizerJson {
     * BertNormalizer emit nothing there. Unknown types reject. */
   private def stepsOf(n: JsonNode, absorbLowercase: Boolean,
       path: String): Seq[NormStep] =
-    Option(n.get("type")).map(_.asText()).getOrElse("missing") match {
+    typeOf(n) match {
       case "NFD"  => Seq(NormStep.UnicodeForm("NFD"))
       case "NFC"  => Seq(NormStep.UnicodeForm("NFC"))
       case "NFKD" => Seq(NormStep.UnicodeForm("NFKD"))
@@ -246,25 +262,17 @@ object HfTokenizerJson {
             "BertNormalizer, Replace, Prepend, Strip, Sequence)")
     }
 
-  /** The pre_tokenizer config flattened to a Sequence-free list. */
-  private def flatPreTokenizers(root: JsonNode): Seq[JsonNode] = {
-    def flat(n: JsonNode): Seq[JsonNode] =
-      Option(n.get("type")).map(_.asText()) match {
-        case Some("Sequence") =>
-          Option(n.get("pretokenizers")).toSeq.flatMap(ns =>
-            (0 until ns.size).flatMap(i => flat(ns.get(i))))
-        case _ => Seq(n)
-      }
-    Option(root.get("pre_tokenizer")).filterNot(_.isNull).toSeq.flatMap(flat)
-  }
+  /** The normalizer chain's steps (see [[stepsOf]]). */
+  private def normSteps(root: JsonNode, absorbLowercase: Boolean,
+      path: String): Seq[NormStep] =
+    normalizers(root).flatMap(stepsOf(_, absorbLowercase, path))
 
   /** Validate the pre_tokenizer against what the model engine does
     * internally; return any extra chain steps it implies. */
   private def preTokenizerSteps(root: JsonNode, modelType: String,
       path: String): Seq[NormStep] =
-    flatPreTokenizers(root).flatMap { n =>
-      val t = Option(n.get("type")).map(_.asText()).getOrElse("missing")
-      (modelType, t) match {
+    preTokenizers(root).flatMap { n =>
+      (modelType, typeOf(n)) match {
         // WordPiece's word split IS Bert/Whitespace pre-tokenization
         case ("WordPiece", "BertPreTokenizer" | "Whitespace" |
             "WhitespaceSplit") => Seq.empty
@@ -281,13 +289,10 @@ object HfTokenizerJson {
             !Option(n.get("invert")).exists(_.asBoolean()),
             s"$path: only Split(behavior=Isolated, invert=false) supported")
           Seq.empty
-        // Unigram's space-marking IS Metaspace; prepend_scheme maps to
-        // add_dummy_prefix (consumed by loadUnigram, not a chain step)
+        // Unigram's space-marking IS Metaspace; its prepend intent is
+        // consumed by loadUnigram, not a chain step
         case ("Unigram", "Metaspace") =>
-          val repl = Option(n.get("replacement")).map(_.asText())
-            .getOrElse("▁")
-          require(repl == "▁",
-            s"$path: Metaspace replacement `$repl` unsupported (need ▁)")
+          metaspacePrepends(n, path)
           Seq.empty
         case (_, other) =>
           throw new IllegalArgumentException(
@@ -295,50 +300,50 @@ object HfTokenizerJson {
       }
     }
 
-  /** Metaspace/Llama dummy-prefix intent: prepend_scheme "never" or
-    * add_prefix_space=false turn the Unigram dummy prefix OFF. */
-  private def dummyPrefixOf(root: JsonNode): Boolean =
-    flatPreTokenizers(root)
-      .find(n => Option(n.get("type")).exists(_.asText() == "Metaspace"))
-      .forall { n =>
-        Option(n.get("prepend_scheme")).map(_.asText()) match {
-          case Some("never") => false
-          case Some(_)       => true // always / first
-          case None =>
-            Option(n.get("add_prefix_space")).forall(_.asBoolean())
-        }
+  /** A Metaspace pre_tokenizer's dummy-prefix intent: prepend_scheme
+    * "never" or add_prefix_space=false turn it off. Only the ▁
+    * replacement is supported. */
+  private def metaspacePrepends(n: JsonNode, path: String): Boolean = {
+    val repl = Option(n.get("replacement")).map(_.asText()).getOrElse("▁")
+    require(repl == "▁",
+      s"$path: Metaspace replacement `$repl` unsupported (need ▁)")
+    Option(n.get("prepend_scheme")).map(_.asText()) match {
+      case Some(scheme) => scheme != "never" // always / first
+      case None => Option(n.get("add_prefix_space")).forall(_.asBoolean())
+    }
+  }
+
+  /** The TemplateProcessing single-sequence template's SpecialToken ids
+    * before and after the `A` sequence; None for any other (or no)
+    * post_processor. */
+  private def templateSpecials(
+      root: JsonNode): Option[(Seq[String], Seq[String])] =
+    Option(root.get("post_processor")).filterNot(_.isNull)
+      .filter(typeOf(_) == "TemplateProcessing")
+      .flatMap(pp => Option(pp.get("single")))
+      .map { single =>
+        val (before, after) =
+          (0 until single.size).map(i => single.get(i)).span(!_.has("Sequence"))
+        def ids(items: Seq[JsonNode]): Seq[String] =
+          items.filter(_.has("SpecialToken"))
+            .map(_.get("SpecialToken").get("id").asText())
+        (ids(before), ids(after))
       }
 
-  /** (clsToken, sepToken) from the post_processor's single-sequence
-    * template: the SpecialToken before the `A` sequence and the first
-    * one after it. */
+  /** (clsToken, sepToken): the template's specials around `A`, or
+    * BertProcessing's cls/sep pair. */
   private def clsSepOf(root: JsonNode): Option[(String, String)] =
-    Option(root.get("post_processor")).filterNot(_.isNull).flatMap { pp =>
-      Option(pp.get("type")).map(_.asText()) match {
-        case Some("TemplateProcessing") =>
-          Option(pp.get("single")).flatMap { single =>
-            var cls: Option[String] = None
-            var sep: Option[String] = None
-            var seenA = false
-            (0 until single.size).foreach { i =>
-              val item = single.get(i)
-              if (item.has("Sequence")) seenA = true
-              else if (item.has("SpecialToken")) {
-                val id = item.get("SpecialToken").get("id").asText()
-                if (!seenA && cls.isEmpty) cls = Some(id)
-                else if (seenA && sep.isEmpty) sep = Some(id)
-              }
-            }
-            for (c <- cls; s <- sep) yield (c, s)
-          }
-        case Some("BertProcessing") =>
-          // [["[SEP]", id], ["[CLS]", id]] pair fields
-          for {
-            sep <- Option(pp.get("sep")).map(_.get(0).asText())
-            cls <- Option(pp.get("cls")).map(_.get(0).asText())
-          } yield (cls, sep)
-        case _ => None
-      }
+    Option(root.get("post_processor")).filterNot(_.isNull) match {
+      case Some(pp) if typeOf(pp) == "BertProcessing" =>
+        // [["[SEP]", id], ["[CLS]", id]] pair fields
+        for {
+          sep <- Option(pp.get("sep")).map(_.get(0).asText())
+          cls <- Option(pp.get("cls")).map(_.get(0).asText())
+        } yield (cls, sep)
+      case _ =>
+        templateSpecials(root).flatMap { case (before, after) =>
+          for (c <- before.headOption; s <- after.headOption) yield (c, s)
+        }
     }
 
   private def loadWordPiece(
@@ -347,101 +352,68 @@ object HfTokenizerJson {
       .map(_.asText()).getOrElse("##")
     require(prefix == "##",
       s"$path: continuing_subword_prefix `$prefix` unsupported (need ##)")
-    val vocab = scala.collection.mutable.Map.empty[String, Long]
-    model.get("vocab").properties().forEach { e =>
-      vocab(e.getKey) = e.getValue.asLong()
-    }
-    addedTokens(root).foreach { case (tok, id, _) => vocab(tok) = id }
+    val added = addedTokens(root)
+    val vocab = vocabOf(model.get("vocab")) ++
+      added.map { case (tok, id, _) => tok -> id }
     val unk = Option(model.get("unk_token")).map(_.asText())
       .getOrElse("[UNK]")
     val (cls, sep) = clsSepOf(root).getOrElse(("[CLS]", "[SEP]"))
-    val pad = addedTokens(root)
+    val pad = added
       .collectFirst { case (t, _, true) if t.toUpperCase
         .contains("PAD") => t }
       .getOrElse("[PAD]")
     val wp = WordPieceTokenizer(
-      vocab.toMap,
+      vocab,
       lowercase = lowercaseOf(root),
       clsToken = cls, sepToken = sep, padToken = pad, unkToken = unk,
       maxInputCharsPerWord = Option(model.get("max_input_chars_per_word"))
         .map(_.asInt()).getOrElse(100))
     // lowercase (and its bert-uncased accent-strip) is absorbed by the
     // model flag; everything else in the normalizer algebra chains
-    val chain = flatNormalizers(root)
-      .flatMap(stepsOf(_, absorbLowercase = true, path)) ++
-      preTokenizerSteps(root, "WordPiece", path)
-    wrap(chain, wp)
+    wrap(normSteps(root, absorbLowercase = true, path) ++
+      preTokenizerSteps(root, "WordPiece", path), wp)
   }
 
   private def loadBpe(
       root: JsonNode, model: JsonNode, path: String): GraftTokenizer = {
-    val vocab = scala.collection.mutable.Map.empty[String, Long]
-    model.get("vocab").properties().forEach { e =>
-      vocab(e.getKey) = e.getValue.asLong()
-    }
-    val mergesNode = model.get("merges")
-    val merges = (0 until mergesNode.size).map { i =>
-      val m = mergesNode.get(i)
-      val (a, b) =
-        if (m.isArray) (m.get(0).asText(), m.get(1).asText())
-        else {
-          val parts = m.asText().split(" ", 2)
-          (parts(0), parts(1))
-        }
-      (a, b) -> i
-    }.toMap
     val added = addedTokens(root)
-    added.foreach { case (tok, id, _) => vocab(tok) = id }
+    val vocab = vocabOf(model.get("vocab")) ++
+      added.map { case (tok, id, _) => tok -> id }
+    val mergesNode = model.get("merges")
+    val merges = BytePairTokenizer.ranks((0 until mergesNode.size).map { i =>
+      val m = mergesNode.get(i)
+      if (m.isArray) (m.get(0).asText(), m.get(1).asText())
+      else {
+        val parts = m.asText().split(" ", 2)
+        (parts(0), parts(1))
+      }
+    }, vocab, path)
     if (Option(model.get("byte_fallback")).exists(_.asBoolean()))
-      return loadSpmBpe(root, model, path, vocab.toMap, merges)
+      return loadSpmBpe(root, model, path, vocab, merges)
     val specials = added.collect { case (tok, id, true) => tok -> id }.toMap
     val eot = specials.keys.find(_ == "<|endoftext|>")
       .orElse(specials.keys.headOption).getOrElse("<|endoftext|>")
-    val bpe = BytePairTokenizer(vocab.toMap, merges, specials, eotToken = eot,
+    val bpe = BytePairTokenizer(vocab, merges, specials, eotToken = eot,
       preTokenRegex = splitRegexOf(root, path),
       ignoreMerges = Option(model.get("ignore_merges"))
         .exists(_.asBoolean()),
-      bosToken = bosTokenOf(root))
-    val chain = flatNormalizers(root)
-      .flatMap(stepsOf(_, absorbLowercase = false, path)) ++
-      preTokenizerSteps(root, "BPE", path)
-    wrap(chain, bpe)
+      // Llama-3's <|begin_of_text|>
+      bosToken = templateSpecials(root).flatMap(_._1.headOption))
+    wrap(normSteps(root, absorbLowercase = false, path) ++
+      preTokenizerSteps(root, "BPE", path), bpe)
   }
 
   /** The `Split` pre_tokenizer's regex (Llama-3-family layout: a
     * Sequence of Split(Regex pattern, Isolated) + ByteLevel). */
   private def splitRegexOf(root: JsonNode, path: String): Option[String] =
-    flatPreTokenizers(root)
-      .find(n => Option(n.get("type")).exists(_.asText() == "Split"))
-      .map { n =>
-        val pat = Option(n.get("pattern")).getOrElse(
-          throw new IllegalArgumentException(s"$path: Split without pattern"))
-        if (pat.has("Regex")) pat.get("Regex").asText()
-        else if (pat.has("String"))
-          java.util.regex.Pattern.quote(pat.get("String").asText())
-        else throw new IllegalArgumentException(
-          s"$path: Split pattern must be {Regex}/{String}")
-      }
-
-  /** First SpecialToken before the `A` Sequence in a TemplateProcessing
-    * single template — the family's bos (Llama-3 `<|begin_of_text|>`). */
-  private def bosTokenOf(root: JsonNode): Option[String] =
-    Option(root.get("post_processor")).filterNot(_.isNull).flatMap { pp =>
-      Option(pp.get("type")).map(_.asText()) match {
-        case Some("TemplateProcessing") =>
-          Option(pp.get("single")).flatMap { single =>
-            var bos: Option[String] = None
-            var seenA = false
-            (0 until single.size).foreach { i =>
-              val item = single.get(i)
-              if (item.has("Sequence")) seenA = true
-              else if (item.has("SpecialToken") && !seenA && bos.isEmpty)
-                bos = Some(item.get("SpecialToken").get("id").asText())
-            }
-            bos
-          }
-        case _ => None
-      }
+    preTokenizers(root).find(typeOf(_) == "Split").map { n =>
+      val pat = Option(n.get("pattern")).getOrElse(
+        throw new IllegalArgumentException(s"$path: Split without pattern"))
+      if (pat.has("Regex")) pat.get("Regex").asText()
+      else if (pat.has("String"))
+        java.util.regex.Pattern.quote(pat.get("String").asText())
+      else throw new IllegalArgumentException(
+        s"$path: Split pattern must be {Regex}/{String}")
     }
 
   /** Llama/Mistral-family sentencepiece-BPE (`byte_fallback: true`):
@@ -453,8 +425,9 @@ object HfTokenizerJson {
     * (`Replace`/`ByteFallback`/`Fuse`/`Strip`, possibly in a Sequence)
     * is what the engine's decode implements — other decoder types
     * reject rather than silently mis-decode. bos/eos placement comes
-    * from the TemplateProcessing single-sequence template (`<s>` only,
-    * in the family's files). */
+    * from the TemplateProcessing single-sequence template: a special
+    * before `A` adds bos, one after adds eos; without a template, bos
+    * only when `<s>` exists in the vocab (the family convention). */
   private def loadSpmBpe(
       root: JsonNode, model: JsonNode, path: String,
       vocab: Map[String, Long],
@@ -462,25 +435,14 @@ object HfTokenizerJson {
     val unk = Option(model.get("unk_token")).filterNot(_.isNull)
       .map(_.asText()).getOrElse("<unk>")
     val fuseUnk = Option(model.get("fuse_unk")).forall(_.asBoolean())
+    val norm = normSteps(root, absorbLowercase = false, path)
     // space marking: normalizer chain steps pass through; a Metaspace
     // pre_tokenizer contributes the equivalent steps
-    val normSteps = flatNormalizers(root)
-      .flatMap(stepsOf(_, absorbLowercase = false, path))
-    val metaSteps = flatPreTokenizers(root).flatMap { n =>
-      Option(n.get("type")).map(_.asText()).getOrElse("missing") match {
+    val metaSteps = preTokenizers(root).flatMap { n =>
+      typeOf(n) match {
         case "Metaspace" =>
-          val repl = Option(n.get("replacement")).map(_.asText())
-            .getOrElse("▁")
-          require(repl == "▁",
-            s"$path: Metaspace replacement `$repl` unsupported (need ▁)")
-          val prepend = Option(n.get("prepend_scheme")).map(_.asText()) match {
-            case Some("never") => false
-            case Some(_)       => true
-            case None =>
-              Option(n.get("add_prefix_space")).forall(_.asBoolean())
-          }
-          (if (prepend) Seq(NormStep.Prepend("▁")) else Seq.empty) ++
-            Seq(NormStep.Replace(" ", isRegex = false, "▁"))
+          (if (metaspacePrepends(n, path)) Seq(NormStep.Prepend("▁"))
+           else Seq.empty) :+ NormStep.Replace(" ", isRegex = false, "▁")
         case other =>
           throw new IllegalArgumentException(
             s"$path: unsupported pre_tokenizer `$other` for " +
@@ -489,11 +451,13 @@ object HfTokenizerJson {
     }
     // reject decoder types outside the chain the engine implements
     validateByteFallbackDecoder(root, path)
-    val (addBos, addEos) = bosEosOf(root, vocab.keySet)
+    val (addBos, addEos) = templateSpecials(root)
+      .map { case (before, after) => (before.nonEmpty, after.nonEmpty) }
+      .getOrElse((vocab.contains("<s>"), false))
     val spm = SpmBpeTokenizer(vocab, merges,
       unkToken = unk, fuseUnk = fuseUnk, byteFallback = true,
       addBos = addBos, addEos = addEos)
-    wrap(normSteps ++ metaSteps, spm)
+    wrap(norm ++ metaSteps, spm)
   }
 
   /** The family's decoder algebra: Replace / ByteFallback / Fuse /
@@ -501,113 +465,44 @@ object HfTokenizerJson {
     * decode implements. Anything else rejects with a clear error. */
   private def validateByteFallbackDecoder(root: JsonNode,
       path: String): Unit = {
-    def flat(n: JsonNode): Seq[JsonNode] =
-      Option(n.get("type")).map(_.asText()) match {
-        case Some("Sequence") =>
-          Option(n.get("decoders")).toSeq.flatMap(ns =>
-            (0 until ns.size).flatMap(i => flat(ns.get(i))))
-        case _ => Seq(n)
-      }
     val ok = Set("Replace", "ByteFallback", "Fuse", "Strip")
-    Option(root.get("decoder")).filterNot(_.isNull).toSeq
-      .flatMap(flat).foreach { n =>
-        val t = Option(n.get("type")).map(_.asText()).getOrElse("missing")
-        if (!ok.contains(t))
-          throw new IllegalArgumentException(
-            s"$path: unsupported decoder type `$t` for byte_fallback " +
-              "models (supported: Replace, ByteFallback, Fuse, Strip, " +
-              "Sequence)")
-      }
+    decoders(root).map(typeOf).filterNot(ok).foreach { t =>
+      throw new IllegalArgumentException(
+        s"$path: unsupported decoder type `$t` for byte_fallback " +
+          "models (supported: Replace, ByteFallback, Fuse, Strip, " +
+          "Sequence)")
+    }
   }
-
-  /** (addBos, addEos) from the TemplateProcessing single-sequence
-    * template: a SpecialToken before the `A` Sequence adds bos, one
-    * after adds eos. Default (no/other post_processor): bos only when
-    * `<s>` exists in the vocab — the family convention. */
-  private def bosEosOf(root: JsonNode,
-      vocabKeys: Set[String]): (Boolean, Boolean) =
-    Option(root.get("post_processor")).filterNot(_.isNull).flatMap { pp =>
-      Option(pp.get("type")).map(_.asText()) match {
-        case Some("TemplateProcessing") =>
-          Option(pp.get("single")).map { single =>
-            var before = false
-            var after = false
-            var seenA = false
-            (0 until single.size).foreach { i =>
-              val item = single.get(i)
-              if (item.has("Sequence")) seenA = true
-              else if (item.has("SpecialToken")) {
-                if (seenA) after = true else before = true
-              }
-            }
-            (before, after)
-          }
-        case _ => None
-      }
-    }.getOrElse((vocabKeys.contains("<s>"), false))
 
   private def loadUnigram(
       root: JsonNode, model: JsonNode, path: String): GraftTokenizer = {
     val vocabArr = model.get("vocab")
-    val unkIdx = Option(model.get("unk_id")).map(_.asLong()).getOrElse(0L)
-    val added = addedTokens(root).map { case (t, id, _) => t -> id }.toMap
-    var pad, bos, eos = -1L
-    val pieces = Map.newBuilder[String, (Long, Double)]
-    (0 until vocabArr.size).foreach { i =>
-      val entry = vocabArr.get(i)
-      val piece = entry.get(0).asText()
-      val score = entry.get(1).asDouble()
-      piece match {
-        case "<pad>"          => pad = i.toLong
-        case "<s>"            => bos = i.toLong
-        case "</s>"           => eos = i.toLong
-        case _ if i.toLong == unkIdx => () // unk piece is the fallback
-        case _                => pieces += (piece -> ((i.toLong, score)))
-      }
+    val rows = (0 until vocabArr.size).map { i =>
+      (vocabArr.get(i).get(0).asText(), vocabArr.get(i).get(1).asDouble())
     }
-    // added specials may live outside the positional vocab
-    pad = if (pad >= 0) pad else added.getOrElse("<pad>", -1L)
-    bos = if (bos >= 0) bos else added.getOrElse("<s>", -1L)
-    eos = if (eos >= 0) eos else added.getOrElse("</s>", -1L)
-    var next = vocabArr.size.toLong
-    def alloc(id: Long): Long =
-      if (id >= 0) id else { val v = next; next += 1; v }
     // the Llama-style normalizer pair (Prepend ▁ + Replace " "→▁) IS
     // the engine's internal space-marking: absorb it (honoring its
     // presence for the dummy prefix) instead of double-applying
-    val rawSteps = flatNormalizers(root)
-      .flatMap(stepsOf(_, absorbLowercase = false, path))
+    val rawSteps = normSteps(root, absorbLowercase = false, path)
     val prependMark = NormStep.Prepend("▁")
     val spaceMark = NormStep.Replace(" ", isRegex = false, "▁")
-    val hasPrependMark = rawSteps.contains(prependMark)
-    val hasSpaceMark = rawSteps.contains(spaceMark)
     val chain = rawSteps
       .filterNot(s => s == prependMark || s == spaceMark) ++
       preTokenizerSteps(root, "Unigram", path)
-    val addDummy =
-      if (flatPreTokenizers(root).exists(n =>
-        Option(n.get("type")).exists(_.asText() == "Metaspace")))
-        dummyPrefixOf(root)
-      else if (hasSpaceMark) hasPrependMark // llama-style normalizer
-      else true // sentencepiece default add_dummy_prefix
+    val addDummy = preTokenizers(root).find(typeOf(_) == "Metaspace") match {
+      case Some(n) => metaspacePrepends(n, path)
+      // llama-style normalizer, else sentencepiece's add_dummy_prefix
+      case None => !rawSteps.contains(spaceMark) || rawSteps.contains(prependMark)
+    }
     // byte fallback: the model flag, or a ByteFallback decoder in the
     // chain (some exports carry only the latter)
     val byteFb = Option(model.get("byte_fallback")).exists(_.asBoolean()) ||
-      {
-        def hasByteFb(n: JsonNode): Boolean =
-          Option(n.get("type")).map(_.asText()) match {
-            case Some("ByteFallback") => true
-            case Some("Sequence") =>
-              Option(n.get("decoders")).exists(ns =>
-                (0 until ns.size).exists(i => hasByteFb(ns.get(i))))
-            case _ => false
-          }
-        Option(root.get("decoder")).filterNot(_.isNull).exists(hasByteFb)
-      }
+      decoders(root).exists(typeOf(_) == "ByteFallback")
     if (byteFb) validateByteFallbackDecoder(root, path)
-    val uni = UnigramTokenizer(pieces.result(),
-      padId = alloc(pad), bosId = alloc(bos), eosId = alloc(eos),
-      unkId = unkIdx, addDummyPrefix = addDummy, byteFallback = byteFb)
+    val uni = UnigramTokenizer.fromRows(rows,
+      unkRow = Some(Option(model.get("unk_id")).map(_.asLong()).getOrElse(0L)),
+      added = addedTokens(root).map { case (t, id, _) => t -> id }.toMap)
+      .copy(addDummyPrefix = addDummy, byteFallback = byteFb)
     wrap(chain, uni)
   }
 }

@@ -64,121 +64,46 @@ final case class SpmBpeTokenizer(
   override def eosIds: Seq[Long] = if (addEos) Seq(eosId) else Seq.empty
   override def sepIds: Seq[Long] = Seq(eosId)
 
-  /** `<0xNN>` token id per byte value, -1 when absent. */
   @transient private lazy val byteIds: Array[Long] =
-    Array.tabulate(256)(b => vocab.getOrElse(f"<0x$b%02X>", -1L))
-  @transient private lazy val byteTokenIds: Set[Long] =
-    byteIds.filter(_ >= 0L).toSet
+    ByteFallback.ids(vocab.get)
+  @transient private lazy val byteOf: Map[Long, Int] =
+    ByteFallback.bytes(byteIds)
 
   private val Space = '▁'
 
-  /** One merge word: start from unicode-scalar symbols, repeatedly
-    * merge every adjacency of the lowest-ranked applicable pair (the
-    * public GPT-2 `bpe()` loop, which HF BPE reproduces). Spans are in
-    * Java-char units over the INPUT text. */
-  private def mergeWord(text: String): Array[(String, Int, Int)] = {
-    var syms = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-    var i = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      val w = Character.charCount(cp)
-      syms += ((text.substring(i, i + w), i, i + w))
-      i += w
-    }
-    if (merges.nonEmpty) {
-      var done = false
-      while (!done && syms.length > 1) {
-        var bestRank = Int.MaxValue
-        var k = 0
-        while (k < syms.length - 1) {
-          val r = merges.getOrElse((syms(k)._1, syms(k + 1)._1), Int.MaxValue)
-          if (r < bestRank) bestRank = r
-          k += 1
-        }
-        if (bestRank == Int.MaxValue) done = true
-        else {
-          val next =
-            scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-          var k2 = 0
-          while (k2 < syms.length) {
-            if (k2 < syms.length - 1 &&
-              merges.getOrElse((syms(k2)._1, syms(k2 + 1)._1),
-                Int.MaxValue) == bestRank) {
-              next += ((syms(k2)._1 + syms(k2 + 1)._1,
-                syms(k2)._2, syms(k2 + 1)._3))
-              k2 += 2
-            } else {
-              next += syms(k2)
-              k2 += 1
-            }
-          }
-          syms = next
-        }
-      }
-    }
-    syms.toArray
-  }
-
+  /** The whole text is one merge word over unicode-scalar symbols; the
+    * pieces concatenate to the text, so each piece's char span follows
+    * from the lengths before it. */
   override def encodePieces(text: String): Array[(Long, Int, Int)] = {
-    if (text.isEmpty) return Array.empty
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-    mergeWord(text).foreach { case (piece, s, e) =>
+    val symbols = text.codePoints().toArray.map(cp => Character.toString(cp))
+    var s = 0
+    BytePairTokenizer.merge(symbols, merges).foreach { piece =>
+      val e = s + piece.length
       vocab.get(piece) match {
         case Some(id) => out += ((id, s, e))
-        case None =>
-          val bytes =
-            if (byteFallback)
-              piece.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            else Array.empty[Byte]
-          val allPresent =
-            bytes.nonEmpty && bytes.forall(b => byteIds(b & 0xff) >= 0L)
-          if (allPresent)
-            bytes.foreach(b => out += ((byteIds(b & 0xff), s, e)))
-          else if (fuseUnk && out.nonEmpty && out.last._1 == unkId &&
-            out.last._3 == s)
-            out(out.length - 1) = (unkId, out.last._2, e)
-          else out += ((unkId, s, e))
+        case None => ByteFallback.emit(out, piece, s, e,
+          if (byteFallback) byteIds else null, unkId, fuseUnk)
       }
+      s = e
     }
     out.toArray
   }
 
-  override def encode(text: String, addSpecialTokens: Boolean): Array[Long] = {
-    val body = encodePieces(text).map(_._1)
-    if (!addSpecialTokens) body
-    else {
-      val withBos = if (addBos) bosId +: body else body
-      if (addEos) withBos :+ eosId else withBos
-    }
-  }
-
   override def decode(ids: Seq[Long], skipSpecialTokens: Boolean): String = {
-    val sb = new StringBuilder
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def flushBytes(): Unit =
-      if (buf.nonEmpty) {
-        sb.append(new String(buf.toArray,
-          java.nio.charset.StandardCharsets.UTF_8))
-        buf.clear()
-      }
+    val out = new ByteFallback.Utf8Text
     ids.foreach { id =>
-      if (id == bosId || id == eosId || (padId >= 0 && id == padId)) {
-        flushBytes()
-        if (!skipSpecialTokens) sb.append(inv.getOrElse(id, ""))
-      } else if (id == unkId) {
-        flushBytes()
-        if (!skipSpecialTokens) sb.append(unkToken)
-      } else if (byteTokenIds.contains(id)) {
+      if (id == bosId || id == eosId || (padId >= 0 && id == padId))
+        out.append(if (skipSpecialTokens) "" else inv.getOrElse(id, ""))
+      else if (id == unkId)
+        out.append(if (skipSpecialTokens) "" else unkToken)
+      else byteOf.get(id) match {
         // ByteFallback + Fuse: runs of byte tokens collapse to bytes
-        val tok = inv(id)
-        buf += Integer.parseInt(tok.substring(3, 5), 16).toByte
-      } else {
-        flushBytes()
-        sb.append(inv.getOrElse(id, ""))
+        case Some(b) => out.byte(b)
+        case None    => out.append(inv.getOrElse(id, ""))
       }
     }
-    flushBytes()
     // Replace ▁→' ' then Strip one leading space (the family's chain)
-    sb.toString.replace(Space, ' ').stripPrefix(" ")
+    out.result().replace(Space, ' ').stripPrefix(" ")
   }
 }

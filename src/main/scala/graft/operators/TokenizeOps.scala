@@ -26,9 +26,17 @@ import org.apache.spark.sql.types._
   */
 
 /** Minimal tokenizer contract (mirrors the slice of the HF interface the
-  * reference actually uses: encode, decode, special ids, pad id). */
+  * reference actually uses: encode, decode, special ids, pad id).
+  *
+  * `encode(text, addSpecialTokens)` is the ids of [[encodePieces]], with
+  * [[bosIds]] before and [[eosIds]] after them when `addSpecialTokens` is
+  * set. The default implements exactly that; an engine overrides it only
+  * to produce the same ids faster. */
 trait GraftTokenizer extends Serializable {
-  def encode(text: String, addSpecialTokens: Boolean): Array[Long]
+  def encode(text: String, addSpecialTokens: Boolean): Array[Long] = {
+    val body = encodePieces(text).map(_._1)
+    if (addSpecialTokens) (bosIds ++ body ++ eosIds).toArray else body
+  }
 
   /** id → token string (inverse vocab). */
   def decode(ids: Seq[Long], skipSpecialTokens: Boolean): String
@@ -374,21 +382,21 @@ object WordPieceTokenizer {
 }
 
 /** Run the tokenizer over a text field; emits `<prefix>input_ids` and
-  * optionally attention_mask / token_type_ids / special_tokens_mask /
-  * offset_mapping / length / word_ids / words.
+  * optionally attention_mask / special_tokens_mask / length, or one row
+  * per window with overflow_to_sample_mapping.
   * Ref: tokenize.py:28-229. Truncation to `maxLength` happens before
   * special tokens are counted, like HF's `truncation=True`.
+  *
+  * The reference's token_type_ids, offset_mapping, word_ids and words
+  * outputs are not built here: [[EncodeFields]] emits char offsets and
+  * [[FillEncodedPrompt]] emits token type ids.
   *
   * Output naming mirrors the reference mixin (tokenize.py:28-81): either
   * an `outputPrefix` ("<prefix>_<field>") or an `outputRenameMap` (every
   * emitted field must have an entry), never both.
   *
-  * `isSplitIntoWords` treats an array<string> input as the WORDS of one
-  * sequence (tokenize.py:95,193-224): pieces concatenate into a single
-  * input_ids, `word_ids` gives each token's source-word index (null on
-  * special tokens), `words` the source word itself. Without it, an
-  * array<string> input is the batched-sentences shape (one encoding per
-  * element).
+  * An array<string> input is the batched-sentences shape: one encoding
+  * per element, and a null element stays null.
   *
   * Scale: the vocab Map serializes once into the task closure; work is
   * a narrow mapPartitions (no shuffle). This is the one deliberate
@@ -405,22 +413,10 @@ final case class TokenizerMapper(
     returnLength: Boolean = false,
     returnOverflowingTokens: Boolean = false,
     strideOverlap: Int = 0,
-    returnTokenTypeIds: Boolean = false,
-    returnOffsetsMapping: Boolean = false,
-    isSplitIntoWords: Boolean = false,
-    returnWordIds: Boolean = false,
-    returnWords: Boolean = false,
     outputRenameMap: Option[Map[String, String]] = None
 ) extends Mapper {
   require(outputPrefix.isEmpty || outputRenameMap.isEmpty,
     "You cannot specify both outputPrefix and outputRenameMap.")
-  require(!returnWordIds || isSplitIntoWords,
-    "returnWordIds requires isSplitIntoWords (the word index is defined " +
-      "against the input word list, tokenize.py:178-190)")
-  require(!returnWords || returnWordIds,
-    "returnWords requires returnWordIds (tokenize.py:179-184)")
-  require(!(returnOffsetsMapping && returnOverflowingTokens),
-    "offset_mapping with return_overflowing_tokens is not supported")
 
   private def fname(f: String): String = outputPrefix match {
     case Some(p) => s"${p}_$f"
@@ -436,38 +432,33 @@ final case class TokenizerMapper(
 
   override def inputFields: Seq[String] = Seq(inputField)
   // canonical order mirrors output_fields_from_tokenizer_kwargs
-  // (tokenize.py:47-68) + word_ids/words appended (tokenize.py:178-184)
+  // (tokenize.py:47-68)
   override def outputFields: Seq[String] =
     (Seq("input_ids") ++
       (if (returnAttentionMask) Seq("attention_mask") else Nil) ++
-      (if (returnTokenTypeIds) Seq("token_type_ids") else Nil) ++
       (if (returnOverflowingTokens) Seq("overflow_to_sample_mapping") else Nil) ++
       (if (returnSpecialTokensMask) Seq("special_tokens_mask") else Nil) ++
-      (if (returnOffsetsMapping) Seq("offset_mapping") else Nil) ++
-      (if (returnLength) Seq("length") else Nil) ++
-      (if (returnWordIds) Seq("word_ids") else Nil) ++
-      (if (returnWords) Seq("words") else Nil)).map(fname)
+      (if (returnLength) Seq("length") else Nil)).map(fname)
 
   override protected def build(df: DataFrame): DataFrame = {
     val tok = tokenizer
     val addSpecials = addSpecialTokens
-    val maxLen = maxLength
-    val trunc = truncation
     val nSpecial =
       if (addSpecials) tok.bosIds.size + tok.eosIds.size else 0
-
-    val encodeUdf = udf { (text: String) =>
+    // ids between the specials: all of them, or maxLength - nSpecial
+    val budget = maxLength.filter(_ => truncation).map(m => math.max(0, m - nSpecial))
+    val window = math.max(1, maxLength.getOrElse(Int.MaxValue) - nSpecial)
+    val step = math.max(1, window - strideOverlap)
+    val withSpecials: Array[Long] => Array[Long] = ids =>
+      if (addSpecials) (tok.bosIds ++ ids ++ tok.eosIds).toArray else ids
+    val encodeOne: String => Array[Long] = text =>
       if (text == null) null
       else {
         val body = tok.encode(text, addSpecialTokens = false)
-        val kept = (maxLen, trunc) match {
-          case (Some(m), true) => body.take(math.max(0, m - nSpecial))
-          case _               => body
-        }
-        if (addSpecials) (tok.bosIds ++ kept ++ tok.eosIds).toArray
-        else kept
+        withSpecials(budget.fold(body)(n => body.take(n)))
       }
-    }
+
+    val encodeUdf = udf(encodeOne)
     // HF-style overflow (tokenize.py return_overflowing_tokens): instead
     // of truncating, emit one row per maxLength-nSpecial window (with
     // strideOverlap overlap); overflow_to_sample_mapping carries the
@@ -478,31 +469,19 @@ final case class TokenizerMapper(
       if (text == null) null
       else {
         val body = tok.encode(text, addSpecialTokens = false)
-        val win = math.max(1, maxLen.getOrElse(Int.MaxValue) - nSpecial)
-        val step = math.max(1, win - strideOverlap)
         val chunks =
-          if (body.length <= win) Array(body)
-          else (0 to (body.length - win + step - 1) / step)
-            .map(k => body.slice(k * step, math.min(k * step + win, body.length)))
+          if (body.length <= window) Array(body)
+          else (0 to (body.length - window + step - 1) / step)
+            .map(k => body.slice(k * step, math.min(k * step + window, body.length)))
             .filter(_.nonEmpty)
             .toArray
-        chunks.map { c =>
-          if (addSpecials) (tok.bosIds ++ c ++ tok.eosIds).toArray else c
-        }
+        chunks.map(withSpecials)
       }
     }
     // array<string> input: tokenize each element (the reference's
     // batched-sentences shape, README.md:33-75) → array<array<bigint>>
     val encodeManyUdf = udf { (texts: Seq[String]) =>
-      if (texts == null) null
-      else texts.map { t =>
-        val body = tok.encode(t, addSpecialTokens = false)
-        val kept = (maxLen, trunc) match {
-          case (Some(m), true) => body.take(math.max(0, m - nSpecial))
-          case _               => body
-        }
-        if (addSpecials) (tok.bosIds ++ kept ++ tok.eosIds).toArray else kept
-      }
+      if (texts == null) null else texts.map(encodeOne)
     }
     val isArrayInput =
       df.schema(inputField).dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]

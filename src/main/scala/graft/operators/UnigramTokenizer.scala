@@ -55,12 +55,10 @@ final case class UnigramTokenizer(
   @transient private lazy val maxPieceLen: Int =
     if (pieces.isEmpty) 1 else pieces.keysIterator.map(_.length).max
 
-  /** `<0xNN>` piece id per byte value, -1 when absent. */
   @transient private lazy val byteIds: Array[Long] =
-    Array.tabulate(256)(b =>
-      pieces.get(f"<0x$b%02X>").map(_._1).getOrElse(-1L))
-  @transient private lazy val byteTokenIds: Set[Long] =
-    if (byteFallback) byteIds.filter(_ >= 0L).toSet else Set.empty
+    ByteFallback.ids(pieces.get(_).map(_._1))
+  @transient private lazy val byteOf: Map[Long, Int] =
+    if (byteFallback) ByteFallback.bytes(byteIds) else Map.empty
 
   private val Space = '▁'
 
@@ -84,7 +82,7 @@ final case class UnigramTokenizer(
   /** Exact Viterbi best segmentation of the normalized string: for each
     * end position keep the best (score, pieceStart, pieceId). Unknown
     * coverage is a single-char fallback at `unkScore`. */
-  private def viterbi(norm: String): Array[(Long, Int, Int)] = {
+  private def viterbi(norm: String): collection.Seq[(Long, Int, Int)] = {
     val n = norm.length
     val best = Array.fill(n + 1)(Double.NegativeInfinity)
     val from = Array.fill(n + 1)(-1)
@@ -111,81 +109,56 @@ final case class UnigramTokenizer(
       }
       i += 1
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
+    val path = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
     var p = n
     while (p > 0) {
-      out += ((ids(p), from(p), p))
+      path += ((ids(p), from(p), p))
       p = from(p)
     }
-    val fwd = out.reverseIterator.toArray
     // fuse runs of single-char unks into one unk piece (sp semantics)
-    val fused = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-    fwd.foreach { case t @ (id, s, e) =>
-      if (id == unkId && fused.nonEmpty && fused.last._1 == unkId &&
-        fused.last._3 == s)
-        fused(fused.length - 1) = (unkId, fused.last._2, e)
-      else fused += t
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
+    path.reverseIterator.foreach { case t @ (id, s, e) =>
+      if (id == unkId) ByteFallback.appendUnk(out, unkId, s, e) else out += t
     }
-    fused.toArray
+    out
   }
 
   override def encodePieces(text: String): Array[(Long, Int, Int)] = {
     if (text.isEmpty) return Array.empty
     val (norm, map) = normalizeWithMap(text)
-    viterbi(norm).flatMap { case (id, a, b) =>
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
+    viterbi(norm).foreach { case (id, a, b) =>
       // normalized span → original chars; the dummy prefix (when
       // present) occupies normalized position 0 with zero width
       val so = if (addDummyPrefix && a == 0) 0 else map(a)
       val eo = map(b - 1) + (if (addDummyPrefix && b - 1 == 0) 0 else 1)
-      if (id == unkId && byteFallback) {
-        // byte fallback: the uncovered NORMALIZED span decomposes into
-        // its UTF-8 bytes' <0xNN> tokens (all spanning the same chars);
-        // any missing byte token keeps the <unk> emission instead
-        val bytes = norm.substring(a, b)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        if (bytes.nonEmpty && bytes.forall(x => byteIds(x & 0xff) >= 0L))
-          bytes.toSeq.map(x => (byteIds(x & 0xff), so, eo))
-        else Seq((id, so, eo))
-      } else Seq((id, so, eo))
+      // byte fallback: the uncovered NORMALIZED span decomposes into its
+      // UTF-8 bytes' <0xNN> tokens, all spanning the same chars
+      if (id == unkId && byteFallback)
+        ByteFallback.emit(out, norm.substring(a, b), so, eo, byteIds, unkId,
+          fuseUnk = false)
+      else out += ((id, so, eo))
     }
-  }
-
-  override def encode(text: String, addSpecialTokens: Boolean): Array[Long] = {
-    val body = encodePieces(text).map(_._1)
-    if (addSpecialTokens) bosId +: body :+ eosId else body
+    out.toArray
   }
 
   override def decode(ids: Seq[Long], skipSpecialTokens: Boolean): String = {
-    val specials = Set(padId, bosId, eosId)
-    val sb = new StringBuilder
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def flushBytes(): Unit =
-      if (buf.nonEmpty) {
-        sb.append(new String(buf.toArray,
-          java.nio.charset.StandardCharsets.UTF_8))
-        buf.clear()
-      }
+    val out = new ByteFallback.Utf8Text
     ids.foreach { id =>
-      if (specials.contains(id)) {
-        flushBytes()
-        if (!skipSpecialTokens) sb.append(
-          if (id == padId) "<pad>" else if (id == bosId) "<s>" else "</s>")
-      } else if (id == unkId) {
-        flushBytes()
+      if (id == padId || id == bosId || id == eosId)
+        out.append(if (skipSpecialTokens) ""
+          else if (id == padId) "<pad>" else if (id == bosId) "<s>" else "</s>")
+      else if (id == unkId)
         // <unk> is a special too: HF skip_special_tokens drops it, and the
         // WordPiece sibling (TokenizeOps) skips unk in that mode
-        if (!skipSpecialTokens) sb.append("<unk>")
-      } else if (byteTokenIds.contains(id)) {
+        out.append(if (skipSpecialTokens) "" else "<unk>")
+      else byteOf.get(id) match {
         // ByteFallback + Fuse: byte-token runs collapse back to UTF-8
-        val tok = inv(id)
-        buf += Integer.parseInt(tok.substring(3, 5), 16).toByte
-      } else {
-        flushBytes()
-        sb.append(inv.getOrElse(id, ""))
+        case Some(b) => out.byte(b)
+        case None    => out.append(inv.getOrElse(id, ""))
       }
     }
-    flushBytes()
-    sb.toString.replace(Space, ' ').stripPrefix(" ")
+    out.result().replace(Space, ' ').stripPrefix(" ")
   }
 }
 
@@ -214,31 +187,38 @@ object UnigramTokenizer {
     * id is allocated past the vocabulary so it collides with nothing. */
   def fromVocabFile(path: String): UnigramTokenizer = {
     val src = scala.io.Source.fromFile(path, "UTF-8")
-    try {
-      var pad, bos, eos, unk = -1L
-      val pieces = Map.newBuilder[String, (Long, Double)]
-      var row = 0L
-      src.getLines().foreach { line =>
-        line.split('\t') match {
-          case Array(p, s) =>
-            p match {
-              case "<pad>"  => pad = row
-              case "<s>"    => bos = row
-              case "</s>"   => eos = row
-              case "<unk>"  => unk = row
-              case _        => pieces += (p -> ((row, s.toDouble)))
-            }
-            row += 1
-          case _ => ()
-        }
-      }
-      // specials absent from the dump get ids past the vocabulary
-      var next = row
-      def alloc(id: Long): Long =
-        if (id >= 0) id else { val v = next; next += 1; v }
-      UnigramTokenizer(pieces.result(),
-        padId = alloc(pad), bosId = alloc(bos),
-        eosId = alloc(eos), unkId = alloc(unk))
-    } finally src.close()
+    try fromRows(src.getLines().map(_.split('\t')).collect {
+        case Array(p, s) => (p, s.toDouble)
+      }.toVector, unkRow = None)
+    finally src.close()
+  }
+
+  /** Build from positional (piece, logProb) rows, ids = row positions.
+    * The `<pad>`, `<s>` and `</s>` rows claim those special ids, and so
+    * does the `<unk>` row unless `unkRow` names the unk row (which then
+    * is no piece). A special with no row takes its id from `added`, else
+    * the next id past the rows, so it collides with nothing. */
+  private[operators] def fromRows(
+      rows: IndexedSeq[(String, Double)],
+      unkRow: Option[Long],
+      added: Map[String, Long] = Map.empty
+  ): UnigramTokenizer = {
+    val named = Set("<pad>", "<s>", "</s>") ++ unkRow.fold(Set("<unk>"))(_ => Set.empty)
+    val found = scala.collection.mutable.Map.empty[String, Long]
+    val pieces = Map.newBuilder[String, (Long, Double)]
+    rows.indices.foreach { i =>
+      val (p, score) = rows(i)
+      if (named(p)) found(p) = i.toLong
+      else if (!unkRow.contains(i.toLong)) pieces += (p -> ((i.toLong, score)))
+    }
+    var next = rows.size.toLong
+    def id(special: String): Long =
+      found.get(special).orElse(added.get(special))
+        .getOrElse { next += 1; next - 1 }
+    val pad = id("<pad>")
+    val bos = id("<s>")
+    val eos = id("</s>")
+    UnigramTokenizer(pieces.result(), padId = pad, bosId = bos, eosId = eos,
+      unkId = unkRow.getOrElse(id("<unk>")))
   }
 }

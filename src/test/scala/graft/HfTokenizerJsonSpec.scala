@@ -109,6 +109,25 @@ class HfTokenizerJsonSpec extends AnyFunSuite {
     assert(t.encode("ab", addSpecialTokens = false).toSeq == Seq(2L))
   }
 
+  test("BPE tokenizer.json: a merge whose product is not in the vocab " +
+    "fails fast, on both BPE paths") {
+    // "t h" makes "th", but "th e" makes "the", which the vocab lacks:
+    // without the check "the" would encode silently as the eot id
+    for (byteFallback <- Seq(false, true)) {
+      val path = write("bpe_bad", s"""{
+        "version": "1.0",
+        "added_tokens": [
+          {"id": 4, "content": "<|endoftext|>", "special": true}],
+        "model": {"type": "BPE", "byte_fallback": $byteFallback,
+          "vocab": {"t": 0, "h": 1, "e": 2, "th": 3},
+          "merges": ["t h", "th e"]}
+      }""")
+      val err = intercept[IllegalArgumentException](HfTokenizerJson.load(path))
+      assert(err.getMessage.contains("merge products missing from vocab") &&
+        err.getMessage.contains("the"), err.getMessage)
+    }
+  }
+
   test("Unigram tokenizer.json: positional vocab, unk_id, specials") {
     val path = write("uni", """{
       "version": "1.0",

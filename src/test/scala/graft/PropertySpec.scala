@@ -344,4 +344,126 @@ class PropertySpec extends SparkSpec {
       assert(idx == (0L until idx.length).toSeq)
     }
   }
+
+  test("BPE, SentencePiece-BPE and Unigram: encode, pieces and decode equal " +
+    "the reference on any text") {
+    val fragment: Gen[String] = Gen.frequency(
+      6 -> Gen.chooseNum(1, 6).flatMap(n => Gen.listOfN(n, Gen.frequency(
+        6 -> Gen.oneOf("a", "b", "e", "h", "r", "t", "aa", "the", "her"),
+        2 -> Gen.alphaNumChar.map(_.toString),
+        1 -> Gen.oneOf(".", ",", "'s", "!")))).map(_.mkString),
+      3 -> Gen.oneOf(" ", " ", "  ", "\t", "\n", " \n ", "▁"),
+      2 -> Gen.oneOf("\u00c9", "\u00e9", "e\u0301", "\u00e9t\u00e9", "\u4e2d\u6587",
+        "\ud83d\ude00", "a\ud83d\ude00b"),
+      // characters no piece covers, in runs
+      1 -> Gen.oneOf("\u00a7", "\u0416\u0416", "\u03a9x\u03a9", "\u2603"),
+      1 -> Gen.oneOf("<|endoftext|>", "<|begin_of_text|>", "<s>", "</s>",
+        "<unk>", "<pad>"))
+    val textGen: Gen[String] =
+      Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, fragment).map(_.mkString))
+    val texts = (0 until 80).flatMap(i =>
+      textGen(Gen.Parameters.default, Seed(7L + i))) ++
+      Seq("", "aaaaa", "the there", "\ud83d\ude00\ud83d\ude00", "\u0416\u0416 \u0416")
+
+    /** Parity of one engine with its reference on every text, and on
+      * decode of arbitrary ids drawn from `idPool`. */
+    def parity(name: String, tok: graft.operators.GraftTokenizer,
+        refEncode: (String, Boolean) => Array[Long],
+        refPieces: String => Array[(Long, Int, Int)],
+        refDecode: (Seq[Long], Boolean) => String, idPool: Seq[Long]): Unit = {
+      texts.foreach { t =>
+        for (specials <- Seq(false, true)) {
+          val ids = tok.encode(t, specials)
+          assert(ids sameElements refEncode(t, specials),
+            s"$name encode(specials=$specials) on '$t': ${ids.toSeq}")
+          for (skip <- Seq(false, true))
+            assert(tok.decode(ids.toSeq, skip) == refDecode(ids.toSeq, skip),
+              s"$name decode(skip=$skip) of '$t'")
+        }
+        val pieces = tok.encodePieces(t)
+        assert(pieces sameElements refPieces(t),
+          s"$name encodePieces on '$t': ${pieces.toSeq}")
+      }
+      forAll(Gen.listOf(Gen.oneOf(idPool)), n = 60) { ids =>
+        for (skip <- Seq(false, true))
+          assert(tok.decode(ids, skip) == refDecode(ids, skip),
+            s"$name decode(skip=$skip) of $ids")
+      }
+    }
+
+    // byte-level BPE: GPT-2 regex, and a Llama-3 Split regex with
+    // ignore_merges, a bos and a vocab missing some byte units
+    val g = BytePairTokenizer.byteToChar
+    val sp = g(' ').toString
+    // ("aa", "a") ranks before ("a", "a"): on "aaaa", merging every
+    // occurrence of the winning pair at once gives aa|aa, merging only
+    // the first would give aaa|a
+    val merges = Seq(("t", "h"), ("th", "e"), (sp, "the"), ("aa", "a"),
+      ("a", "a"), ("h", "e"), ("he", "r"), ("e", "r"), (sp, sp),
+      (g(0xc3).toString, g(0xa9).toString), (g(0xe4).toString, g(0xb8).toString),
+      (g(0xf0).toString, g(0x9f).toString))
+    val gpt2 = BytePairTokenizer.fromMerges(merges)
+    val llamaVocab = (gpt2.vocab - g('h').toString - g(0xa9).toString) ++
+      Map(sp + "there" -> 900L, "her" -> 901L, "<|begin_of_text|>" -> 902L,
+        "<|end_of_text|>" -> 903L)
+    val llama3 = BytePairTokenizer(llamaVocab, gpt2.mergeRanks,
+      Map("<|begin_of_text|>" -> 902L, "<|end_of_text|>" -> 903L),
+      eotToken = "<|end_of_text|>",
+      preTokenRegex = Some("(?i:'s|'t|'re|'ve|'m|'ll|'d)|[^\\r\\n\\p{L}\\p{N}]?" +
+        "\\p{L}+|\\p{N}{1,3}| ?[^\\s\\p{L}\\p{N}]+[\\r\\n]*|\\s*[\\r\\n]+|\\s+(?!\\S)|\\s+"),
+      ignoreMerges = true, bosToken = Some("<|begin_of_text|>"))
+    for (tok <- Seq(gpt2, gpt2.copy(cleanUpTokenizationSpaces = false), llama3)) {
+      val ref = BytePairReference(tok)
+      parity(s"bpe(${tok.preTokenRegex.isDefined})", tok, ref.encode, ref.encodePieces,
+        ref.decode, (tok.vocab.values ++ tok.specialTokens.values).toSeq.distinct :+ 7777L)
+    }
+
+    // SentencePiece-BPE over ▁-marked text; byte tokens for every byte
+    // but 0x9F and 0xE4-0xE6, so an emoji or CJK char falls to <unk>
+    val spmPieces = Seq("▁", "a", "b", "e", "h", "r", "t", "▁t", "th", "the",
+      "▁the", "he", "her", "aa", "\u00c9", "\u00e9", "\u6587")
+    val spmVocab = (Seq("<unk>", "<s>", "</s>", "<pad>") ++
+      (0 until 256).filterNot(b => b == 0x9f || (b >= 0xe4 && b <= 0xe6))
+        .map(b => f"<0x$b%02X>") ++ spmPieces).zipWithIndex
+      .map { case (p, i) => p -> i.toLong }.toMap
+    // ("e", "r") has no vocab piece: its product takes the byte path
+    val spmMerges = Seq(("▁", "t"), ("t", "h"), ("th", "e"), ("▁t", "he"),
+      ("▁", "the"), ("h", "e"), ("he", "r"), ("aa", "a"), ("a", "a"), ("e", "r"))
+      .zipWithIndex.toMap
+    var spmUnks = 0
+    for {
+      fuse <- Seq(true, false)
+      fallback <- Seq(true, false)
+      (bos, eos) <- Seq((true, false), (true, true))
+    } {
+      val tok = SpmBpeTokenizer(spmVocab, spmMerges, fuseUnk = fuse,
+        byteFallback = fallback, addBos = bos, addEos = eos)
+      val ref = SpmBpeReference(tok)
+      parity(s"spm(fuse=$fuse, fallback=$fallback)", tok, ref.encode,
+        ref.encodePieces, ref.decode, spmVocab.values.toSeq :+ 7777L)
+      val marked = texts.map(t => "▁" + t.replace(' ', '▁'))
+      marked.foreach { t =>
+        assert(tok.encodePieces(t) sameElements ref.encodePieces(t),
+          s"spm(fuse=$fuse, fallback=$fallback) encodePieces on '$t'")
+        spmUnks += tok.encodePieces(t).count(p => p._1 == tok.unkId && p._3 - p._2 > 1)
+      }
+    }
+
+    // Unigram with and without byte fallback and dummy prefix; byte
+    // tokens miss 0xE4-0xE6 and 0xF0
+    val uniRows = Seq("▁" -> -2.0, "a" -> -3.0, "aa" -> -3.5, "b" -> -4.0,
+      "e" -> -3.0, "h" -> -4.0, "r" -> -4.0, "t" -> -3.0, "▁the" -> -4.0,
+      "the" -> -4.5, "her" -> -5.0, "\u00e9" -> -6.0, "\u6587" -> -7.0) ++
+      (0 until 256).filterNot(b => b == 0xf0 || (b >= 0xe4 && b <= 0xe6))
+        .map(b => f"<0x$b%02X>" -> -20.0)
+    for (fallback <- Seq(true, false); dummy <- Seq(true, false)) {
+      val tok = UnigramTokenizer.fromScores(uniRows)
+        .copy(byteFallback = fallback, addDummyPrefix = dummy)
+      val ref = UnigramReference(tok)
+      parity(s"unigram(fallback=$fallback, dummy=$dummy)", tok, ref.encode,
+        ref.encodePieces, ref.decode, (0L until 4L) ++ (4L until 4L + uniRows.size) :+ 7777L)
+    }
+    // the texts reached fused unks (spans over one char)
+    assert(spmUnks > 50, s"spmUnks=$spmUnks")
+  }
 }

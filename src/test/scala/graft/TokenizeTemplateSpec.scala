@@ -52,6 +52,39 @@ class TokenizeTemplateSpec extends SparkSpec {
     assert(ids.head == vocab("[CLS]") && ids.last == vocab("[SEP]"))
   }
 
+  test("TokenizerMapper: a null element of an array<string> input stays null") {
+    val df = Seq(Tuple1(Seq("this is", null))).toDF("texts")
+    val out = TokenizerMapper(tok, "texts")(df)
+    assert(rows(out.select("input_ids", "attention_mask")).head == Seq(
+      List(List(vocab("[CLS]"), vocab("this"), vocab("is"), vocab("[SEP]")), null),
+      List(List(1L, 1L, 1L, 1L), null)))
+  }
+
+  test("TokenizerMapper adds exactly the columns outputFields declares") {
+    val text = Seq((1L, "this is a sentence . unwanted running")).toDF("id", "text")
+    val texts = Seq((1L, Seq("this is", "a sentence"))).toDF("id", "text")
+    val mappers = Seq(
+      TokenizerMapper(tok, "text"),
+      TokenizerMapper(tok, "text", addSpecialTokens = false,
+        returnAttentionMask = false),
+      TokenizerMapper(tok, "text", returnSpecialTokensMask = true),
+      TokenizerMapper(tok, "text", returnLength = true, maxLength = Some(4),
+        truncation = true),
+      TokenizerMapper(tok, "text", maxLength = Some(4),
+        returnOverflowingTokens = true, strideOverlap = 1),
+      TokenizerMapper(tok, "text", outputPrefix = Some("p"),
+        returnSpecialTokensMask = true, returnLength = true),
+      TokenizerMapper(tok, "text", returnLength = true, outputRenameMap = Some(
+        Map("input_ids" -> "ids", "attention_mask" -> "mask", "length" -> "n"))))
+    for (m <- mappers; df <- Seq(text, texts)
+        if !(m.returnOverflowingTokens && (df eq texts))) {
+      val out = m(df)
+      out.collect()
+      assert(out.columns.toSeq.diff(df.columns).sorted == m.outputFields.sorted,
+        s"$m on ${df.schema("text").dataType}")
+    }
+  }
+
   test("EncodeFields offsets are subword-granular char spans") {
     // "unwanted running" → un|##want|##ed run|##ning, each piece covering
     // exactly its own characters (tokenize.py:84-229 offset_mapping)
