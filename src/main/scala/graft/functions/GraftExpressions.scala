@@ -3,31 +3,81 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the three operators SURVEY §7.4 flags
-  * as awkward/slow as higher-order-function trees:
+/** Native Catalyst kernels: row-local scalar expressions (narrow,
+  * partition-parallel, no shuffle) that replace higher-order-function
+  * trees, SQL chains or UDFs which run interpreted or allocate per
+  * element. Each replays the formulation it replaces bit for bit; the
+  * parity specs pin that.
   *
-  *   - [[CosineSimilarity]]: one-pass dot+norms with real whole-stage
-  *     codegen (`doGenCode`) — the kNN hot path. Produces bit-identical
-  *     results to the sequential-fold formulation (same accumulation
-  *     order), so DuckDB oracle parity is preserved.
-  *   - [[RunLengthRanges]]: mask → [start,end) runs in one linear pass
-  *     (the `aggregate` fold it replaces rebuilt an array per element).
-  *   - [[GreedyPackBreaks]]: greedy sequence-packing break positions for
-  *     MultiSequenceStrider (multiseq.py:377-449 semantics), linear.
+  * One implementation per kernel: its per-row logic lives in a single
+  * `compute` method. The interpreted path (`nullSafeEval`/`eval`) calls
+  * it, and the generated code calls it too, through [[ComputeCodegen]],
+  * so whole-stage codegen keeps the kernel's stage fused without a
+  * second, hand-written Java copy of the logic. Nullability:
   *
-  * All are row-local scalar expressions — narrow, partition-parallel,
-  * no shuffle implications. Registered for SQL via [[GraftExtensions]]
+  *   - a null-intolerant kernel (all but two) returns null for any null
+  *     input and never calls `compute` with one;
+  *   - a kernel whose `compute` may also return null for non-null input
+  *     (`dot_product`, `ct_classify`) sets `computeMayReturnNull`;
+  *   - a non-nullable kernel (`word_shingles`, `line_stats`) passes null
+  *     inputs to `compute`, which always returns a value.
+  *
+  * A few are registered for SQL via [[GraftExtensions]]
   * (`spark.sql.extensions=graft.functions.GraftExtensions`).
   */
 
-/** cosine(a, b) over array<double>, one pass, codegen'd. */
+/** Generated code for a kernel: `ev.value = ref.compute(args)`, one
+  * argument per child (one to three), with `ref` the expression itself
+  * (`ctx.addReferenceObj`). Null handling follows the rules above. */
+private[functions] trait ComputeCodegen extends Expression {
+  protected def computeMayReturnNull: Boolean = false
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+    val gens = children.map(_.genCode(ctx))
+    val args = gens.map(g =>
+      if (nullIntolerant) g.value.toString else s"(${g.isNull} ? null : ${g.value})")
+    val call = s"$ref.compute(${args.mkString(", ")})"
+    val decl =
+      s"${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};"
+    if (!nullable) {
+      // isNull must be a literal, not the undeclared default variable:
+      // consumers such as Generate reference it and would fail to compile
+      ev.copy(code = code"""
+        ${gens.map(_.code).reduce(_ + _)}
+        $decl
+        ${ev.value} = $call;""", isNull = FalseLiteral)
+    } else {
+      val set =
+        if (!computeMayReturnNull) s"${ev.isNull} = false; ${ev.value} = $call;"
+        else {
+          val r = ctx.freshName("r")
+          s"""${CodeGenerator.boxedType(dataType)} $r = $call;
+             |if ($r != null) { ${ev.isNull} = false; ${ev.value} = $r; }""".stripMargin
+        }
+      // evaluate each child only while the ones before it are non-null
+      val body = gens.zip(children).foldRight(set) { case ((g, c), inner) =>
+        s"${g.code}\n${ctx.nullSafeExec(nullIntolerant && c.nullable, g.isNull)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $decl
+        $body""")
+    }
+  }
+}
+
+/** cosine(a, b) over array<double>, one pass. Bit-identical to the
+  * sequential-fold formulation (same accumulation order), so DuckDB
+  * oracle parity is preserved. */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ComputeCodegen {
 
   // expects array<double>, array<double> — constructed via the typed
   // Column wrappers below (AbstractDataType is private[sql] in Spark 4,
@@ -35,9 +85,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  def compute(xs: ArrayData, ys: ArrayData): Double = {
     if (xs.numElements() != ys.numElements())
       throw new IllegalArgumentException(
         s"cosine_sim: dimension mismatch ${xs.numElements()} vs ${ys.numElements()}")
@@ -56,31 +107,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "cosine_sim: dimension mismatch " + $a.numElements() + " vs " + $b.numElements());
-         |}
-         |int $n = $a.numElements();
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,
@@ -101,21 +127,13 @@ case class CosineSimilarity(left: Expression, right: Expression)
 case class PqEncodeExpr(
     child: Expression,
     codebooks: Array[Array[Array[Double]]]
-) extends UnaryExpression {
+) extends UnaryExpression with ComputeCodegen {
 
   override def dataType: DataType = ArrayType(LongType)
   override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen — the per-row m·k·w distance loop stays one
-  // JVM method, but the scan stage keeps whole-stage codegen (the
-  // CodegenFallback mixin un-fused it)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEncode", this, classOf[PqEncodeExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(a: ArrayData): ArrayData = {
     val xs = a
@@ -160,19 +178,13 @@ case class PqAdcDistExpr(
     left: Expression,
     right: Expression,
     codebooks: Array[Array[Array[Double]]]
-) extends BinaryExpression {
+) extends BinaryExpression with ComputeCodegen {
 
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(q: Any, code: Any): Any =
     compute(q.asInstanceOf[ArrayData], code.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen (see PqEncodeExpr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqAdcDist", this, classOf[PqAdcDistExpr].getName)
-    nullSafeCodeGen(ctx, ev, (q, c) => s"${ev.value} = $ref.compute($q, $c);")
-  }
 
   def compute(q: ArrayData, code: ArrayData): Double = {
     val qs = q
@@ -214,7 +226,7 @@ case class PqAdcDistExpr(
   * whole-array window when n < w, and null grams never displacing the
   * accumulator. */
 case class WinnowSelectExpr(child: Expression, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
 
   require(w >= 1, s"window must be >= 1, got $w")
 
@@ -226,13 +238,6 @@ case class WinnowSelectExpr(child: Expression, w: Int)
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen — keeps the gram-hash scan stage whole-stage
-  // codegen'd (CodegenFallback un-fused it)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnowSelect", this, classOf[WinnowSelectExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(a: ArrayData): ArrayData = {
     val grams = a
@@ -310,7 +315,7 @@ private[functions] object NgramCharStats {
   * `top.c * top.l` column it replaces. 0 when fewer than n words
   * (callers guard with `when(size(words) >= n, ...)` anyway). */
 case class TopNgramCharsExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(n >= 1, s"n must be >= 1, got $n")
 
   override def dataType: DataType = IntegerType
@@ -318,13 +323,6 @@ case class TopNgramCharsExpr(child: Expression, n: Int)
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen — keeps the Gopher gate's scan projection
-  // whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("topNgramChars", this, classOf[TopNgramCharsExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(a: ArrayData): Int = {
     val counts = NgramCharStats.gramCounts(a, n)
@@ -352,7 +350,7 @@ case class TopNgramCharsExpr(child: Expression, n: Int)
   * [[graft.operators.GopherQuality]], per-gram int multiply then the
   * long cast exactly like the `aggregate` fold it replaces. */
 case class DupNgramCharsExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(n >= 1, s"n must be >= 1, got $n")
 
   override def dataType: DataType = LongType
@@ -360,12 +358,6 @@ case class DupNgramCharsExpr(child: Expression, n: Int)
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen (see TopNgramCharsExpr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dupNgramChars", this, classOf[DupNgramCharsExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(a: ArrayData): Long = {
     val counts = NgramCharStats.gramCounts(a, n)
@@ -386,19 +378,13 @@ case class DupNgramCharsExpr(child: Expression, n: Int)
 /** run_length_ranges(mask, fill): positions where mask == fill, grouped
   * into consecutive [start, end) runs — array<array<long>>. */
 case class RunLengthRanges(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ComputeCodegen {
 
   override def dataType: DataType = ArrayType(ArrayType(LongType))
   override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(maskAny: Any, fillAny: Any): Any =
     compute(maskAny.asInstanceOf[ArrayData], fillAny.asInstanceOf[Long])
-
-  // r14: delegate codegen — keeps the masking scan whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("runLengthRanges", this, classOf[RunLengthRanges].getName)
-    nullSafeCodeGen(ctx, ev, (m, f) => s"${ev.value} = $ref.compute($m, $f);")
-  }
 
   def compute(maskAny: ArrayData, fillAny: Long): ArrayData = {
     val mask = maskAny
@@ -434,7 +420,7 @@ case class GreedyPackBreaks(
     first: Expression,
     second: Expression,
     third: Expression
-) extends TernaryExpression {
+) extends TernaryExpression with ComputeCodegen {
 
   override def dataType: DataType = ArrayType(LongType)
   override def nullIntolerant: Boolean = true
@@ -442,12 +428,6 @@ case class GreedyPackBreaks(
   override def nullSafeEval(lensAny: Any, maxCountAny: Any, maxLenAny: Any): Any =
     compute(lensAny.asInstanceOf[ArrayData], maxCountAny.asInstanceOf[Long],
       maxLenAny.asInstanceOf[Long])
-
-  // r14: delegate codegen — keeps the packing scan whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("greedyPackBreaks", this, classOf[GreedyPackBreaks].getName)
-    nullSafeCodeGen(ctx, ev, (l, c, m) => s"${ev.value} = $ref.compute($l, $c, $m);")
-  }
 
   def compute(lensAny: ArrayData, maxCountAny: Long, maxLenAny: Long): ArrayData = {
     val lens = lensAny
@@ -487,19 +467,13 @@ case class GreedyPackBreaks(
   * and 64 sign-counter updates. The HOF version allocated a 64-long
   * array per word per row. */
 case class SimHash64Expr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
 
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(wordsAny: Any): Any =
     compute(wordsAny.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen — keeps the scan stage whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhash64", this, classOf[SimHash64Expr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(wordsAny: ArrayData): Long = {
     val words = wordsAny
@@ -542,7 +516,7 @@ case class SimHash64Expr(child: Expression)
   * skipped, not null-propagated); an empty shingle array yields an
   * array of k nulls (array_min of empty). */
 case class MinHashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(numHashes > 0, "numHashes must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
@@ -550,13 +524,6 @@ case class MinHashSigExpr(child: Expression, numHashes: Int)
 
   override def nullSafeEval(shinglesAny: Any): Any =
     compute(shinglesAny.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen — keeps the signature scan whole-stage
-  // codegen'd (the per-shingle hash chain dwarfs one virtual call)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashSig", this, classOf[MinHashSigExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(shinglesAny: ArrayData): ArrayData = {
     val shingles = shinglesAny
@@ -599,7 +566,7 @@ case class MinHashSigExpr(child: Expression, numHashes: Int)
   * `least` skipping them (postings never contain nulls — collect_min_k
   * drops them — but the contract is pinned anyway). */
 case class PairCombosExpr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
 
   private def elemType: DataType = child.dataType match {
     case ArrayType(t, _) => t
@@ -619,11 +586,6 @@ case class PairCombosExpr(child: Expression)
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pairCombos", this, classOf[PairCombosExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(ids: ArrayData): ArrayData = {
     val n = ids.numElements()
@@ -677,7 +639,7 @@ case class PairCombosExpr(child: Expression)
   * n` is null → false) and yields `[""]`; any array shorter than n
   * (including empty) yields the single whole-text join. */
 case class WordShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(n >= 1, s"n must be >= 1, got $n")
 
   // both HOF branches produce non-null elements (concat_ws never
@@ -691,26 +653,6 @@ case class WordShinglesExpr(child: Expression, n: Int)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     compute(if (v == null) null else v.asInstanceOf[ArrayData])
-  }
-
-  // null INPUT still produces a value ([""]), so the null check is
-  // folded into compute rather than nullSafeCodeGen. isNull MUST be
-  // replaced by FalseLiteral: the default ev.isNull is an undeclared
-  // fresh variable name, and a consumer that references it (Generate,
-  // interpreted-projection codegen) fails to COMPILE and silently
-  // falls back to interpreted eval.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val ref = ctx.addReferenceObj("wordShingles", this, classOf[WordShinglesExpr].getName)
-    val childGen = child.genCode(ctx)
-    val in = ctx.freshName("in")
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData $in =
-        ${childGen.isNull} ? null : ${childGen.value};
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = $ref.compute($in);
-      """, isNull = FalseLiteral)
   }
 
   def compute(words: ArrayData): ArrayData = {
@@ -760,7 +702,7 @@ case class WordShinglesExpr(child: Expression, n: Int)
   * ~16^-zeroNibbles of windows that pass, and the per-doc dedup is a
   * hash set — no explode, no shuffle, same output set. */
 case class Md5WindowFpExpr(child: Expression, width: Int, zeroNibbles: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(width >= 1, s"width must be >= 1, got $width")
   require(zeroNibbles >= 1 && zeroNibbles <= 32,
     s"zeroNibbles must be in [1, 32], got $zeroNibbles")
@@ -771,12 +713,10 @@ case class Md5WindowFpExpr(child: Expression, width: Int, zeroNibbles: Int)
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("md5WindowFps", this, classOf[Md5WindowFpExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-
   private val HEX = "0123456789abcdef".getBytes("US-ASCII")
+  // one digest per thread: digest() resets it between windows and rows
+  @transient private lazy val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
 
   def compute(text: UTF8String): ArrayData = {
     val bytes = text.getBytes
@@ -796,7 +736,7 @@ case class Md5WindowFpExpr(child: Expression, width: Int, zeroNibbles: Int)
       i += 1
     }
     offs(m) = nb
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = md5.get()
     val seen = new java.util.HashSet[UTF8String]()
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var w = 0
@@ -850,7 +790,7 @@ case class Md5WindowFpExpr(child: Expression, width: Int, zeroNibbles: Int)
   * the engine runs with, every derived fraction is then bit-identical
   * to the HOF chain (−1.0 bullet/ellipsis fractions, 0.0 dup
   * fractions). */
-case class LineStatsExpr(child: Expression) extends UnaryExpression {
+case class LineStatsExpr(child: Expression) extends UnaryExpression with ComputeCodegen {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_lines", IntegerType, nullable = false),
@@ -864,22 +804,6 @@ case class LineStatsExpr(child: Expression) extends UnaryExpression {
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     compute(if (v == null) null else v.asInstanceOf[UTF8String])
-  }
-
-  // see WordShinglesExpr.doGenCode for why isNull = FalseLiteral is
-  // load-bearing here
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val ref = ctx.addReferenceObj("lineStats", this, classOf[LineStatsExpr].getName)
-    val childGen = child.genCode(ctx)
-    val in = ctx.freshName("in")
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.unsafe.types.UTF8String $in =
-        ${childGen.isNull} ? null : ${childGen.value};
-      InternalRow ${ev.value} = $ref.compute($in);
-      """, isNull = FalseLiteral)
   }
 
   private val NULL_ROW = InternalRow(-1, -1, -1, 0, -1, 0)
@@ -961,7 +885,7 @@ case class CdcBoundariesExpr(
     window: Int,
     divisor: Long,
     mod: Long
-) extends UnaryExpression {
+) extends UnaryExpression with ComputeCodegen {
   require(window >= 2 && divisor >= 2 && mod >= 2)
 
   override def dataType: DataType = ArrayType(LongType)
@@ -976,12 +900,6 @@ case class CdcBoundariesExpr(
 
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
-
-  // r14: delegate codegen — keeps the chunker scan whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cdcBoundaries", this, classOf[CdcBoundariesExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(input: UTF8String): ArrayData = {
     val s = input.toString
@@ -1013,24 +931,26 @@ case class CdcBoundariesExpr(
 }
 
 /** dot_product(a, b): sequential left-fold dot over two array<double>
-  * columns with REAL whole-stage codegen — the bit-exact native twin of
-  * the `aggregate(zip_with(a, b, _*_), 0.0, _+_)` HOF (ascending adds,
-  * same IEEE sequence), including its null contract: zip_with pads the
+  * columns — the bit-exact native twin of the `aggregate(zip_with(a, b,
+  * _*_), 0.0, _+_)` HOF (ascending adds, same IEEE sequence),
+  * including its null contract: zip_with pads the
   * shorter array with nulls and the fold nulls out on the first null
   * product, so mismatched lengths or any null element yield NULL.
   * Callers embed it in their own cosine/ppm arithmetic unchanged —
   * this kernel deliberately does NOT refactor `(1e6·dot)/(√·√)`-style
   * orderings the way [[CosineSimilarity]] would. */
 case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ComputeCodegen {
 
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean = true
+  override protected def computeMayReturnNull: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  def compute(xs: ArrayData, ys: ArrayData): java.lang.Double = {
     if (xs.numElements() != ys.numElements()) return null
     val n = xs.numElements()
     var acc = 0.0
@@ -1042,24 +962,6 @@ case class DotProductExpr(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |${ev.value} = 0.0;
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    ${ev.value} += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,
@@ -1080,7 +982,7 @@ case class PcaProjectExpr(
     child: Expression,
     weights: Array[Array[Double]],
     means: Array[Double]
-) extends UnaryExpression {
+) extends UnaryExpression with ComputeCodegen {
   require(weights.nonEmpty && weights.forall(_.length == means.length),
     "pca_project: weight rows must match means length")
 
@@ -1089,14 +991,6 @@ case class PcaProjectExpr(
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  // r14: delegate codegen — keeps the embedding scan's whole-stage
-  // codegen span intact (CodegenFallback un-fused it); the d×k flops
-  // dwarf the one virtual call per row
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pcaProject", this, classOf[PcaProjectExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(a: ArrayData): ArrayData = {
     val xs = a
@@ -1128,17 +1022,68 @@ case class PcaProjectExpr(
     copy(child = newChild)
 }
 
+/** Character n-grams over CODE POINTS and their Cavnar–Trenkle
+  * ranking, shared by [[CharNgramsExpr]], [[TopNgramsRankedExpr]] and
+  * [[CtClassifyExpr]]. */
+private[functions] object CharGrams {
+  /** The substrings of `n` consecutive code points of `s`, in order
+    * (surrogate pairs never split). Fewer than n code points yields
+    * none, except that Spark's StringSplit special-cases the empty
+    * regex: splitting the EMPTY string yields [""], so the HOF emits one
+    * empty gram at n = 1. (Raw Java `"".split("", -1)` is [] and
+    * non-empty strings get a trailing "" — the behaviour matched is
+    * Spark's, the engine the HOF formulation ran on.) */
+  def of(s: String, n: Int): Array[String] = {
+    val m = s.codePointCount(0, s.length)
+    if (m == 0) return if (n == 1) Array("") else Array.empty
+    if (m < n) return Array.empty
+    val offs = new Array[Int](m + 1)
+    var ci = 0
+    var off = 0
+    while (off < s.length) {
+      offs(ci) = off
+      off += Character.charCount(s.codePointAt(off))
+      ci += 1
+    }
+    offs(m) = s.length
+    Array.tabulate(m - n + 1)(i => s.substring(offs(i), offs(i + n)))
+  }
+
+  /** The `topN` most frequent distinct grams of `s`, rank order: count
+    * descending, then gram ascending in UTF8String's BINARY order
+    * (Spark's string ordering — String.compareTo's UTF-16 order differs
+    * around supplementary characters). Exactly the groupBy + row_number
+    * `ORDER BY count DESC, gram` it replaces. */
+  def ranked(s: String, n: Int, topN: Int): Array[UTF8String] = {
+    val counts = new java.util.HashMap[String, Array[Int]]()
+    for (g <- of(s, n)) {
+      val c = counts.get(g)
+      if (c == null) counts.put(g, Array(1)) else c(0) += 1
+    }
+    val entries = new Array[(UTF8String, Int)](counts.size())
+    val it = counts.entrySet().iterator()
+    var k = 0
+    while (it.hasNext) {
+      val e = it.next()
+      entries(k) = (UTF8String.fromString(e.getKey), e.getValue()(0))
+      k += 1
+    }
+    java.util.Arrays.sort(entries, new java.util.Comparator[(UTF8String, Int)] {
+      override def compare(x: (UTF8String, Int), y: (UTF8String, Int)): Int =
+        if (x._2 != y._2) Integer.compare(y._2, x._2) else x._1.compareTo(y._1)
+    })
+    entries.iterator.take(topN).map(_._1).toArray
+  }
+}
+
 /** char_ngrams(text, n): sliding character n-grams over CODE POINTS —
   * the native twin of `flatten(transform(array(split(text, "")), ch =>
   * transform(sequence(1, size-n+1), i => concat(element_at...))))`
   * (LangIdNgram's formulation): one pass over the string replaces a
   * per-row array of 1-char strings plus an interpreted concat per gram.
-  * Same contract: fewer than n code points (incl. the empty string)
-  * yields [], grams are substrings of n consecutive code points
-  * (surrogate pairs never split — Java's empty-pattern split can't
-  * match between surrogates either). Lower-casing stays OUTSIDE. */
+  * Same contract ([[CharGrams.of]]). Lower-casing stays OUTSIDE. */
 case class CharNgramsExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(n >= 1, s"n must be >= 1, got $n")
 
   // containsNull=true matches the HOF's `array().cast("array<string>")`
@@ -1149,45 +1094,8 @@ case class CharNgramsExpr(child: Expression, n: Int)
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[UTF8String])
 
-  // r14: delegate codegen — keeps the gram scan whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("charNgrams", this, classOf[CharNgramsExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-
-  def compute(a: UTF8String): ArrayData = {
-    val s = a.toString
-    // char offsets of each code point boundary
-    val m = s.codePointCount(0, s.length)
-    // Spark's StringSplit special-cases the empty regex: splitting the
-    // EMPTY string yields [""] — one empty element — so the HOF emits
-    // one empty gram at n=1; replicate it. (Raw Java String.split
-    // behaves differently — ""."split("", -1) is [] on this JVM and
-    // non-empty strings get a trailing "" — the behavior matched here
-    // is Spark's UTF8String.split/StringSplit path, the engine the HOF
-    // formulation actually ran on.)
-    if (m == 0) {
-      return new GenericArrayData(
-        if (n == 1) Array[Any](UTF8String.EMPTY_UTF8) else Array.empty[Any])
-    }
-    if (m < n) return new GenericArrayData(Array.empty[Any])
-    val offs = new Array[Int](m + 1)
-    var ci = 0
-    var off = 0
-    while (off < s.length) {
-      offs(ci) = off
-      off += Character.charCount(s.codePointAt(off))
-      ci += 1
-    }
-    offs(m) = s.length
-    val out = new Array[Any](m - n + 1)
-    var i = 0
-    while (i <= m - n) {
-      out(i) = UTF8String.fromString(s.substring(offs(i), offs(i + n)))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  def compute(a: UTF8String): ArrayData =
+    new GenericArrayData(CharGrams.of(a.toString, n).map(g => UTF8String.fromString(g): Any))
 
   override protected def withNewChildInternal(newChild: Expression): CharNgramsExpr =
     copy(child = newChild)
@@ -1200,12 +1108,10 @@ case class CharNgramsExpr(child: Expression, n: Int)
   * unit's text, so this kernel computes it row-locally: the SQL
   * formulation it replaces exploded every gram occurrence, shuffled a
   * corpus-sized (unit, gram) count aggregation, and ranked with a
-  * per-unit window (a second exchange + sort). Gram enumeration is
-  * [[CharNgramsExpr]]'s (code points, empty-string edge); counting and
-  * the (count desc, gram asc) rank replicate the groupBy + row_number
-  * exactly. */
+  * per-unit window (a second exchange + sort). Enumeration and rank
+  * order are [[CharGrams.ranked]]'s. */
 case class TopNgramsRankedExpr(child: Expression, n: Int, topN: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ComputeCodegen {
   require(n >= 1 && topN >= 1, s"need n >= 1 and topN >= 1, got n=$n topN=$topN")
 
   override def dataType: DataType = ArrayType(
@@ -1217,64 +1123,10 @@ case class TopNgramsRankedExpr(child: Expression, n: Int, topN: Int)
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[UTF8String])
 
-  // r14: delegate codegen — keeps the profile-training scan stage
-  // whole-stage codegen'd
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("topNgramsRanked", this, classOf[TopNgramsRankedExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-
   def compute(a: UTF8String): ArrayData = {
-    val s = a.toString
-    val m = s.codePointCount(0, s.length)
-    val counts = new java.util.HashMap[String, Array[Int]]()
-    if (m == 0) {
-      if (n == 1) counts.put("", Array(1))
-    } else if (m >= n) {
-      val offs = new Array[Int](m + 1)
-      var ci = 0
-      var off = 0
-      while (off < s.length) {
-        offs(ci) = off
-        off += Character.charCount(s.codePointAt(off))
-        ci += 1
-      }
-      offs(m) = s.length
-      var i = 0
-      while (i <= m - n) {
-        val g = s.substring(offs(i), offs(i + n))
-        val c = counts.get(g)
-        if (c == null) counts.put(g, Array(1)) else c(0) += 1
-        i += 1
-      }
-    }
-    if (counts.isEmpty) return new GenericArrayData(Array.empty[Any])
-    val entries = new Array[(UTF8String, Int)](counts.size())
-    val it = counts.entrySet().iterator()
-    var k = 0
-    while (it.hasNext) {
-      val e = it.next()
-      entries(k) = (UTF8String.fromString(e.getKey), e.getValue()(0))
-      k += 1
-    }
-    // (count desc, gram asc) — exactly the row_number window's ORDER BY;
-    // the gram tie-break must be UTF8String's BINARY order (Spark's
-    // string ordering), not String.compareTo's UTF-16 code-unit order —
-    // they differ around supplementary characters
-    java.util.Arrays.sort(entries, new java.util.Comparator[(UTF8String, Int)] {
-      override def compare(x: (UTF8String, Int), y: (UTF8String, Int)): Int = {
-        if (x._2 != y._2) Integer.compare(y._2, x._2)
-        else x._1.compareTo(y._1)
-      }
-    })
-    val take = math.min(topN, entries.length)
-    val out = new Array[Any](take)
-    var r = 0
-    while (r < take) {
-      out(r) = InternalRow(entries(r)._1, (r + 1).toLong)
-      r += 1
-    }
-    new GenericArrayData(out)
+    val grams = CharGrams.ranked(a.toString, n, topN)
+    new GenericArrayData(Array.tabulate[Any](grams.length)(r =>
+      InternalRow(grams(r), (r + 1).toLong)))
   }
 
   override protected def withNewChildInternal(newChild: Expression): TopNgramsRankedExpr =
@@ -1292,9 +1144,9 @@ case class TopNgramsRankedExpr(child: Expression, n: Int, topN: Int)
   * is a pure function of the row: the SQL formulation it replaces paid
   * a gram explode, a crossJoin with the language list, a broadcast
   * profile join and two aggregations, plus the join back to the input.
-  * Gram enumeration/ranking is [[TopNgramsRankedExpr]]'s; the distance
-  * replays the `sum(when(rank.isNull, topN).otherwise(abs(dr − pr)))`
-  * aggregation exactly (integer arithmetic, order-independent). */
+  * Gram ranking is [[CharGrams.ranked]]'s; the distance replays the
+  * `sum(when(rank.isNull, topN).otherwise(abs(dr − pr)))` aggregation
+  * exactly (integer arithmetic, order-independent). */
 case class CtClassifyExpr(
     child: Expression,
     n: Int,
@@ -1302,7 +1154,7 @@ case class CtClassifyExpr(
     langs: Array[String],          // ascending binary (UTF8String) order
     profGrams: Array[String],
     profRanks: Array[Array[Long]]  // profRanks(gi)(li), -1 = absent
-) extends UnaryExpression {
+) extends UnaryExpression with ComputeCodegen {
   require(n >= 1 && topN >= 1)
   require(profGrams.length == profRanks.length)
 
@@ -1311,11 +1163,12 @@ case class CtClassifyExpr(
     StructField("d", LongType, nullable = false)))
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean = true
+  override protected def computeMayReturnNull: Boolean = true
 
-  @transient private lazy val gramIdx: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
+  @transient private lazy val gramIdx: java.util.HashMap[UTF8String, Integer] = {
+    val m = new java.util.HashMap[UTF8String, Integer]()
     var i = 0
-    while (i < profGrams.length) { m.put(profGrams(i), i); i += 1 }
+    while (i < profGrams.length) { m.put(UTF8String.fromString(profGrams(i)), i); i += 1 }
     m
   }
   @transient private lazy val langUtf8: Array[UTF8String] =
@@ -1324,65 +1177,15 @@ case class CtClassifyExpr(
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[UTF8String])
 
-  // r14: delegate codegen — classify stays ONE whole-stage-codegen'd
-  // projection over the corpus scan (CodegenFallback un-fused it).
-  // compute may return null (no grams — the caller's 'und' case), so
-  // the generated code re-checks for null.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ctClassify", this, classOf[CtClassifyExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"""
-      ${ev.value} = $ref.compute($a);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
-
   def compute(a: UTF8String): InternalRow = {
-    val s = a.toString
-    val m = s.codePointCount(0, s.length)
-    val counts = new java.util.HashMap[String, Array[Int]]()
-    if (m == 0) {
-      if (n == 1) counts.put("", Array(1))
-    } else if (m >= n) {
-      val offs = new Array[Int](m + 1)
-      var ci = 0
-      var off = 0
-      while (off < s.length) {
-        offs(ci) = off
-        off += Character.charCount(s.codePointAt(off))
-        ci += 1
-      }
-      offs(m) = s.length
-      var i = 0
-      while (i <= m - n) {
-        val g = s.substring(offs(i), offs(i + n))
-        val c = counts.get(g)
-        if (c == null) counts.put(g, Array(1)) else c(0) += 1
-        i += 1
-      }
-    }
-    if (counts.isEmpty) return null
-    val entries = new Array[(UTF8String, Int, String)](counts.size())
-    val it = counts.entrySet().iterator()
-    var k = 0
-    while (it.hasNext) {
-      val e = it.next()
-      entries(k) = (UTF8String.fromString(e.getKey), e.getValue()(0), e.getKey)
-      k += 1
-    }
-    // (count desc, gram asc in BINARY order) — the docTop rank order
-    java.util.Arrays.sort(entries, new java.util.Comparator[(UTF8String, Int, String)] {
-      override def compare(x: (UTF8String, Int, String), y: (UTF8String, Int, String)): Int = {
-        if (x._2 != y._2) Integer.compare(y._2, x._2)
-        else x._1.compareTo(y._1)
-      }
-    })
-    val take = math.min(topN, entries.length)
+    val grams = CharGrams.ranked(a.toString, n, topN)
+    if (grams.isEmpty) return null
     val nl = langs.length
     val dist = new Array[Long](nl)
     var r = 0
-    while (r < take) {
+    while (r < grams.length) {
       val dr = (r + 1).toLong
-      val gi = gramIdx.get(entries(r)._3)
+      val gi = gramIdx.get(grams(r))
       if (gi == null) {
         var li = 0
         while (li < nl) { dist(li) += topN.toLong; li += 1 }
@@ -1422,12 +1225,9 @@ case class CtClassifyExpr(
   * need the builtin's NaN/-0.0 normalization) — enforced by
   * [[checkInputDataTypes]]: `getUTF8String` over any other element
   * layout would silently return garbage where `size(array_intersect)`
-  * fails analysis. r14: real `doGenCode` (was CodegenFallback, which
-  * disables whole-stage codegen for the entire verify stage it sits
-  * in — one fallback expression un-fuses the surrounding join's
-  * probe/filter pipeline). */
+  * fails analysis. */
 case class IntersectSizeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ComputeCodegen {
 
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
@@ -1445,9 +1245,10 @@ case class IntersectSizeExpr(left: Expression, right: Expression)
         s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  def compute(xs: ArrayData, ys: ArrayData): Int = {
     val bSet = new java.util.HashSet[UTF8String]()
     var bHasNull = false
     var i = 0
@@ -1472,38 +1273,6 @@ case class IntersectSizeExpr(left: Expression, right: Expression)
     }
     count
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val bSet = ctx.freshName("bSet")
-      val bHasNull = ctx.freshName("bHasNull")
-      val seen = ctx.freshName("seen")
-      val countedNull = ctx.freshName("countedNull")
-      val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val v = ctx.freshName("v")
-      s"""
-         |java.util.HashSet $bSet = new java.util.HashSet();
-         |boolean $bHasNull = false;
-         |for (int $i = 0; $i < $b.numElements(); $i++) {
-         |  if ($b.isNullAt($i)) { $bHasNull = true; }
-         |  else { $bSet.add($b.getUTF8String($i)); }
-         |}
-         |java.util.HashSet $seen = new java.util.HashSet();
-         |boolean $countedNull = false;
-         |int $cnt = 0;
-         |for (int $j = 0; $j < $a.numElements(); $j++) {
-         |  if ($a.isNullAt($j)) {
-         |    if ($bHasNull && !$countedNull) { $cnt++; $countedNull = true; }
-         |  } else {
-         |    org.apache.spark.unsafe.types.UTF8String $v = $a.getUTF8String($j);
-         |    if ($bSet.contains($v) && $seen.add($v)) { $cnt++; }
-         |  }
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,
@@ -1543,17 +1312,12 @@ case class IntersectSizeExpr(left: Expression, right: Expression)
   * unaffected. A null ELEMENT inside a non-null embedding poisons the
   * running sums through `getDouble` returning 0 in the same way the
   * HOF's zip_with/aggregate arithmetic did for its own accumulators —
-  * the catalog's embeddings are containsNull=false either way.
-  *
-  * r14: `doGenCode` delegates the loop to [[compute]] via a codegen
-  * reference — one virtual call per row (negligible next to K·d flops)
-  * in exchange for NOT breaking the whole-stage-codegen span of the
-  * embedding scan the way CodegenFallback did. */
+  * the catalog's embeddings are containsNull=false either way. */
 case class ArgMaxCosineExpr(
     child: Expression,
     centroids: Array[Array[Double]],
     scale: Long = 0L
-) extends UnaryExpression {
+) extends UnaryExpression with ComputeCodegen {
   require(centroids.nonEmpty, "argmax_cosine: empty centroid set")
 
   override def dataType: DataType = StructType(Seq(
@@ -1563,11 +1327,6 @@ case class ArgMaxCosineExpr(
 
   override protected def nullSafeEval(a: Any): Any =
     compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("argmaxCosine", this, classOf[ArgMaxCosineExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   def compute(a: ArrayData): InternalRow = {
     val xs = a
@@ -1611,7 +1370,6 @@ case class ArgMaxCosineExpr(
     copy(child = newChild)
 }
 
-/** Column-API wrappers. */
 /** interleave_bits(c1, c2[, c3], bits): Morton / Z-order interleave of
   * the low `bits` bits of 2-3 non-negative long columns into one long —
   * bit b of child i lands at position `b·n + i`. The data-layout
@@ -1620,11 +1378,11 @@ case class ArgMaxCosineExpr(
   * rows close in EVERY dimension land in the same file, so per-file
   * min/max statistics prune scans for predicates on ANY prefix-free
   * combination of the dimensions — the thing a single-column sort can
-  * only give you for its leading column. Pure long arithmetic with
-  * real whole-stage codegen; higher bits than `bits` are ignored
+  * only give you for its leading column. Pure long arithmetic; higher
+  * bits than `bits` are ignored
   * (callers bucket/normalize first). */
 case class InterleaveBitsExpr(children: Seq[Expression], bits: Int)
-    extends Expression {
+    extends Expression with ComputeCodegen {
   require(children.size >= 2 && children.size <= 3,
     s"interleave_bits takes 2 or 3 columns, got ${children.size}")
   require(bits >= 1 && children.size * bits <= 63,
@@ -1632,46 +1390,33 @@ case class InterleaveBitsExpr(children: Seq[Expression], bits: Int)
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = children.exists(_.nullable)
+  override def nullIntolerant: Boolean = true
 
   override def eval(input: InternalRow): Any = {
-    val n = children.size
-    var z = 0L
+    val xs = new Array[Long](3)
     var i = 0
-    while (i < n) {
+    while (i < children.size) {
       val v = children(i).eval(input)
       if (v == null) return null
-      val x = v.asInstanceOf[Long]
-      var b = 0
-      while (b < bits) {
-        z |= ((x >>> b) & 1L) << (b * n + i)
-        b += 1
-      }
+      xs(i) = v.asInstanceOf[Long]
       i += 1
     }
-    z
+    compute(xs(0), xs(1), xs(2))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evals = children.map(_.genCode(ctx))
+  def compute(x: Long, y: Long): Long = compute(x, y, 0L)
+
+  /** `z` is ignored with two children. */
+  def compute(x: Long, y: Long, z: Long): Long = {
     val n = children.size
-    val b = ctx.freshName("b")
-    val nullCond = evals.map(_.isNull.toString).mkString(" || ")
-    val body = evals.zipWithIndex
-      .map { case (e, i) =>
-        s"${ev.value} |= ((${e.value} >>> $b) & 1L) << ($b * $n + $i);"
-      }
-      .mkString("\n")
-    val childCode = evals.map(_.code).reduce(_ + _)
-    ev.copy(code = code"""
-      $childCode
-      boolean ${ev.isNull} = $nullCond;
-      long ${ev.value} = 0L;
-      if (!${ev.isNull}) {
-        for (int $b = 0; $b < $bits; $b++) {
-          $body
-        }
-      }""")
+    var out = 0L
+    var b = 0
+    while (b < bits) {
+      out |= ((x >>> b) & 1L) << (b * n) | ((y >>> b) & 1L) << (b * n + 1)
+      if (n == 3) out |= ((z >>> b) & 1L) << (b * n + 2)
+      b += 1
+    }
+    out
   }
 
   override protected def withNewChildrenInternal(
@@ -1679,6 +1424,7 @@ case class InterleaveBitsExpr(children: Seq[Expression], bits: Int)
     copy(children = newChildren)
 }
 
+/** Column-API wrappers. */
 object functions {
   def simhash64(words: Column): Column =
     toCol(SimHash64Expr(expression(words)))

@@ -983,10 +983,6 @@ object CosineKnn {
   def dot(a: Column, b: Column): Column =
     graft.functions.functions.dot_product(a, b)
 
-  /** The pre-r13 HOF formulation — parity-spec reference only. */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** Native one-pass codegen'd kernel ([[graft.functions.CosineSimilarity]]);
     * bit-identical to dot/(sqrt·sqrt) of sequential folds. */
   def cosine(a: Column, b: Column): Column =

@@ -69,8 +69,9 @@ class ExpressionSpec extends SparkSpec {
       transform(sequence(lit(0L), lit(7L)), i => (col("id") + i).cast(DoubleType)).as("a")
     ).select(gf.cosine_sim(col("a"), col("a")).as("c"))
     val gen = codegenString(df.queryExecution.executedPlan)
-    // our template's distinctive shape: the fused dot+norm loop
-    assert(gen.contains("Math.sqrt"), gen.take(400))
+    // the whole-stage-generated code calls the kernel's one `compute`
+    assert("""graft\.functions\.CosineSimilarity\) references\[\d+\][^\n]*\)\.compute\(""".r
+      .findFirstIn(gen).isDefined, gen.take(2000))
     assert(df.collect().forall(r => math.abs(r.getDouble(0) - 1.0) < 1e-12))
   }
 

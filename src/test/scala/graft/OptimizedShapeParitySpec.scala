@@ -552,9 +552,10 @@ class OptimizedShapeParitySpec extends SparkSpec {
     assert(nulled.filter(col("id") === 0L && col("b").isNull).count() === 0)
   }
 
-  test("dot_product matches the zip_with/aggregate HOF (mismatched lengths, null elements, empty)") {
-    import graft.functions.functions.dot_product
-    val rows = (0L until 200L).map { r =>
+  /** dot_product inputs: 1/5 of the rows have mismatched lengths, 1/11
+    * of the elements are null, lengths 0-5. */
+  private def dotRows: Seq[(Long, Seq[java.lang.Double], Seq[java.lang.Double])] =
+    (0L until 200L).map { r =>
       def arr(salt: Long, n: Long) = (0L until n).map { i =>
         val v = det(r * 7 + i, salt)
         if (v % 11 == 0) null else java.lang.Double.valueOf((v % 500).toDouble / 100.0)
@@ -563,11 +564,27 @@ class OptimizedShapeParitySpec extends SparkSpec {
       val nb = if (r % 5 == 0) (det(r, 52) % 6 + 6) % 6 else na // 1/5 mismatched
       (r, arr(53, na), arr(54, nb))
     }
-    val df = rows.toDF("id", "a", "b")
-    val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
+
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  /** intersect_size inputs: duplicates, null elements, empty arrays. */
+  private def intersectRows: Seq[(Long, Seq[String], Seq[String])] = {
+    val vocab = Seq("x", "yy", "zzz", "x", null, "w", "日本")
+    (0L until 300L).map { r =>
+      def arr(salt: Long) = {
+        val n = (det(r, salt) % 8 + 8) % 8
+        (0L until n).map(i => vocab(((det(r * 11 + i, salt + 1) % 7 + 7) % 7).toInt))
+      }
+      (r, arr(71), arr(73))
+    }
+  }
+
+  test("dot_product matches the zip_with/aggregate HOF (mismatched lengths, null elements, empty)") {
+    import graft.functions.functions.dot_product
+    val df = dotRows.toDF("id", "a", "b")
     val both = df
-      .withColumn("d_hof", hof)
+      .withColumn("d_hof", dotHof(col("a"), col("b")))
       .withColumn("d_nat", dot_product(col("a"), col("b")))
     assert(both.filter(!(col("d_hof") <=> col("d_nat"))).count() === 0,
       "dot_product diverged from the HOF fold (incl. null contract)")
@@ -637,20 +654,83 @@ class OptimizedShapeParitySpec extends SparkSpec {
 
   test("intersect_size matches size(array_intersect) (duplicates, nulls, empties)") {
     import graft.functions.functions.intersect_size
-    val vocab = Seq("x", "yy", "zzz", "x", null, "w", "日本")
-    val rows = (0L until 300L).map { r =>
-      def arr(salt: Long) = {
-        val n = (det(r, salt) % 8 + 8) % 8
-        (0L until n).map(i => vocab(((det(r * 11 + i, salt + 1) % 7 + 7) % 7).toInt))
-      }
-      (r, arr(71), arr(73))
-    }
-    val df = rows.toDF("id", "a", "b")
+    val df = intersectRows.toDF("id", "a", "b")
     val both = df
       .withColumn("s_ref", size(array_intersect(col("a"), col("b"))))
       .withColumn("s_nat", intersect_size(col("a"), col("b")))
     assert(both.filter(!(col("s_ref") <=> col("s_nat"))).count() === 0,
       "intersect_size diverged from size(array_intersect)")
+  }
+
+  test("cosine_sim, dot_product, intersect_size, interleave_bits: generated and interpreted code equal the reference") {
+    import graft.functions.functions.{cosine_sim, dot_product, interleave_bits, intersect_size}
+    // the kernels' inputs come from a local relation; with
+    // ConvertToLocalRelation excluded the projection runs as a plan
+    // node, so the factory mode decides which code computes it
+    // (without it, the optimizer evaluates the projection itself,
+    // interpreted, whatever the mode)
+    val modes = Seq(
+      Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.fallback" -> "false"),
+      Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    val vecs = dotRows.toDF("id", "a", "b")
+    // cosine_sim's domain: equal lengths, no null elements (incl. empties)
+    val cos = dotRows
+      .filter { case (_, a, b) => a.size == b.size && !a.contains(null) && !b.contains(null) }
+      .toDF("id", "a", "b")
+    val sets = intersectRows.toDF("id", "a", "b")
+    val ints = (0L until 200L).map { r =>
+      def v(salt: Long): java.lang.Long =
+        if (det(r, salt) % 13 == 0) null else java.lang.Long.valueOf(det(r, salt + 1) >>> 1)
+      (r, v(101), v(103), v(105))
+    }.toDF("id", "x", "y", "w")
+    def sumSq(a: Column) = aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x)
+    // the kernel divides in IEEE doubles: 0/0 is NaN where Spark's `/` gives null
+    def ieeeDiv(n: Column, d: Column) = when(d === 0.0, lit(Double.NaN)).otherwise(n / d)
+    def morton(cs: Seq[Column], bits: Int): Column =
+      (for (b <- 0 until bits; (c, i) <- cs.zipWithIndex)
+        yield shiftLeft(shiftRightUnsigned(c, b).bitwiseAND(lit(1L)), b * cs.size + i))
+        .reduce(_.bitwiseOR(_))
+    val (a, b) = (col("a"), col("b"))
+    val (x, y, w) = (col("x"), col("y"), col("w"))
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, Column, Column)] = Seq(
+      ("dot_product", vecs, dot_product(a, b), dotHof(a, b)),
+      ("cosine_sim", cos, cosine_sim(a, b),
+        ieeeDiv(dotHof(a, b), sqrt(sumSq(a)) * sqrt(sumSq(b)))),
+      ("intersect_size", sets, intersect_size(a, b), size(array_intersect(a, b))),
+      ("interleave_bits/2", ints, interleave_bits(Seq(x, y), 21), morton(Seq(x, y), 21)),
+      ("interleave_bits/3", ints, interleave_bits(Seq(x, y, w), 9), morton(Seq(x, y, w), 9)))
+    // doubles compare by bits, so NaN equals NaN and -0.0 differs from 0.0
+    def key(v: Any): Any = v match {
+      case d: java.lang.Double => java.lang.Double.doubleToLongBits(d)
+      case o => o
+    }
+    def run(df: org.apache.spark.sql.DataFrame, c: Column): Map[Long, Any] =
+      df.select(col("id"), c).collect().map(r => r.getLong(0) -> key(r.get(1))).toMap
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    try {
+      modes.foreach { conf =>
+        val mode = conf("spark.sql.codegen.factoryMode")
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        try {
+          cases.foreach { case (name, df, kernel, ref) =>
+            val got = run(df, kernel)
+            val want = run(df, ref)
+            assert(got.size === df.count())
+            val diff = got.keys.toSeq.sorted.filter(id => got(id) != want(id))
+            if (diff.nonEmpty) fail(s"$name under $mode: ${diff.size} rows differ, e.g. " +
+              diff.take(5).map(id => s"id $id: ${got(id)} vs reference ${want(id)}").mkString(", "))
+          }
+          val mismatch = intercept[Exception](
+            vecs.filter(size(a) =!= size(b)).select(cosine_sim(a, b)).collect())
+          assert(Iterator.iterate[Throwable](mismatch)(_.getCause).takeWhile(_ != null)
+            .exists(e => String.valueOf(e.getMessage).contains("cosine_sim: dimension mismatch")),
+            s"cosine_sim under $mode: $mismatch")
+        } finally conf.keys.foreach(spark.conf.unset)
+      }
+    } finally spark.conf.unset(excluded)
   }
 
   test("pca_project matches the HOF projection (normal, wrong-length, null-element rows)") {

@@ -99,17 +99,27 @@ class PlanSpec extends SparkSpec {
         greedy_pack_breaks(transform(col("words"), w => length(w).cast("long")),
           lit(2L), lit(4L)).as("gp"),
         cdc_boundaries(col("text"), 4, 3L, 1000003L).as("cb"),
-        cosine_sim(col("vec"), col("vec")).as("cs"))
+        cosine_sim(col("vec"), col("vec")).as("cs"),
+        pair_combos(array(col("id"), col("id") + 1, col("id") + 2)).as("pc"),
+        top_ngrams_ranked(col("text"), 2, 3).as("tr"),
+        ct_classify(col("text"), 2, 3, Seq("de", "en"), Seq("li", "ne"),
+          Seq(Seq(1L, -1L), Seq(2L, 1L))).as("cc"),
+        interleave_bits(Seq(col("id"), col("id") + 1), 4).as("ib"))
       val rows = out.collect() // forces the generated class to COMPILE and run
       assert(rows.length === 50)
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("*(1) Project"),
         s"kernel projection fell out of whole-stage codegen:\n$plan")
-      // and a spot value-check through the CODEGEN path (eval-path
-      // parity is covered by OptimizedShapeParitySpec)
+      // and a spot value-check through the CODEGEN path (generated vs
+      // interpreted parity is OptimizedShapeParitySpec's "cosine_sim,
+      // dot_product, intersect_size, interleave_bits: generated and
+      // interpreted code equal the reference")
       val r = rows.find(_.getAs[Long]("id") == 0L).get
       assert(r.getAs[Int]("is") === 4) // distinct words: w1 w2 w3 w0
       assert(r.getAs[Double]("dp") === 5.0)
+      assert(r.getAs[Long]("ib") === 2L) // id 0, id + 1 = 1: y's bit 0 at position 1
+      assert(r.getAs[Seq[org.apache.spark.sql.Row]]("pc").map(p => (p.getLong(0), p.getLong(1))) ===
+        Seq((0L, 1L), (0L, 2L), (1L, 2L)))
       val ls = r.getAs[org.apache.spark.sql.Row]("ls")
       assert(ls.getAs[Int]("n_lines") === 4 && ls.getAs[Int]("n_bullet") === 1 &&
         ls.getAs[Int]("n_ellipsis") === 3 && ls.getAs[Int]("n_dup_lines") === 1 &&
