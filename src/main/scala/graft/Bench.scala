@@ -63,7 +63,7 @@ object Bench {
     val sideDir = java.nio.file.Paths.get("/tmp/graft_bench")
     java.nio.file.Files.createDirectories(sideDir)
     val detailJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"retimed":${retimed.size},"coldsum":${fmt(coldSum)},"cpus":$cpus,"sf":"$sfDir","failed":${failedJson(failed.toSeq)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"retimed":${retimed.size},"coldsum":${fmt(coldSum)},"retime_threshold":${fmt(retimeThreshold)},"cpus":$cpus,"sf":"$sfDir","failed":${failedJson(failed.toSeq)}}"""
     java.nio.file.Files.write(
       sideDir.resolve("queries.json"), detailJson.getBytes("UTF-8"))
     // per-query history IN-REPO: /tmp/graft_bench/queries.json is
@@ -76,6 +76,8 @@ object Bench {
     // SPARK_GRAFT_ONLY run would shadow the round's real numbers.
     // Malformed SPARK_GRAFT_ROUND must not crash the bench after all
     // queries already ran — warn and fall through to inference.
+    // Low-core runs stamp rNN_cK.json beside the round's main map.
+    val mainCores = cpus == Runtime.getRuntime.availableProcessors
     val round: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND")
       .flatMap { v =>
         val p = scala.util.Try(v.toInt).toOption
@@ -83,29 +85,28 @@ object Bench {
           System.err.println(s"[bench] ignoring malformed SPARK_GRAFT_ROUND=$v")
         p
       }
-      .orElse {
-        val rx = "BENCH_r(\\d+)\\.json".r
-        val cwd = new java.io.File(".").listFiles()
-        Option(cwd).map(_.toSeq.flatMap(f => f.getName match {
-          case rx(n) => Some(n.toInt)
-          case _ => None
-        })).filter(_.nonEmpty).map(_.max + 1)
-      }
+      .orElse(inferRound(Option(new java.io.File(".").list()).toSeq.flatten,
+        mainCores))
     if (only.isEmpty) round.foreach { r =>
       val dDir = java.nio.file.Paths.get("bench_detail")
       java.nio.file.Files.createDirectories(dDir)
-      // r14: low-core runs stamp rNN_cK.json instead of overwriting the
-      // round's main map — the driver's 8-core scaling run used to land
-      // LAST and replace the 32-core detail (r13's r14.json held the
-      // c8 numbers). Additions-only: the main-core filename and JSON
-      // shape are unchanged (plus a "cpus" field for provenance).
-      val mainCores = cpus == Runtime.getRuntime.availableProcessors
       val fname = if (mainCores) f"r$r%02d.json" else f"r$r%02d_c$cpus.json"
       java.nio.file.Files.write(
         dDir.resolve(fname), detailJson.getBytes("UTF-8"))
     }
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{"all":${fmt(total)}},"nq":${results.size},"retimed":${retimed.size},"coldsum":${fmt(coldSum)},"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The round a run stamps, from the file names in the repo root: the
+    * round's `BENCH_rNN.json` is written after its main-core run, so a
+    * main-core run is round max+1 and a low-core run, which follows
+    * that file, is round max. None without any `BENCH_rNN.json`. */
+  private[graft] def inferRound(files: Seq[String], mainCores: Boolean): Option[Int] = {
+    val rx = "BENCH_r(\\d+)\\.json".r
+    val rounds = files.collect { case rx(n) => n.toInt }
+    if (rounds.isEmpty) None
+    else Some(if (mainCores) rounds.max + 1 else rounds.max)
   }
 
   /** Seconds `run` took, and the class of what it threw, if anything:

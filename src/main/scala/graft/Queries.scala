@@ -3331,13 +3331,7 @@ object Queries {
         .select(col("doc_id"), array_distinct(col("words")).as("uw"))
         .persist() // referenced by both join legs
       val out = s"/tmp/graft_vpairs_${Integer.toHexString(dir.hashCode)}"
-      cand
-        .join(uniqWords.select(col("doc_id").as("id_a"), col("uw").as("ua")), Seq("id_a"))
-        .join(uniqWords.select(col("doc_id").as("id_b"), col("uw").as("ub")), Seq("id_b"))
-        .withColumn("inter", graft.functions.functions.intersect_size(col("ua"), col("ub")).cast(DoubleType))
-        .withColumn("jac", col("inter") / (size(col("ua")) + size(col("ub")) - col("inter")))
-        .filter(col("jac") >= 0.3)
-        .select("id_a", "id_b", "jac")
+      Postings.verify(cand, uniqWords, uniqWords, Postings.Jaccard(0.3))
         .write.mode("overwrite").parquet(out)
       banded.unpersist()
       uniqWords.unpersist()

@@ -142,25 +142,6 @@ final case class MinHashSignature(
 
 object MinHashLSH {
 
-  /** Candidate pairs (idA < idB) from banding a minhash signature column.
-    * Linear explode → shuffle on (band, bandHash) → bucket-local join. */
-  /** `maxBucketSize`: the standard LSH skew guard for web-scale corpora.
-    * A degenerate band hash (boilerplate pages, empty docs) can put
-    * millions of ids in one (band, bh) bucket, turning the bucket-local
-    * self-join quadratic on the hot key. Oversized buckets are
-    * DOWN-SAMPLED to `cap` members BEFORE the join, ordered by a
-    * per-band deterministic hash — so join work is bounded at cap² per
-    * bucket, and because each band keeps a *different* subset, members
-    * of a hot exact-dup cluster (where every band bucket is oversized)
-    * still surface in some band's kept set with probability
-    * ≈ 1 − (1 − cap/n)^bands. Recall on such clusters is reduced, not
-    * preserved: with n ≫ cap·bands some members pair with nothing and
-    * the cluster can fragment; downstream connected-components re-links
-    * what does pair. None = exact banding (the oracle-parity default). */
-  /** `hasher`: band-key and down-sample-rank hash over a pre-concatenated
-    * string. Production default is codegen'd 8-byte xxhash64; oracle-
-    * parity queries pass md5 so DuckDB can replay the identical banding
-    * and down-sampling. */
   /** Probability that a pair with true Jaccard `s` becomes an LSH
     * candidate under (bands, rowsPerBand) banding — the MMDS §3.4.2
     * S-curve 1 − (1 − s^r)^b. Use to audit recall at a design point. */
@@ -211,6 +192,45 @@ object MinHashLSH {
     }
   }
 
+  /** One row per (id, band): `(<idAs>, band, bh)`, `bh` the `hasher` of
+    * the band's `sigLen / bands` signature elements joined by `|`. */
+  private def bandKeys(df: DataFrame, idField: String, idAs: String,
+      sigField: String, bands: Int, sigLen: Int,
+      hasher: Column => Column): DataFrame = {
+    require(sigLen % bands == 0,
+      s"sigLen ($sigLen) must be divisible by bands ($bands); a remainder " +
+        "would silently drop trailing signature elements from banding")
+    val rowsPerBand = sigLen / bands
+    df.select(
+      col(idField).as(idAs),
+      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+        hasher(concat_ws("|", slice(col(sigField), b * rowsPerBand + 1,
+          lit(rowsPerBand)))))).as(Seq("band", "bh")))
+  }
+
+  /** Candidate pairs (idA < idB) from banding a minhash signature column.
+    * Linear explode → shuffle on (band, bandHash) → bucket-local join.
+    * `sigLen` is the signature's length (`numHashes` of the signature
+    * step), passed in so no job probes a row; `bands` must divide it.
+    *
+    * `maxBucketSize`: the standard LSH skew guard for web-scale corpora.
+    * A degenerate band hash (boilerplate pages, empty docs) can put
+    * millions of ids in one (band, bh) bucket, turning the bucket-local
+    * self-join quadratic on the hot key. Oversized buckets are
+    * DOWN-SAMPLED to `cap` members BEFORE the join, ordered by a
+    * per-band deterministic hash — so join work is bounded at cap² per
+    * bucket, and because each band keeps a *different* subset, members
+    * of a hot exact-dup cluster (where every band bucket is oversized)
+    * still surface in some band's kept set with probability
+    * ≈ 1 − (1 − cap/n)^bands. Recall on such clusters is reduced, not
+    * preserved: with n ≫ cap·bands some members pair with nothing and
+    * the cluster can fragment; downstream connected-components re-links
+    * what does pair. None = exact banding (the oracle-parity default).
+    *
+    * `hasher`: band-key and down-sample-rank hash over a pre-concatenated
+    * string. Production default is codegen'd 8-byte xxhash64; oracle-
+    * parity queries pass md5 so DuckDB can replay the identical banding
+    * and down-sampling. */
   def candidatePairs(
       df: DataFrame,
       idField: String,
@@ -222,26 +242,8 @@ object MinHashLSH {
   ): DataFrame = {
     require(df.schema(sigField).dataType.isInstanceOf[ArrayType],
       s"$sigField must be an array")
-    // sigLen is caller-known (== numHashes of the signature step); taking
-    // it as a parameter avoids a whole Spark job just to probe one row
-    val rowsPerBand = sigLen / bands
-    val bandedAll = df
-      .select(
-        col(idField).as("__graft_id"),
-        posexplode(
-          transform(
-            sequence(lit(0), lit(bands - 1)),
-            b =>
-              hasher(concat_ws("|", slice(col(sigField), b * rowsPerBand + 1,
-                lit(rowsPerBand))))
-          )
-        ).as(Seq("band", "bh"))
-      )
-    // uncapped: materialize the banding once so both self-join legs
-    // read the cache. Capped: bounded postings per (band, bucket) (see
-    // [[Postings]]), ranked by hash(id|band) — one exchange, no window
-    // or self-join.
-    if (maxBucketSize.isEmpty) bandedAll.persist().count()
+    val bandedAll = bandKeys(df, idField, "__graft_id", sigField, bands, sigLen, hasher)
+    // capped: bounded postings per (band, bucket), ranked by hash(id|band)
     Postings.candidatePairs(bandedAll, Seq("band", "bh"), "__graft_id",
       hasher(concat_ws("|", col("__graft_id"), col("band"))), maxBucketSize)
       .distinct()
@@ -261,9 +263,9 @@ object MinHashLSH {
     *
     * Scale shape: shingle df table is one partial-agg groupBy on
     * xxhash64(shingle); the block join shuffles (hash, id) pairs;
-    * exact verification joins shingle sets back for candidate ids only
-    * (same discipline as [[dedup]]'s verify). The containment score is
-    * a scaled integral division, engine-replayable. */
+    * exact verification ([[Postings.verify]]) joins shingle sets back
+    * for candidate ids only. The containment score is a scaled integral
+    * division, engine-replayable. */
   def containmentPairs(
       df: DataFrame,
       wordsField: String,
@@ -274,10 +276,7 @@ object MinHashLSH {
       scale: Long = 1000000L
   ): DataFrame = {
     require(maxShingleDf >= 2 && minContainment > 0 && minContainment <= 1)
-    // r13: the shingle arrays feed THREE consumers (the blocking explode
-    // and both verify-join legs) — persist so the splitter + shingle
-    // HOFs run once, not once per consumer (the PrefixFilterJoin
-    // `ordered` discipline)
+    // persisted: the blocking explode and both verify legs read the shingles
     val shingled = df.select(
       col(idField).as("__ct_id"),
       array_distinct(TextShingles.shingles(col(wordsField), shingleSize))
@@ -288,21 +287,9 @@ object MinHashLSH {
       .select(col("__ct_id"), explode(col("__ct_sh")).as("__ct_s"))
       .withColumn("__ct_h", xxhash64(col("__ct_s")))
       .drop("__ct_s")
-    // POSTINGS shape (r13): the df-count filter and the block self-join
-    // collapse into ONE groupBy — a posting (shingle-hash) with 2 ≤
-    // members ≤ maxShingleDf emits its ≤ maxShingleDf·(maxShingleDf−1)/2
-    // candidate pairs in-row. Previous formulation paid a count agg, a
-    // blocking join, and a self-join (3 further exchanges of posting
-    // rows); the candidate set is identical. r14: the unbounded
-    // collect_list (a hot boilerplate shingle shared by millions of
-    // docs would buffer ALL its ids in one task before the size filter
-    // discarded them) becomes a BOUNDED collect of at most
-    // maxShingleDf+1 ids ([[graft.functions.functions.collect_min_k]]):
-    // a posting with ≤ maxShingleDf members keeps its FULL id set
-    // (sorted — pair_combos' least/greatest orientation + distinct make
-    // the pair set order-independent), and reaching maxShingleDf+1
-    // elements IS the overflow flag the size filter rejects, exactly as
-    // it rejected the full list.
+    // one groupBy per shingle hash collects at most maxShingleDf+1 ids:
+    // a posting of 2..maxShingleDf members keeps them all, and holding
+    // maxShingleDf+1 is the overflow the size filter drops
     val cand = exploded
       .groupBy(col("__ct_h"))
       .agg(graft.functions.functions
@@ -311,26 +298,8 @@ object MinHashLSH {
         size(col("__ct_ids")) <= maxShingleDf.toInt)
       .transform(Postings.pairsOf(col("__ct_ids")))
       .distinct()
-    val out = cand
-      .join(shingled.select(col("__ct_id").as("id_a"),
-        col("__ct_sh").as("sh_a")), Seq("id_a"))
-      .join(shingled.select(col("__ct_id").as("id_b"),
-        col("__ct_sh").as("sh_b")), Seq("id_b"))
-      .withColumn("__ct_i",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(LongType))
-      .withColumn("containment_scaled",
-        graft.functions.functions.integral_divide(
-          lit(scale) * col("__ct_i"),
-          least(size(col("sh_a")), size(col("sh_b"))).cast(LongType)))
-      // r14: one-intersection threshold twin (see PrefixFilterJoin):
-      // for D = min(|a|,|b|) ≥ 1, floor(scale·I / D) ≥ T ⟺
-      // scale·I ≥ T·D — the pushed-down join condition then evaluates
-      // intersect_size once per candidate instead of twice; the output
-      // column is unchanged.
-      .filter(lit(scale) * col("__ct_i") >=
-        lit(math.floor(scale * minContainment).toLong) *
-          least(size(col("sh_a")), size(col("sh_b"))).cast(LongType))
-      .select("id_a", "id_b", "containment_scaled")
+    val out = Postings.verify(cand, shingled, shingled,
+      Postings.ContainmentScaled(scale, minContainment))
     PlanTrace.dump("containment", out)
     val ckpt = out.localCheckpoint()
     shingled.unpersist()
@@ -352,19 +321,9 @@ object MinHashLSH {
     val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
     val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
     val shingled = df.select(
-      col(idField).as("__id"),
-      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)).as("__sh")
-    )
-    pairs
-      .join(shingled.withColumnRenamed("__id", "id_a")
-        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
-      .join(shingled.withColumnRenamed("__id", "id_b")
-        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn("inter",
-        graft.functions.functions.intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
-      .withColumn("jac",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jac") >= minJaccard)
+      col(idField),
+      array_distinct(TextShingles.shingles(col(wordsField), shingleSize)))
+    Postings.verify(pairs, shingled, shingled, Postings.Jaccard(minJaccard))
       .select("id_a", "id_b")
   }
 
@@ -436,42 +395,16 @@ object MinHashLSH {
       hasher: Column => Column = c => xxhash64(c),
       flagField: String = "dup_of_existing"
   ): DataFrame = {
-    require(
-      sigLen % bands == 0,
-      s"sigLen ($sigLen) must be divisible by bands ($bands); a remainder " +
-        "would silently drop trailing signature elements from banding")
-    val rowsPerBand = sigLen / bands
-    def banded(df: DataFrame, side: String): DataFrame = df.select(
-      col(idField).as(s"__${side}_id"),
-      posexplode(
-        transform(
-          sequence(lit(0), lit(bands - 1)),
-          b =>
-            hasher(concat_ws("|", slice(col(sigField), b * rowsPerBand + 1,
-              lit(rowsPerBand))))
-        )
-      ).as(Seq("band", "bh"))
-    )
-    val cand = banded(incomingSigs, "in")
-      .join(banded(existingSigs, "ex"), Seq("band", "bh"))
-      .select(col("__in_id"), col("__ex_id"))
+    def banded(df: DataFrame, id: String): DataFrame =
+      bandKeys(df, idField, id, sigField, bands, sigLen, hasher)
+    val cand = banded(incomingSigs, "id_a")
+      .join(banded(existingSigs, "id_b"), Seq("band", "bh"))
+      .select(col("id_a"), col("id_b"))
       .distinct()
-    val inWords = incomingSigs.select(
-      col(idField).as("__in_id"),
-      array_distinct(col(wordsField)).as("__in_w"))
-    val exWords = existingSigs.select(
-      col(idField).as("__ex_id"),
-      array_distinct(col(wordsField)).as("__ex_w"))
-    val dupIds = cand
-      .join(inWords, Seq("__in_id"))
-      .join(exWords, Seq("__ex_id"))
-      .withColumn("__inter",
-        graft.functions.functions.intersect_size(col("__in_w"), col("__ex_w")).cast(DoubleType))
-      .withColumn("__jac",
-        col("__inter") /
-          (size(col("__in_w")) + size(col("__ex_w")) - col("__inter")))
-      .filter(col("__jac") >= minJaccard)
-      .select(col("__in_id").as(idField))
+    def words(df: DataFrame) = df.select(col(idField), array_distinct(col(wordsField)))
+    val dupIds = Postings.verify(cand, words(incomingSigs), words(existingSigs),
+        Postings.Jaccard(minJaccard))
+      .select(col("id_a").as(idField))
       .distinct()
       .withColumn(flagField, lit(true))
     incomingSigs

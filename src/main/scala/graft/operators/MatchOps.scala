@@ -340,26 +340,8 @@ object PrefixFilterJoin {
       val cand = Postings.candidatePairs(prefAll, Seq("ptok"), "__pf_id",
         hasher(concat_ws("|", col("__pf_id"), col("ptok"))), maxPrefixDf)
         .distinct()
-      val full = cand
-        .join(ordered.select(col("__pf_id").as("id_a"), col("toks").as("__ta")), "id_a")
-        .join(ordered.select(col("__pf_id").as("id_b"), col("toks").as("__tb")), "id_b")
-        .withColumn("__inter", graft.functions.functions.intersect_size(col("__ta"), col("__tb")).cast("long"))
-        .withColumn("jaccard_ppm",
-          integral_divide(lit(1000000L) * col("__inter"),
-            size(col("__ta")).cast("long") + size(col("__tb")).cast("long") - col("__inter")))
-        // the threshold predicate is pushed into the verify join's
-        // CONDITION by Catalyst, where every column reference is inlined —
-        // written as `jaccard_ppm >= min` it evaluated intersect_size
-        // THREE times per candidate (twice in the floor division, once in
-        // the projection). Algebraic twin with ONE intersection: for
-        // D = |A|+|B|−I ≥ 1, floor(1e6·I / D) ≥ min ⟺ 1e6·I ≥ min·D ⟺
-        // I·(1e6+min) ≥ min·(|A|+|B|). Identical row set (integer-exact,
-        // pinned by the parity spec); jaccard_ppm itself is still
-        // computed the original way, for survivors only.
-        .filter(col("__inter") * lit(1000000L + minJaccardPpm) >=
-          lit(minJaccardPpm) *
-            (size(col("__ta")).cast("long") + size(col("__tb")).cast("long")))
-        .select("id_a", "id_b", "jaccard_ppm")
+      val sets = ordered.select(col("__pf_id"), col("toks"))
+      val full = Postings.verify(cand, sets, sets, Postings.JaccardPpm(minJaccardPpm))
       // the checkpoint below makes the final plan opaque (Scan
       // ExistingRDD); dump the candidate+verify path when measuring
       PlanTrace.dump("pairs", full)

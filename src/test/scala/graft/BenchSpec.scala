@@ -21,4 +21,13 @@ class BenchSpec extends SparkSpec {
       s"""{"q1":"${planned.get}","q2":"${ran.get}"}""")
     assert(Bench.failedJson(Nil) == "{}")
   }
+
+  test("Bench.inferRound: a main-core run stamps the next round, a low-core " +
+    "run the round whose BENCH file it follows") {
+    val files = Seq("BENCH_r13.json", "BENCH_r13_c8.json", "BENCH_r14.json",
+      "BENCH_r14_c8.json", "CORRECTNESS_r15.json", "README.md")
+    assert(Bench.inferRound(files, mainCores = true) === Some(15))
+    assert(Bench.inferRound(files, mainCores = false) === Some(14))
+    assert(Bench.inferRound(Seq("BENCH_r14_c8.json", "r15.json"), mainCores = true) === None)
+  }
 }

@@ -60,6 +60,22 @@ class DedupContribSpec extends SparkSpec {
     assert(kept.contains(1L) && !kept.contains(2L) && kept.contains(4L))
   }
 
+  test("uncapped candidatePairs and dedup leave nothing in the cache") {
+    spark.catalog.clearCache()
+    val withSig = MinHashSignature("words")(docs)
+    assert(MinHashLSH.candidatePairs(withSig, "doc_id").count() > 0)
+    assert(MinHashLSH.dedup(docs, "words", "doc_id", minJaccard = 0.5).count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("LSH banding rejects a signature length the band count does not divide") {
+    val withSig = MinHashSignature("words")(docs)
+    intercept[IllegalArgumentException](
+      MinHashLSH.candidatePairs(withSig, "doc_id", bands = 3, sigLen = 16))
+    intercept[IllegalArgumentException](
+      MinHashLSH.dedup(docs, "words", "doc_id", numHashes = 16, bands = 3))
+  }
+
   test("ConnectedComponents: chains collapse, islands stay apart") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
     val comps = ConnectedComponents.components(pairs)
@@ -510,6 +526,18 @@ class DedupContribSpec extends SparkSpec {
     // yields no blocking shingles at maxShingleDf = 5
     val many = (0L until 10L).map(i => (i, boiler)).toDF("id", "words")
     assert(MinHashLSH.containmentPairs(many, "words", "id").count() == 0)
+  }
+
+  test("containmentPairs threshold is the decimal product: 23 of 1,465 misses 0.0157") {
+    // 1,467 words give 1,465 3-shingles; b repeats a 25-word run of a,
+    // so the two share 23 shingles: containment_scaled 15,699 < 15,700
+    val a = (0 until 1467).map(i => s"a$i")
+    val b = a.slice(100, 125) ++ (0 until 1442).map(i => s"b$i")
+    val df = Seq((1L, a), (2L, b)).toDF("id", "words")
+    def kept(t: Double) = MinHashLSH.containmentPairs(df, "words", "id",
+      minContainment = t).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(kept(0.01569).toSeq == Seq((1L, 2L, 15699L)))
+    assert(kept(0.0157).isEmpty)
   }
 
   test("AudioDHash: real WAVs — local edit stays near, reshuffle goes far") {

@@ -327,6 +327,165 @@ class OptimizedShapeParitySpec extends SparkSpec {
     }
   }
 
+  /** `n` distinct words `p0 … p(n−1)`. */
+  private def words(p: String, n: Int) = (0 until n).map(i => s"$p$i")
+
+  /** `containmentPairs` as it stood before `Postings.verify`: its own
+    * join-and-intersect block, T = ⌊scale·minContainment⌋ in doubles. */
+  private def containmentPairsRef(df: org.apache.spark.sql.DataFrame,
+      maxShingleDf: Int, minContainment: Double, scale: Long) = {
+    import graft.functions.functions.{collect_min_k, integral_divide, intersect_size}
+    import graft.operators.{Postings, TextShingles}
+    val shingled = df.select(col("id").as("__ct_id"),
+      array_distinct(TextShingles.shingles(col("words"), 3)).as("__ct_sh"))
+    val cand = shingled
+      .select(col("__ct_id"), explode(col("__ct_sh")).as("__ct_s"))
+      .withColumn("__ct_h", xxhash64(col("__ct_s")))
+      .groupBy(col("__ct_h"))
+      .agg(collect_min_k(col("__ct_id"), maxShingleDf + 1).as("__ct_ids"))
+      .filter(size(col("__ct_ids")) >= 2 && size(col("__ct_ids")) <= maxShingleDf)
+      .transform(Postings.pairsOf(col("__ct_ids")))
+      .distinct()
+    cand
+      .join(shingled.select(col("__ct_id").as("id_a"), col("__ct_sh").as("sh_a")), Seq("id_a"))
+      .join(shingled.select(col("__ct_id").as("id_b"), col("__ct_sh").as("sh_b")), Seq("id_b"))
+      .withColumn("__ct_i", intersect_size(col("sh_a"), col("sh_b")).cast(LongType))
+      .withColumn("containment_scaled", integral_divide(lit(scale) * col("__ct_i"),
+        least(size(col("sh_a")), size(col("sh_b"))).cast(LongType)))
+      .filter(lit(scale) * col("__ct_i") >=
+        lit(math.floor(scale * minContainment).toLong) *
+          least(size(col("sh_a")), size(col("sh_b"))).cast(LongType))
+      .select("id_a", "id_b", "containment_scaled")
+  }
+
+  test("containmentPairs via Postings.verify == its own verify block (contained docs, hot shingles, a pair at T, scales 1e6 and 1e3)") {
+    import graft.operators.MinHashLSH
+    val hot = words("h", 6)
+    // twelve bases with 1..3 copies each: wrapped in private words,
+    // wrapped in the hot boilerplate (df 16 > the cap of 5), or cut
+    // short by a few words
+    val bases = (0 until 12).map(b => words(s"x${b}_", 8 + b))
+    val copies = bases.zipWithIndex.flatMap { case (w, b) =>
+      w +: (0 to b % 3).map {
+        case 0 => words(s"p${b}_", 3) ++ w ++ words(s"q${b}_", 2)
+        case 1 => hot ++ w
+        case _ => w.dropRight(1 + b % 2)
+      }
+    }
+    // at T for 0.9 and 0.5: 9 and 5 of the 10 shingles of a 12-word doc
+    val edge = words("e", 12)
+    val docs = copies ++ Seq(edge, edge.take(11) ++ words("f", 15),
+      words("g", 12), words("g", 7) ++ words("k", 15)) ++
+      (0 until 8).map(i => hot ++ words(s"o${i}_", 4))
+    val df = docs.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "words")
+    for (scale <- Seq(1000000L, 1000L); t <- Seq(0.9, 0.5)) {
+      val got = MinHashLSH.containmentPairs(df, "words", "id", maxShingleDf = 5L,
+        minContainment = t, scale = scale)
+      val want = containmentPairsRef(df, 5, t, scale)
+      sameMultiset(got, want, s"scale $scale, threshold $t")
+      val atT = (BigDecimal(t) * scale).toLongExact
+      assert(want.filter(col("containment_scaled") === atT).count() > 0,
+        s"scale $scale, threshold $t: no pair exactly at T")
+    }
+  }
+
+  /** `MinHashLSH.dedup` as it stood before `Postings.verify`. */
+  private def dedupRef(df: org.apache.spark.sql.DataFrame, minJaccard: Double) = {
+    import graft.functions.functions.intersect_size
+    import graft.operators.{MinHashLSH, MinHashSignature, TextShingles}
+    val pairs = MinHashLSH.candidatePairs(MinHashSignature("words", 3, 16)(df),
+      "id", "minhash_sig", 4, 16)
+    val shingled = df.select(col("id").as("__id"),
+      array_distinct(TextShingles.shingles(col("words"), 3)).as("__sh"))
+    val verified = pairs
+      .join(shingled.withColumnRenamed("__id", "id_a")
+        .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
+      .join(shingled.withColumnRenamed("__id", "id_b")
+        .withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
+      .withColumn("inter", intersect_size(col("sh_a"), col("sh_b")).cast(DoubleType))
+      .withColumn("jac", col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
+      .filter(col("jac") >= minJaccard)
+      .select("id_a", "id_b")
+    df.join(verified.select(col("id_b").as("id")).distinct(), Seq("id"), "left_anti")
+  }
+
+  /** `MinHashLSH.nearDupAgainst` as it stood before `Postings.verify`
+    * (bands 4 of an 8-long signature, xxhash64). */
+  private def nearDupAgainstRef(existing: org.apache.spark.sql.DataFrame,
+      incoming: org.apache.spark.sql.DataFrame, minJaccard: Double) = {
+    import graft.functions.functions.intersect_size
+    def banded(df: org.apache.spark.sql.DataFrame, side: String) = df.select(
+      col("id").as(s"__${side}_id"),
+      posexplode(transform(sequence(lit(0), lit(3)), b =>
+        xxhash64(concat_ws("|", slice(col("sig"), b * 2 + 1, lit(2))))))
+        .as(Seq("band", "bh")))
+    val cand = banded(incoming, "in").join(banded(existing, "ex"), Seq("band", "bh"))
+      .select(col("__in_id"), col("__ex_id")).distinct()
+    val inWords = incoming.select(col("id").as("__in_id"), array_distinct(col("words")).as("__in_w"))
+    val exWords = existing.select(col("id").as("__ex_id"), array_distinct(col("words")).as("__ex_w"))
+    val dupIds = cand.join(inWords, Seq("__in_id")).join(exWords, Seq("__ex_id"))
+      .withColumn("__inter", intersect_size(col("__in_w"), col("__ex_w")).cast(DoubleType))
+      .withColumn("__jac",
+        col("__inter") / (size(col("__in_w")) + size(col("__ex_w")) - col("__inter")))
+      .filter(col("__jac") >= minJaccard)
+      .select(col("__in_id").as("id")).distinct()
+      .withColumn("dup_of_existing", lit(true))
+    incoming.join(dupIds, Seq("id"), "left")
+      .withColumn("dup_of_existing", coalesce(col("dup_of_existing"), lit(false)))
+  }
+
+  test("MinHashLSH.dedup via Postings.verify == its own verify block (a pair at jac = 0.8, empty word arrays)") {
+    import graft.operators.MinHashLSH
+    // 4 of 5 shingles: Jaccard exactly 0.8; near-dup clusters around
+    // it; two empty word arrays, whose one shingle "" makes them
+    // duplicates (1/1); a null one, whose shingle set is null
+    val docs: Seq[(Long, Option[Seq[String]])] =
+      Seq((0L, Some(words("a", 6))), (1L, Some(words("a", 7))),
+        (2L, Some(Seq.empty[String])), (3L, Some(Seq.empty[String])), (4L, None)) ++
+      (0 until 10).flatMap { c =>
+        val base = words(s"c${c}_", 10 + c)
+        Seq((100L + 10 * c, Some(base)),
+          (101L + 10 * c, Some(base.updated(c % base.size, s"d$c"))),
+          (102L + 10 * c, Some(base.take(base.size - 1 - c % 3))))
+      }
+    val df = docs.toDF("id", "words")
+    for (t <- Seq(0.8, 0.5)) {
+      val got = MinHashLSH.dedup(df, "words", "id", minJaccard = t)
+      val want = dedupRef(df, t)
+      sameMultiset(got, want, s"dedup at $t")
+      assert(want.filter(col("id") === 1L).count() === 0,
+        s"dedup at $t: the jac = 0.8 pair was not verified")
+      assert(want.filter(col("id").isin(2L, 3L)).select("id").as[Long]
+        .collect().toSeq === Seq(2L))
+    }
+  }
+
+  test("MinHashLSH.nearDupAgainst via Postings.verify == its own verify block (jac = 0.8, 0.75, 0/0)") {
+    import graft.operators.MinHashLSH
+    // equal signatures make every (incoming, existing) pair of a
+    // cluster a candidate; the words set the Jaccard
+    val sig = (c: Long) => (0L until 8L).map(j => det(c, 40 + j))
+    val existing = Seq(
+      (10L, sig(1), Seq("a", "b", "c", "d", "e")),
+      (11L, sig(2), Seq("p", "q", "r", "s")),
+      (12L, sig(3), Seq.empty[String]),
+      (13L, sig(4), Seq("x", "y", "x", "z"))).toDF("id", "sig", "words")
+    val incoming = Seq(
+      (1L, sig(1), Seq("a", "b", "c", "d", "d")), // 4/5 = 0.8
+      (2L, sig(2), Seq("p", "q", "r")),           // 3/4 = 0.75
+      (3L, sig(3), Seq.empty[String]),            // 0/0
+      (4L, sig(4), Seq("z", "y", "x")),           // 3/3
+      (5L, sig(5), Seq("a", "b", "c", "d", "e"))) // no candidate
+      .toDF("id", "sig", "words")
+    val got = MinHashLSH.nearDupAgainst(existing, incoming, "id", sigField = "sig",
+      bands = 4, sigLen = 8, minJaccard = 0.8)
+      .select("id", "dup_of_existing")
+    val want = nearDupAgainstRef(existing, incoming, 0.8).select("id", "dup_of_existing")
+    sameMultiset(got, want, "nearDupAgainst")
+    assert(want.orderBy("id").as[(Long, Boolean)].collect().toSeq ===
+      Seq((1L, true), (2L, false), (3L, false), (4L, true), (5L, false)))
+  }
+
   test("word_shingles matches the TextShingles HOF (null array, null words, short, unicode)") {
     import graft.operators.TextShingles
     val vocab = Seq("a", "bb", "日本語", "", null, "x y", "zz")

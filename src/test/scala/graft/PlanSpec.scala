@@ -163,6 +163,20 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Join"), plan)
   }
 
+  test("Postings.verify: integer measures evaluate intersect_size once in the join condition, double Jaccard twice") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val cand = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
+    val sets = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a", "b")), (3L, Seq("c", "d")))
+      .toDF("id", "set")
+    def inCondition(m: Postings.Measure): Int =
+      Postings.verify(cand, sets, sets, m).queryExecution.optimizedPlan
+        .collect { case j: Join => j.condition.map(_.toString).getOrElse("") }
+        .map("intersectsizeexpr".r.findAllIn(_).length).sum
+    assert(inCondition(Postings.JaccardPpm(500000L)) === 1)
+    assert(inCondition(Postings.ContainmentScaled(1000000L, 0.9)) === 1)
+    assert(inCondition(Postings.Jaccard(0.5)) === 2)
+  }
+
   test("PrefixFilterJoin ordered tokens: one token-partitioned Window, no Join; postings hold only df >= 2 tokens") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
     val df = Seq(
