@@ -66,10 +66,14 @@ object Queries {
     * catalog serially. */
   private def scratchPath(tag: String, dir: String): String = {
     val user = System.getProperty("user.name", "anon")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"/tmp/graft_${tag}_${user}_$h"
+    s"/tmp/graft_${tag}_${user}_${dirDigest(dir)}"
   }
+
+  /** md5 hex of the SF dir's full path: the dir's name in scratch files
+    * and databases (String.hashCode collides, e.g. "Aa"/"BB"). */
+  private def dirDigest(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** documents/embeddings read spread across cores: the driver ships ONE
     * parquet file per table (single row group → parquet yields a single
@@ -1012,20 +1016,14 @@ object Queries {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
 
   /** Per-JVM token so two concurrent sessions on the same dir never race
-    * on one file; the dir itself is identified by a collision-resistant
-    * md5 of the full path (String.hashCode collides, e.g. "Aa"/"BB"). */
+    * on one file; the dir itself is identified by [[dirDigest]]. */
   private val sigCacheToken =
     java.lang.management.ManagementFactory.getRuntimeMXBean.getName
       .replaceAll("[^A-Za-z0-9]", "_")
 
   private def minhashSigs(s: SparkSession, dir: String): DataFrame = {
     val path = sigCache.getOrElseUpdate((s, dir), {
-      val dirDigest = java.security.MessageDigest
-        .getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .map("%02x".format(_))
-        .mkString
-      val out = s"/tmp/graft_sigs_${sigCacheToken}_$dirDigest"
+      val out = s"/tmp/graft_sigs_${sigCacheToken}_${dirDigest(dir)}"
       org.apache.hadoop.fs.FileSystem
         .getLocal(s.sparkContext.hadoopConfiguration)
         .deleteOnExit(new org.apache.hadoop.fs.Path(out))
@@ -1051,38 +1049,12 @@ object Queries {
 
   private val qMinhashPairs = Q(
     "q83_minhash_lsh_pairs",
-    (s, dir) => {
-      // LSH banding: 4 bands of 2 minhashes → candidate pairs share a band.
-      // Signatures come from the shared materialization; banding is
-      // persisted so the self-join's two legs read it once.
-      val sigs = minhashSigs(s, dir)
-        .select(
-          col("doc_id"),
-          explode(
-            transform(
-              sequence(lit(0), lit(3)),
-              b =>
-                struct(
-                  b.as("band"),
-                  md5(concat_ws("|", slice(col("sig"), b * 2 + 1, lit(2)))).as("bh")
-                )
-            )
-          ).as("bk")
-        )
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-        .persist()
-      sigs.count() // materialize once before the self-join
-      val a = sigs.as("a")
-      val b = sigs.as("b")
-      a.join(
-          b,
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-            col("a.doc_id") < col("b.doc_id")
-        )
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-        .orderBy("id_a", "id_b")
-    },
+    // LSH banding: 4 bands of 2 minhashes → candidate pairs share a band
+    (s, dir) =>
+      MinHashLSH
+        .candidatePairs(minhashSigs(s, dir), "doc_id", sigField = "sig",
+          bands = 4, sigLen = 8, hasher = c => md5(c))
+        .orderBy("id_a", "id_b"),
     Some(
       s"""WITH $SIG_CTES,
          |bands AS (SELECT doc_id, unnest(list_transform(generate_series(0, 3),
@@ -2108,12 +2080,7 @@ object Queries {
   private val qTrainingExport = Q(
     "q122_training_export_roundtrip",
     (s, dir) => {
-      val digest = java.security.MessageDigest
-        .getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .map("%02x".format(_))
-        .mkString
-      val out = s"/tmp/graft_export_${sigCacheToken}_$digest"
+      val out = s"/tmp/graft_export_${sigCacheToken}_${dirDigest(dir)}"
       org.apache.hadoop.fs.FileSystem
         .getLocal(s.sparkContext.hadoopConfiguration)
         .deleteOnExit(new org.apache.hadoop.fs.Path(out))
@@ -2862,7 +2829,7 @@ object Queries {
       // per-SF namespace + physical cleanup: a fresh metastore with
       // leftover warehouse files from a previous run at another SF
       // would otherwise resurrect stale data under the same table name
-      val db = "graft_q29_" + math.abs(dir.hashCode).toString
+      val db = "graft_q29_" + dirDigest(dir)
       def rmrf(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
         f.delete(): Unit
@@ -3293,11 +3260,13 @@ object Queries {
     )
   )
 
-  /** md5-minhash candidates (q83-style banding) + exact word-set jaccard
-    * verify, at jaccard >= 0.3. Candidates are deduped on (id_a, id_b)
-    * BEFORE the word arrays are joined back — the wide data never enters
-    * the distinct shuffle (the 100-TB discipline: shuffle keys, not
-    * text). Shared by q92 (pair output) and q97 (connected components on
+  /** md5-minhash candidates (q83's banding through
+    * [[MinHashLSH.candidatePairs]], which joins on (band, bh); the oracle
+    * joins on bh alone, the same pairs while no band hash repeats across
+    * two bands) + exact word-set jaccard verify, at jaccard >= 0.3.
+    * Candidates are deduped on (id_a, id_b) BEFORE the word arrays are
+    * joined back — the wide data never enters the distinct shuffle (the
+    * 100-TB discipline: shuffle keys, not text). Shared by q92 (pair output) and q97 (connected components on
     * the same edges) — materialized ONCE per (session, dir) to a temp
     * parquet and read back, so one catalog run pays the signature
     * pipeline a single time. A file (not `.persist()`) because the bench
@@ -3307,33 +3276,20 @@ object Queries {
   private val vpCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
 
+  /** Where [[md5VerifiedPairs]] writes the pairs of SF dir `dir`. */
+  private[graft] def vpairsPath(dir: String): String =
+    s"/tmp/graft_vpairs_${dirDigest(dir)}"
+
   private def md5VerifiedPairs(s: SparkSession, dir: String): DataFrame = {
     val path = vpCache.getOrElseUpdate((s, dir), {
-      val sigs = minhashSigs(s, dir)
-      val banded = sigs
-        .select(
-          col("doc_id"),
-          explode(
-            transform(
-              sequence(lit(0), lit(3)),
-              b => md5(concat_ws("|", slice(col("sig"), b * 2 + 1, lit(2))))
-            )
-          ).as("bh")
-        )
-        .persist()
-      banded.count()
-      val cand = banded.as("a")
-        .join(banded.as("b"), Seq("bh"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
+      val cand = MinHashLSH.candidatePairs(minhashSigs(s, dir), "doc_id",
+        sigField = "sig", bands = 4, sigLen = 8, hasher = c => md5(c))
       val uniqWords = docWords(s, dir)
         .select(col("doc_id"), array_distinct(col("words")).as("uw"))
         .persist() // referenced by both join legs
-      val out = s"/tmp/graft_vpairs_${Integer.toHexString(dir.hashCode)}"
+      val out = vpairsPath(dir)
       Postings.verify(cand, uniqWords, uniqWords, Postings.Jaccard(0.3))
         .write.mode("overwrite").parquet(out)
-      banded.unpersist()
       uniqWords.unpersist()
       out
     })

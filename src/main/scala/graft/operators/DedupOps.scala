@@ -186,10 +186,7 @@ object MinHashLSH {
     require(sigLen > 0, "sigLen must be positive")
     require(targetJaccard > 0 && targetJaccard < 1,
       "targetJaccard must be in (0, 1)")
-    (1 to sigLen).filter(sigLen % _ == 0).minBy { b =>
-      val r = sigLen / b
-      math.abs(math.pow(1.0 / b, 1.0 / r) - targetJaccard)
-    }
+    planBands(sigLen, targetJaccard)._1
   }
 
   /** One row per (id, band): `(<idAs>, band, bh)`, `bh` the `hasher` of
@@ -489,7 +486,7 @@ object MinHashLSH {
     * plan: 1 − (1 − s^rows)^bands, in ppm — the S-curve a reviewer
     * reads to see what recall a plan buys at each similarity level. */
   def sCurvePpm(bands: Int, rows: Int, s: Double): Long =
-    math.floor((1.0 - math.pow(1.0 - math.pow(s, rows), bands)) * 1e6).toLong
+    math.floor(sCurve(s, bands, rows) * 1e6).toLong
 }
 
 /** Distributed connected components over candidate-pair edges:

@@ -90,19 +90,25 @@ object Sinks {
       partitionBy: Seq[String] = Nil,
       mode: String = "overwrite"
   ): Unit = {
-    val shaped =
-      if (sortWithinBy.nonEmpty) {
-        val cols = sortWithinBy.map(col)
-        val ranged = numFiles
-          .map(n => df.repartitionByRange(n, cols: _*))
-          .getOrElse(df.repartitionByRange(cols: _*))
-        ranged.sortWithinPartitions(cols: _*)
-      } else numFiles.map(df.repartition).getOrElse(df)
+    val shaped = shape(df, sortWithinBy, numFiles)
     val w = shaped.write.mode(mode)
       .option("maxRecordsPerFile", targetRowsPerFile)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path)
   }
+
+  /** `sortWithinBy` non-empty: range-partition on it (into `numFiles`
+    * partitions if set) and sort within each; else round-robin into
+    * `numFiles` partitions if set, or leave `df` as it is. */
+  private def shape(df: DataFrame, sortWithinBy: Seq[String],
+      numFiles: Option[Int]): DataFrame =
+    if (sortWithinBy.nonEmpty) {
+      val cols = sortWithinBy.map(col)
+      val ranged = numFiles
+        .map(n => df.repartitionByRange(n, cols: _*))
+        .getOrElse(df.repartitionByRange(cols: _*))
+      ranged.sortWithinPartitions(cols: _*)
+    } else numFiles.map(df.repartition).getOrElse(df)
 
   /** Parquet export with column BLOOM FILTERS — the point-predicate
     * complement to min/max zone maps. Zone maps (tightened by
@@ -127,14 +133,7 @@ object Sinks {
       mode: String = "overwrite"
   ): Unit = {
     require(bloomCols.nonEmpty, "need at least one bloom-filtered column")
-    val shaped =
-      if (sortWithinBy.nonEmpty) {
-        val cols = sortWithinBy.map(col)
-        val ranged = numFiles
-          .map(n => df.repartitionByRange(n, cols: _*))
-          .getOrElse(df.repartitionByRange(cols: _*))
-        ranged.sortWithinPartitions(cols: _*)
-      } else numFiles.map(df.repartition).getOrElse(df)
+    val shaped = shape(df, sortWithinBy, numFiles)
     val w = bloomCols.foldLeft(shaped.write.mode(mode)) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", expectedNdv.toString)

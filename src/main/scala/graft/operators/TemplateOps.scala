@@ -751,7 +751,7 @@ object MiniJinja {
                     throw new IllegalArgumentException(s"Bad macro: $body"))
                 val params = splitTop(m.group(2), ',').map(_.trim)
                   .filter(_.nonEmpty).map { p =>
-                    findTopKeyword(p, "=") match {
+                    findTop(p, "=") match {
                       case Some(eq) =>
                         val name = p.substring(0, eq).trim
                         require(name.matches("\\w+"), s"Bad macro param: $p")
@@ -767,19 +767,14 @@ object MiniJinja {
                 i += 1 // consume endmacro
                 out += MacroDef(m.group(1), params.toList, inner)
               case "filter" =>
-                val spec = body.drop(6).trim
-                val m = "^(\\w+)(?:\\((.*)\\))?$".r
-                  .findFirstMatchIn(spec)
-                  .getOrElse(
-                    throw new IllegalArgumentException(s"Bad filter block: $body"))
-                val args = Option(m.group(2)).filter(_.nonEmpty)
-                  .map(a => splitTop(a, ',').map(x => literal(x.trim)).toList)
-                  .getOrElse(Nil)
+                val (name, raw) = callSpec(body.drop(6).trim).getOrElse(
+                  throw new IllegalArgumentException(s"Bad filter block: $body"))
+                val args = callArgs(raw)(literal)
                 i += 1
                 val (inner, stop) = parseNodes(Set("endfilter"))
                 require(stop.contains("endfilter"), s"Unclosed filter: $body")
                 i += 1 // consume endfilter
-                out += FilterBlock(m.group(1), args, inner)
+                out += FilterBlock(name, args, inner)
               case "include" =>
                 val m = "^include\\s+(?:\"([^\"]*)\"|'([^']*)')$".r
                   .findFirstMatchIn(body)
@@ -817,7 +812,7 @@ object MiniJinja {
 
   // Jinja2 boolean precedence: or < and < not < comparison < ~ < |filter
   private def parseOr(s: String): Expr =
-    findTopKeyword(s, " or ") match {
+    findTop(s, " or ") match {
       case Some(i) =>
         Cmp("or", parseAnd(s.substring(0, i).trim),
           parseOr(s.substring(i + 4).trim))
@@ -825,7 +820,7 @@ object MiniJinja {
     }
 
   private def parseAnd(s: String): Expr =
-    findTopKeyword(s, " and ") match {
+    findTop(s, " and ") match {
       case Some(i) =>
         Cmp("and", parseNot(s.substring(0, i).trim),
           parseAnd(s.substring(i + 5).trim))
@@ -836,71 +831,47 @@ object MiniJinja {
     if (s.startsWith("not ")) Not(parseNot(s.drop(4).trim))
     else parseCmp(s)
 
+  private val cmpOps = Seq("==", "!=", "<=", ">=", "<", ">")
+
   private def parseCmp(s: String): Expr = {
     // `is [not] <test>[(args)]` — same precedence tier as comparisons
     def parseIs(i: Int, kwLen: Int, negated: Boolean): Expr = {
       val lhs = parseConcat(s.substring(0, i).trim)
-      val spec = s.substring(i + kwLen).trim
-      val m = "^(\\w+)(?:\\((.*)\\))?$".r.findFirstMatchIn(spec)
+      val (test, raw) = callSpec(s.substring(i + kwLen).trim)
         .getOrElse(throw new IllegalArgumentException(s"Bad is-test: $s"))
-      val args = Option(m.group(2)).filter(_.nonEmpty)
-        .map(a => splitTop(a, ',').map(x => literal(x.trim)).toList)
-        .getOrElse(Nil)
-      IsTest(lhs, m.group(1), args, negated)
+      IsTest(lhs, test, callArgs(raw)(literal), negated)
     }
-    findTopKeyword(s, " is not ") match {
+    findTop(s, " is not ") match {
       case Some(i) => return parseIs(i, 8, negated = true)
       case None    => ()
     }
-    findTopKeyword(s, " is ") match {
+    findTop(s, " is ") match {
       case Some(i) => return parseIs(i, 4, negated = false)
       case None    => ()
     }
     // comparison/membership binds LOOSEST (Jinja2 precedence: `a ~ b == c`
     // is `(a ~ b) == c`), so split it first; `~` folds inside each operand
-    findTopKeyword(s, " not in ") match {
+    findTop(s, " not in ") match {
       case Some(i) =>
         return Cmp("not in",
           parseConcat(s.substring(0, i).trim),
           parseConcat(s.substring(i + 8).trim))
       case None => ()
     }
-    findTopKeyword(s, " in ") match {
+    findTop(s, " in ") match {
       case Some(i) =>
         return Cmp("in",
           parseConcat(s.substring(0, i).trim),
           parseConcat(s.substring(i + 4).trim))
       case None => ()
     }
-    findTopCmpOp(s.trim) match {
+    findTopOf(s.trim, cmpOps) match {
       case Some((i, op)) =>
         Cmp(op,
           parseConcat(s.trim.substring(0, i).trim),
           parseConcat(s.trim.substring(i + op.length).trim))
       case None => parseConcat(s.trim)
     }
-  }
-
-  /** first comparison operator at quote/bracket depth zero (longest match
-    * wins at each position), or None. */
-  private def findTopCmpOp(s: String): Option[(Int, String)] = {
-    val ops = Seq("==", "!=", "<=", ">=", "<", ">")
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (depth == 0) {
-        val hit = ops.find(op => s.regionMatches(i, op, 0, op.length))
-        if (hit.isDefined) return Some((i, hit.get))
-      }
-      i += 1
-    }
-    None
   }
 
   private def parseConcat(s: String): Expr = {
@@ -933,142 +904,131 @@ object MiniJinja {
     if (s.startsWith("-")) Arith("-", Lit(0L), parseUnary(s.drop(1).trim))
     else parseFiltered(s)
 
+  /** Top-level mask of `s`: `top(i)` is true when `s(i)` is outside
+    * quotes at bracket depth 0. Depth counts `(` and `[` together (either
+    * closer pops it); a quote opens at `"` or `'` and closes at the next
+    * copy of the same char, with no escapes. A bracket reports the outer
+    * depth: an opener the depth before it, a closer the depth after it. */
+  private def topLevel(s: String): Array[Boolean] = {
+    val top = new Array[Boolean](s.length)
+    var depth = 0
+    var quote: Char = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (quote != 0) { if (c == quote) quote = 0 }
+      else if (c == '"' || c == '\'') quote = c
+      else if (c == '(' || c == '[') { top(i) = depth == 0; depth += 1 }
+      else if (c == ')' || c == ']') { depth -= 1; top(i) = depth == 0 }
+      else top(i) = depth == 0
+      i += 1
+    }
+    top
+  }
+
+  /** first top-level position where one of `ops` starts (the earlier op
+    * wins at a position), with that op, or None. */
+  private def findTopOf(s: String, ops: Seq[String]): Option[(Int, String)] = {
+    val top = topLevel(s)
+    s.indices.iterator.filter(top(_))
+      .flatMap(i => ops.find(s.startsWith(_, i)).map(i -> _)).nextOption()
+  }
+
+  /** index of the first top-level `t`, or None. */
+  private def findTop(s: String, t: String): Option[Int] =
+    findTopOf(s, Seq(t)).map(_._1)
+
   /** LAST top-level binary occurrence of any of `ops` (left
     * associativity). An operator char is binary only when the preceding
     * non-space char terminates an operand — so unary minus (`-1`,
     * `(-n)`, `2 * -3`) is never split here. */
   private def findLastArith(s: String, ops: Seq[String]): Option[(Int, String)] = {
     val byLen = ops.sortBy(-_.length)
-    var depth = 0
-    var quote: Char = 0
+    val top = topLevel(s)
     var best: Option[(Int, String)] = None
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (depth == 0) {
-        byLen.find(op => s.regionMatches(i, op, 0, op.length)) match {
-          case Some(op) =>
-            var j = i - 1
-            while (j >= 0 && s.charAt(j) == ' ') j -= 1
-            val binary = j >= 0 && {
-              val p = s.charAt(j)
-              p.isLetterOrDigit || p == '_' || p == ')' || p == ']' ||
-                p == '"' || p == '\''
-            }
-            if (binary) best = Some((i, op))
-            i += op.length - 1 // don't re-scan inside a matched '//'
-          case None => ()
+      if (top(i)) byLen.find(s.startsWith(_, i)).foreach { op =>
+        val j = s.lastIndexWhere(_ != ' ', i - 1)
+        val binary = j >= 0 && {
+          val p = s.charAt(j)
+          p.isLetterOrDigit || p == '_' || p == ')' || p == ']' ||
+            p == '"' || p == '\''
         }
+        if (binary) best = Some((i, op))
+        i += op.length - 1 // don't re-scan inside a matched '//'
       }
       i += 1
     }
     best
   }
 
-  /** index of `kw` at paren/quote depth zero, or None. */
-  private def findTopKeyword(s: String, kw: String): Option[Int] = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i + kw.length <= s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (depth == 0 && s.regionMatches(i, kw, 0, kw.length)) return Some(i)
-      i += 1
-    }
-    None
+  /** split on `sep` at top level. */
+  private def splitTop(s: String, sep: Char): Seq[String] = {
+    val top = topLevel(s)
+    val cuts = s.indices.filter(i => top(i) && s.charAt(i) == sep)
+    (-1 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 1, b) }
   }
+
+  /** `name` or `name(args)`: a filter, `is` test, method or call spec. */
+  private val callRe = "^(\\w+)(?:\\((.*)\\))?$".r
+  private val kwArgRe = "^(\\w+)\\s*=(?!=)\\s*(.+)$".r
+
+  /** `spec` read as `name` or `name(args)`: the name and the text between
+    * the parens, if there are parens; None when `spec` is neither. */
+  private def callSpec(spec: String): Option[(String, Option[String])] =
+    callRe.findFirstMatchIn(spec).map(m => (m.group(1), Option(m.group(2))))
+
+  /** the comma-separated arguments of a [[callSpec]], each trimmed and
+    * read by `arg`; empty or absent arguments are none. */
+  private def callArgs[A](raw: Option[String])(arg: String => A): List[A] =
+    raw.filter(_.nonEmpty)
+      .map(a => splitTop(a, ',').map(x => arg(x.trim)).toList)
+      .getOrElse(Nil)
 
   private def parseFiltered(s: String): Expr = {
     val parts = splitTop(s, '|').map(_.trim)
     val base = parseAtom(parts.head)
     parts.tail.foldLeft(base) { (acc, f) =>
-      val m = "^(\\w+)(?:\\((.*)\\))?$".r
-        .findFirstMatchIn(f)
+      val (name, raw) = callSpec(f)
         .getOrElse(throw new IllegalArgumentException(s"Bad filter: $f"))
-      val args = Option(m.group(2)).filter(_.nonEmpty)
-        .map(a => splitTop(a, ',').map { x =>
-          val t = x.trim
-          "^(\\w+)\\s*=(?!=)\\s*(.+)$".r.findFirstMatchIn(t) match {
-            case Some(kw) => KwArg(kw.group(1), literal(kw.group(2).trim))
-            case None => literal(t)
-          }
-        }.toList)
-        .getOrElse(Nil)
-      Filtered(acc, m.group(1), args)
+      Filtered(acc, name, callArgs(raw) { t =>
+        kwArgRe.findFirstMatchIn(t) match {
+          case Some(kw) => KwArg(kw.group(1), literal(kw.group(2).trim))
+          case None => literal(t)
+        }
+      })
     }
   }
 
-  private def parseAtom(s: String): Expr = {
+  private def parseAtom(s: String): Expr =
     // split off trailing [idx] / [a:b] accessor groups (bracket binds
     // tighter than |filter, looser than the dotted path)
-    val open = {
-      var depth = 0
-      var quote: Char = 0
-      var found = -1
-      var i = 0
-      while (i < s.length && found < 0) {
-        val c = s.charAt(i)
-        if (quote != 0) { if (c == quote) quote = 0 }
-        else if (c == '"' || c == '\'') quote = c
-        else if (c == '[' && depth == 0) found = i
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        i += 1
-      }
-      found
+    findTop(s, "[") match {
+      case None => parseBase(s)
+      case Some(open) =>
+        var e = parseBase(s.substring(0, open).trim)
+        var rest = s.substring(open)
+        while (rest.startsWith("[")) {
+          // the top-level `]` of `[…]` is its match (`xs[ys[0]]`, `m[']']`)
+          val close = findTop(rest, "]").getOrElse(-1)
+          require(close > 0, s"Unclosed '[' in: $s")
+          val body = rest.substring(1, close).trim
+          val parts = splitTop(body, ':').map(_.trim)
+          e =
+            if (parts.length == 1) Index(e, parseIndexExpr(parts.head))
+            else if (parts.length == 2)
+              Slice(
+                e,
+                Option(parts(0)).filter(_.nonEmpty).map(parseIndexExpr),
+                Option(parts(1)).filter(_.nonEmpty).map(parseIndexExpr)
+              )
+            else throw new IllegalArgumentException(s"Bad slice: [$body]")
+          rest = rest.substring(close + 1).trim
+        }
+        require(rest.isEmpty, s"Trailing content after accessor in: $s")
+        e
     }
-    if (open < 0) parseBase(s)
-    else {
-      var e = parseBase(s.substring(0, open).trim)
-      var rest = s.substring(open)
-      while (rest.startsWith("[")) {
-        val close = matchingBracket(rest)
-        require(close > 0, s"Unclosed '[' in: $s")
-        val body = rest.substring(1, close).trim
-        val parts = splitTop(body, ':').map(_.trim)
-        e =
-          if (parts.length == 1) Index(e, parseIndexExpr(parts.head))
-          else if (parts.length == 2)
-            Slice(
-              e,
-              Option(parts(0)).filter(_.nonEmpty).map(parseIndexExpr),
-              Option(parts(1)).filter(_.nonEmpty).map(parseIndexExpr)
-            )
-          else throw new IllegalArgumentException(s"Bad slice: [$body]")
-        rest = rest.substring(close + 1).trim
-      }
-      require(rest.isEmpty, s"Trailing content after accessor in: $s")
-      e
-    }
-  }
-
-  /** index of the `]` matching `s(0) == '['`, honoring quotes and nested
-    * brackets/parens (so `xs[ys[0]]` and `m[']']` parse), or -1. */
-  private def matchingBracket(s: String): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '[' || c == '(') depth += 1
-      else if (c == ']' || c == ')') {
-        depth -= 1
-        if (depth == 0 && c == ']') return i
-      }
-      i += 1
-    }
-    -1
-  }
 
   private def parseIndexExpr(s: String): Expr =
     if (s.matches("-?\\d+")) Lit(s.toLong) else parseExpr(s)
@@ -1082,37 +1042,21 @@ object MiniJinja {
     "replace" -> "replace", "split" -> "split",
     "startswith" -> "startswith", "endswith" -> "endswith")
 
-  /** split a dotted path on '.' at depth zero (so `x.replace('.', ',')`
-    * keeps its argument dots). */
-  private def splitPath(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') { quote = c; cur += c }
-      else if (c == '(' || c == '[') { depth += 1; cur += c }
-      else if (c == ')' || c == ']') { depth -= 1; cur += c }
-      else if (c == '.' && depth == 0) { out += cur.result(); cur.clear() }
-      else cur += c
-    }
-    out += cur.result()
-    out.toSeq
-  }
-
-  private val methodCallRe = "^(\\w+)\\((.*)\\)$".r
-
   private def parseBase(s: String): Expr =
     if (s.startsWith("\"") || s.startsWith("'") || s.head.isDigit ||
       (s.length > 1 && s.head == '-' && s.charAt(1).isDigit) ||
       s == "true" || s == "false")
       Lit(literal(s))
     else {
-      val segs = splitPath(s)
+      // dotted path split at top level, so `x.replace('.', ',')` keeps
+      // its argument dots
+      val segs = splitTop(s, '.')
       // leading run of plain attribute segments forms the Ref path;
       // trailing `name(args)` segments chain as method-call filters
-      val firstCall = segs.indexWhere(seg => methodCallRe.findFirstIn(seg).isDefined)
+      // (method and macro calls read a blank `( )` as no arguments)
+      val calls = segs.map(seg =>
+        callSpec(seg).collect { case (n, Some(a)) => (n, Some(a.trim)) })
+      val firstCall = calls.indexWhere(_.isDefined)
       if (firstCall < 0) Ref(segs.toList)
       else if (firstCall == 0) {
         // `name(args…)` at the head: macro invocation or builtin like
@@ -1120,27 +1064,19 @@ object MiniJinja {
         // Jinja2 also restricts less — but literals cover the pack).
         require(segs.length == 1,
           s"Attribute access after a call is unsupported: $s")
-        val m = methodCallRe.findFirstMatchIn(segs.head).get
-        val args = Option(m.group(2)).map(_.trim).filter(_.nonEmpty)
-          .map(a => splitTop(a, ',').map(x => parseExpr(x.trim)).toList)
-          .getOrElse(Nil)
-        Call(m.group(1), args)
+        val (name, raw) = calls.head.get
+        Call(name, callArgs(raw)(parseExpr))
       } else {
-        require(firstCall > 0, s"Bad expression: $s")
         val base: Expr = Ref(segs.take(firstCall).toList)
-        segs.drop(firstCall).foldLeft(base) { (acc, seg) =>
-          val m = methodCallRe.findFirstMatchIn(seg).getOrElse(
+        calls.drop(firstCall).foldLeft(base) { (acc, call) =>
+          val (name, raw) = call.getOrElse(
             throw new IllegalArgumentException(
               s"Attribute access after a method call is unsupported: $s"))
-          val name = m.group(1)
           val filter = methodFilters.getOrElse(name,
             throw new IllegalArgumentException(
               s"Unsupported method call '.$name()'. Supported: " +
                 methodFilters.keys.toSeq.sorted.mkString(", ")))
-          val args = Option(m.group(2)).map(_.trim).filter(_.nonEmpty)
-            .map(a => splitTop(a, ',').map(x => literal(x.trim)).toList)
-            .getOrElse(Nil)
-          Filtered(acc, filter, args)
+          Filtered(acc, filter, callArgs(raw)(literal))
         }
       }
     }
@@ -1152,24 +1088,6 @@ object MiniJinja {
     else if (s == "false") false
     else if (s.contains('.')) s.toDouble
     else s.toLong
-
-  /** split on `sep` outside quotes/parens. */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') { quote = c; cur += c }
-      else if (c == '(' || c == '[') { depth += 1; cur += c }
-      else if (c == ')' || c == ']') { depth -= 1; cur += c }
-      else if (c == sep && depth == 0) { out += cur.result(); cur.clear() }
-      else cur += c
-    }
-    out += cur.result()
-    out.toSeq
-  }
 
   /** Spark value → template value (Rows stay Rows; WrappedArray → Seq). */
   private[operators] def toTemplateValue(v: Any): Any = v match {

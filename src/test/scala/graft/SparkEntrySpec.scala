@@ -22,4 +22,10 @@ class SparkEntrySpec extends SparkSpec {
     assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
     assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
   }
+
+  test("verified-pairs cache: SF dirs whose hashCodes collide get different files") {
+    val (a, b) = ("/data/sf_Aa", "/data/sf_BB")
+    assert(a.hashCode == b.hashCode)
+    assert(Queries.vpairsPath(a) != Queries.vpairsPath(b))
+  }
 }
