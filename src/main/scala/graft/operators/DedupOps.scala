@@ -273,39 +273,38 @@ object MinHashLSH {
       scale: Long = 1000000L
   ): DataFrame = {
     require(maxShingleDf >= 2 && minContainment > 0 && minContainment <= 1)
-    // persisted: the blocking explode and both verify legs read the shingles
-    val shingled = df.select(
+    // the blocking explode and both verify legs read the shingles
+    val shingles = df.select(
       col(idField).as("__ct_id"),
       array_distinct(TextShingles.shingles(col(wordsField), shingleSize))
         .as("__ct_sh"))
-      .persist()
-    shingled.count()
-    val exploded = shingled
-      .select(col("__ct_id"), explode(col("__ct_sh")).as("__ct_s"))
-      .withColumn("__ct_h", xxhash64(col("__ct_s")))
-      .drop("__ct_s")
-    // one groupBy per shingle hash collects at most maxShingleDf+1 ids:
-    // a posting of 2..maxShingleDf members keeps them all, and holding
-    // maxShingleDf+1 is the overflow the size filter drops
-    val cand = exploded
-      .groupBy(col("__ct_h"))
-      .agg(graft.functions.functions
-        .collect_min_k(col("__ct_id"), maxShingleDf.toInt + 1).as("__ct_ids"))
-      .filter(size(col("__ct_ids")) >= 2 &&
-        size(col("__ct_ids")) <= maxShingleDf.toInt)
-      .transform(Postings.pairsOf(col("__ct_ids")))
-      .distinct()
-    val out = Postings.verify(cand, shingled, shingled,
-      Postings.ContainmentScaled(scale, minContainment))
-    PlanTrace.dump("containment", out)
-    val ckpt = out.localCheckpoint()
-    shingled.unpersist()
-    ckpt
+    Postings.shared("containment", shingles) { shingled =>
+      val exploded = shingled
+        .select(col("__ct_id"), explode(col("__ct_sh")).as("__ct_s"))
+        .withColumn("__ct_h", xxhash64(col("__ct_s")))
+        .drop("__ct_s")
+      // one groupBy per shingle hash collects at most maxShingleDf+1 ids:
+      // a posting of 2..maxShingleDf members keeps them all, and holding
+      // maxShingleDf+1 is the overflow the size filter drops
+      val cand = exploded
+        .groupBy(col("__ct_h"))
+        .agg(graft.functions.functions
+          .collect_min_k(col("__ct_id"), maxShingleDf.toInt + 1).as("__ct_ids"))
+        .filter(size(col("__ct_ids")) >= 2 &&
+          size(col("__ct_ids")) <= maxShingleDf.toInt)
+        .transform(Postings.pairsOf(col("__ct_ids")))
+        .distinct()
+      Postings.verify(cand, shingled, shingled,
+        Postings.ContainmentScaled(scale, minContainment))
+    }
   }
 
   /** The exact-verified near-dup pairs behind [[dedup]] and the cluster
     * variants: signature → uncapped banding → join both sides' distinct
-    * shingle sets → keep `(id_a, id_b)` with Jaccard ≥ `minJaccard`. */
+    * shingle sets → keep `(id_a, id_b)` with Jaccard ≥ `minJaccard`. A
+    * document with an empty or null words array matches nothing, as in
+    * [[nearDupAgainst]] (its one shingle "" would make any two such
+    * documents duplicates). */
   private def verifiedPairs(
       df: DataFrame,
       wordsField: String,
@@ -315,9 +314,10 @@ object MinHashLSH {
       bands: Int,
       minJaccard: Double
   ): DataFrame = {
-    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(df)
+    val worded = df.filter(size(col(wordsField)) > 0)
+    val withSig = MinHashSignature(wordsField, shingleSize, numHashes)(worded)
     val pairs = candidatePairs(withSig, idField, "minhash_sig", bands, numHashes)
-    val shingled = df.select(
+    val shingled = worded.select(
       col(idField),
       array_distinct(TextShingles.shingles(col(wordsField), shingleSize)))
     Postings.verify(pairs, shingled, shingled, Postings.Jaccard(minJaccard))
@@ -775,15 +775,11 @@ object SimHashNearDup {
             .bitwiseAND(lit(mask))): _*)
       ).as(Seq("__sh_band", "__sh_chunk"))
     )
-    // materialize once: without the persist BOTH self-join legs
-    // recompute the upstream simhash (per-word hash + bit fold). The
-    // cache is left to the session; a checkpoint would truncate the plan
-    // callers audit.
-    val kept = banded.persist()
-    kept.count()
-    kept.as("a")
+    // a shuffled join: both legs exchange on (band, chunk), so the second
+    // is a ReusedExchange, where a broadcast leg would recompute the simhash
+    banded.as("a")
       .join(
-        kept.as("b"),
+        banded.as("b").hint("merge"),
         col("a.__sh_band") === col("b.__sh_band") &&
           col("a.__sh_chunk") === col("b.__sh_chunk") &&
           col("a.__sh_id") < col("b.__sh_id"))
@@ -838,13 +834,10 @@ object SemDeDup {
       .collect()
     require(centRows.nonEmpty, "SemDeDup: empty centroid set")
     // same argmax as ivfTopK.assign: strictly-greater wins, so ties keep
-    // the earlier (lower-cid) candidate. One fused native kernel
-    // (r13: graft.functions.ArgMaxCosineExpr — K cosines + argmax in a
-    // single loop) replaces the array-of-structs + interpreted
-    // `aggregate` fold; idx → cid via a literal array lookup.
+    // the earlier (lower-cid) candidate; idx → cid via a literal array
     val cents = centRows.toIndexedSeq.map(_.getSeq[Double](1))
     val cids = centRows.toIndexedSeq.map(_.getLong(0))
-    val assigned = corpus
+    val assignment = corpus
       .select(col(idField).as("__sd_id"), e.as("__sd_e"))
       .withColumn("__best", graft.functions.functions.argmax_cosine(col("__sd_e"), cents))
       .select(
@@ -853,48 +846,47 @@ object SemDeDup {
         element_at(typedLit(cids), col("__best").getField("idx") + 1).as("cluster"),
         floor(col("__best").getField("sim") * 1e6).cast(LongType).as("__sd_csim")
       )
-      .persist()
-    val kept = maxClusterCompare match {
-      case Some(cap) =>
-        assigned
-          .withColumn(
-            "__sd_rn",
-            row_number().over(
-              Window.partitionBy(col("cluster"))
-                .orderBy(hasher(concat_ws("|", col("__sd_id"), col("cluster"))),
-                  col("__sd_id")))
-          )
-          .filter(col("__sd_rn") <= cap)
-          .drop("__sd_rn")
-      case None => assigned
+    val verdict = Postings.shared("semdedup", assignment) { assigned =>
+      val kept = maxClusterCompare match {
+        case Some(cap) =>
+          assigned
+            .withColumn(
+              "__sd_rn",
+              row_number().over(
+                Window.partitionBy(col("cluster"))
+                  .orderBy(hasher(concat_ws("|", col("__sd_id"), col("cluster"))),
+                    col("__sd_id")))
+            )
+            .filter(col("__sd_rn") <= cap)
+            .drop("__sd_rn")
+        case None => assigned
+      }
+      val edges = kept.as("a")
+        .join(kept.as("b"),
+          col("a.cluster") === col("b.cluster") &&
+            col("a.__sd_id") < col("b.__sd_id"))
+        .filter(
+          floor(CosineKnn.cosine(col("a.__sd_e"), col("b.__sd_e")) * 1e6)
+            .cast(LongType) >= epsScaled)
+        .select(col("a.__sd_id").as("id_a"), col("b.__sd_id").as("id_b"))
+      val comps = ConnectedComponents.components(edges)
+      // per duplicate group: survive the member FARTHEST from its centroid
+      // (lowest scaled sim), ties -> smallest id
+      val survivors = comps
+        .join(assigned.select(col("__sd_id").as("id"), col("__sd_csim")), Seq("id"))
+        .groupBy(col("comp"))
+        .agg(min(struct(col("__sd_csim"), col("id"))).as("__w"))
+        .select(col("__w").getField("id").as("id"), lit(true).as("__sd_surv"))
+      assigned
+        .join(comps.withColumnRenamed("id", "__sd_id"), Seq("__sd_id"), "left")
+        .join(survivors.withColumnRenamed("id", "__sd_id"), Seq("__sd_id"), "left")
+        .select(
+          col("__sd_id"),
+          col("cluster"),
+          (col("comp").isNull || coalesce(col("__sd_surv"), lit(false)))
+            .as(keepField)
+        )
     }
-    val edges = kept.as("a")
-      .join(kept.as("b"),
-        col("a.cluster") === col("b.cluster") &&
-          col("a.__sd_id") < col("b.__sd_id"))
-      .filter(
-        floor(CosineKnn.cosine(col("a.__sd_e"), col("b.__sd_e")) * 1e6)
-          .cast(LongType) >= epsScaled)
-      .select(col("a.__sd_id").as("id_a"), col("b.__sd_id").as("id_b"))
-    val comps = ConnectedComponents.components(edges)
-    // per duplicate group: survive the member FARTHEST from its centroid
-    // (lowest scaled sim), ties -> smallest id
-    val survivors = comps
-      .join(assigned.select(col("__sd_id").as("id"), col("__sd_csim")), Seq("id"))
-      .groupBy(col("comp"))
-      .agg(min(struct(col("__sd_csim"), col("id"))).as("__w"))
-      .select(col("__w").getField("id").as("id"), lit(true).as("__sd_surv"))
-    val verdict = assigned
-      .join(comps.withColumnRenamed("id", "__sd_id"), Seq("__sd_id"), "left")
-      .join(survivors.withColumnRenamed("id", "__sd_id"), Seq("__sd_id"), "left")
-      .select(
-        col("__sd_id"),
-        col("cluster"),
-        (col("comp").isNull || coalesce(col("__sd_surv"), lit(false)))
-          .as(keepField)
-      )
-      .localCheckpoint()
-    assigned.unpersist()
     corpus.join(
       verdict.withColumnRenamed("__sd_id", idField),
       Seq(idField))
@@ -1324,10 +1316,9 @@ object ProductQuantizer {
   * — so the mined set replays bit-identically (SURVEY parity rules;
   * float sums over unordered groups would not).
   *
-  * Scale shape: plug `topK = CosineKnn.annTopK(...)` (bucketed LSH)
-  * for the 100-TB path — the margin layer adds two O(k·|X|+k·|Y|)
-  * partial-agg sums and two keyed joins on ids, nothing quadratic.
-  * [[CosineKnn.bruteForce]] stays the exact small-sample default. */
+  * Scale shape: the exact X×Y cosine matrix is scored once (quadratic,
+  * a small-sample operator); the margin layer over it adds two
+  * O(k·|X|+k·|Y|) partial-agg sums and two keyed joins on ids. */
 object BitextMine {
 
   def marginPairs(
@@ -1338,79 +1329,53 @@ object BitextMine {
       k: Int = 4,
       cosScale: Long = 100000L,
       marginScale: Long = 10000L,
-      minMarginScaled: Option[Long] = None,
-      topK: Option[(DataFrame, DataFrame, String, String, Int) => DataFrame] =
-        None
+      minMarginScaled: Option[Long] = None
   ): DataFrame = {
     import graft.functions.functions.integral_divide
     def scaled(knn: DataFrame): DataFrame =
       knn.withColumn("cos_i", floor(col("cos") * cosScale).cast(LongType))
-    // r13: the default exact path computes the X×Y cosine matrix ONCE
-    // and persists it — the forward and backward top-k are two windows
-    // over the same scored table. The previous formulation ran
-    // bruteForce per direction AND re-ran the forward leg for its
-    // second consumer: three full cross-product cosine passes where one
-    // suffices. cos(x,y) is evaluated with the same operand order as
-    // bruteForce(ys, xs) — double multiply is commutative-exact, so the
-    // backward leg's values are bit-identical to bruteForce(xs, ys).
-    // Plug `topK = Some(CosineKnn.annTopK(...))` for the 100-TB path,
-    // which keeps the per-direction form (its bucketing is directional).
-    val (fwd, bwd, shared) = topK match {
-      case Some(f) =>
-        (scaled(f(ys, xs, embField, idField, k)).persist(), // x → Y
-          scaled(f(xs, ys, embField, idField, k)), None) // y → X
-      case None =>
-        val c = ys.select(col(idField).as("y_id"),
-          col(embField).cast(ArrayType(DoubleType)).as("__ce"))
-        val q = xs.select(col(idField).as("x_id"),
-          col(embField).cast(ArrayType(DoubleType)).as("__qe"))
-        // rank on the RAW double cos (exactly what bruteForce's window
-        // did — floor-scaling first could merge distinct cosines and
-        // change tie-breaks); cos_i is derived after ranking
-        val scored = c.crossJoin(broadcast(q))
-          .select(col("x_id"), col("y_id"),
-            CosineKnn.cosine(col("__ce"), col("__qe")).as("cos"))
-          .persist()
-        scored.count()
-        val wf = Window.partitionBy("x_id")
-          .orderBy(col("cos").desc, col("y_id"))
-        val wb = Window.partitionBy("y_id")
-          .orderBy(col("cos").desc, col("x_id"))
-        val f = scaled(scored
-          .withColumn("rank", row_number().over(wf)).filter(col("rank") <= k)
-          .select(col("x_id").as("query_id"), col("y_id").as("corpus_id"),
-            col("cos"), col("rank")))
-        val b = scaled(scored
-          .withColumn("rank", row_number().over(wb)).filter(col("rank") <= k)
-          .select(col("y_id").as("query_id"), col("x_id").as("corpus_id"),
-            col("cos"), col("rank")))
-        (f, b, Some(scored))
-    }
-    val fwdSum = fwd.groupBy(col("query_id").as("x_id"))
-      .agg(sum("cos_i").as("__sum_f"))
-    val bwdSum = bwd.groupBy(col("query_id").as("y_id"))
-      .agg(sum("cos_i").as("__sum_b"))
-    val cand = fwd.filter(col("rank") === 1)
-      .select(col("query_id").as("x_id"), col("corpus_id").as("y_id"),
-        col("cos_i"))
-    val den = col("__sum_f") + col("__sum_b")
-    val margins = cand
-      .join(fwdSum, "x_id")
-      .join(bwdSum, "y_id")
-      .filter(den > 0) // anti-correlated neighborhoods mine nothing
-      .withColumn("margin_scaled",
-        integral_divide(lit(marginScale) * 2 * k * col("cos_i"), den))
-      .select("x_id", "y_id", "margin_scaled")
-    val out = minMarginScaled.fold(margins)(t =>
-      margins.filter(col("margin_scaled") >= t))
-    shared match {
-      case Some(s) =>
-        // materialize the (small) mined set, then release the cached
-        // cosine matrix so library callers don't leak cached blocks
-        val o = out.localCheckpoint()
-        s.unpersist()
-        o
-      case None => out
+    val c = ys.select(col(idField).as("y_id"),
+      col(embField).cast(ArrayType(DoubleType)).as("__ce"))
+    val q = xs.select(col(idField).as("x_id"),
+      col(embField).cast(ArrayType(DoubleType)).as("__qe"))
+    // cos(x,y) has bruteForce(ys, xs)'s operand order; double multiply
+    // commutes exactly, so the backward leg equals bruteForce(xs, ys)
+    val cosines = c.crossJoin(broadcast(q))
+      .select(col("x_id"), col("y_id"),
+        CosineKnn.cosine(col("__ce"), col("__qe")).as("cos"))
+    // the forward and backward top-k are two windows over one matrix
+    Postings.shared("margin", cosines) { scored =>
+      // rank on the RAW double cos (floor-scaling first could merge
+      // distinct cosines and change tie-breaks); cos_i comes after
+      val wf = Window.partitionBy("x_id")
+        .orderBy(col("cos").desc, col("y_id"))
+      val wb = Window.partitionBy("y_id")
+        .orderBy(col("cos").desc, col("x_id"))
+      val fwd = scaled(scored
+        .withColumn("rank", row_number().over(wf)).filter(col("rank") <= k)
+        .select(col("x_id").as("query_id"), col("y_id").as("corpus_id"),
+          col("cos"), col("rank")))
+      val bwd = scaled(scored
+        .withColumn("rank", row_number().over(wb)).filter(col("rank") <= k)
+        .select(col("y_id").as("query_id"), col("x_id").as("corpus_id"),
+          col("cos"), col("rank")))
+      val fwdSum = fwd.groupBy(col("query_id").as("x_id"))
+        .agg(sum("cos_i").as("__sum_f"))
+      val bwdSum = bwd.groupBy(col("query_id").as("y_id"))
+        .agg(sum("cos_i").as("__sum_b"))
+      val cand = fwd.filter(col("rank") === 1)
+        .select(col("query_id").as("x_id"), col("corpus_id").as("y_id"),
+          col("cos_i"))
+      val den = col("__sum_f") + col("__sum_b")
+      val margins = cand
+        .join(fwdSum, "x_id")
+        .join(bwdSum, "y_id")
+        .filter(den > 0) // anti-correlated neighborhoods mine nothing
+        .withColumn("margin_scaled",
+          integral_divide(lit(marginScale) * 2 * k * col("cos_i"), den))
+        .select("x_id", "y_id", "margin_scaled")
+      minMarginScaled.fold(margins)(t =>
+        margins.filter(col("margin_scaled") >= t))
     }
   }
 }

@@ -330,23 +330,17 @@ object PrefixFilterJoin {
     require(maxPrefixDf.forall(_ >= 2),
       s"maxPrefixDf must be >= 2 (a 1-doc posting pairs nothing), got $maxPrefixDf")
     // one ordered-token build feeds the prefix and both verify legs
-    val ordered = orderedTokens(df, idField, tokensField, minJaccardPpm).persist()
-    try {
-      ordered.count()
+    Postings.shared("pairs",
+        orderedTokens(df, idField, tokensField, minJaccardPpm)) { ordered =>
       val prefAll = ordered.select(col("__pf_id"), explode(col("ptoks")).as("ptok"))
-      // capped: bounded postings per prefix token (see [[Postings]]); the
-      // rank hash is salted with the token so a hot document is not the
-      // one dropped everywhere
+      // the rank hash is salted with the token so a hot document is not
+      // the one dropped from every capped posting
       val cand = Postings.candidatePairs(prefAll, Seq("ptok"), "__pf_id",
         hasher(concat_ws("|", col("__pf_id"), col("ptok"))), maxPrefixDf)
         .distinct()
       val sets = ordered.select(col("__pf_id"), col("toks"))
-      val full = Postings.verify(cand, sets, sets, Postings.JaccardPpm(minJaccardPpm))
-      // the checkpoint below makes the final plan opaque (Scan
-      // ExistingRDD); dump the candidate+verify path when measuring
-      PlanTrace.dump("pairs", full)
-      full.localCheckpoint()
-    } finally ordered.unpersist()
+      Postings.verify(cand, sets, sets, Postings.JaccardPpm(minJaccardPpm))
+    }
   }
 
   /** One row per document: `toks`, its distinct non-null tokens in
@@ -429,57 +423,50 @@ object SortedNeighborhood {
       .filter(col(keyField).isNotNull)
       .select(col(idField).as("__sn_id"), col(keyField).as("__sn_k"))
       .withColumn("__sn_b", bucket(col("__sn_k")).cast(StringType))
-    val local = keyed
-      .withColumn(
-        "__sn_r",
-        row_number()
-          .over(Window.partitionBy(col("__sn_b"))
-            .orderBy(col("__sn_k"), col("__sn_id")))
-          .cast(LongType) - 1L)
-      .persist()
-    // O(#buckets) driver state: sizes ordered by each bucket's min key
-    // (Spark's ordering, not the driver's collation) -> prefix offsets.
-    val sizes = local
-      .groupBy(col("__sn_b"))
-      .agg(count(lit(1)).as("__sn_n"), min(col("__sn_k")).as("__sn_min"))
-      .orderBy(col("__sn_min"), col("__sn_b"))
-      .select(col("__sn_b"), col("__sn_n"))
-      .collect()
-    var acc = 0L
-    val offsets = sizes.map { r =>
-      val o = (r.getString(0), acc); acc += r.getLong(1); o
-    }.toSeq
-    val offDf = offsets.toDF("__sn_b", "__sn_off")
-    val ranked = local
-      .join(broadcast(offDf), "__sn_b")
-      .select(
-        col("__sn_id"),
-        (col("__sn_r") + col("__sn_off")).as("__sn_g"))
-    val w = lit(window.toLong)
-    val banded = ranked
-      .select(
-        col("__sn_id"),
-        col("__sn_g"),
-        explode(
-          array_distinct(
-            array(
-              integral_divide(col("__sn_g"), w),
-              integral_divide(col("__sn_g"), w) - 1L))).as("__sn_band"))
-      .filter(col("__sn_band") >= 0L)
-    val out = banded.as("a")
-      .join(
-        banded.as("b"),
-        col("a.__sn_band") === col("b.__sn_band") &&
-          col("b.__sn_g") > col("a.__sn_g") &&
-          col("b.__sn_g") - col("a.__sn_g") < w)
-      .select(
-        col("a.__sn_id").as("id_a"),
-        col("b.__sn_id").as("id_b"),
-        (col("b.__sn_g") - col("a.__sn_g")).as("gap"))
-      .distinct()
-      .localCheckpoint()
-    local.unpersist()
-    out
+    val localRank = row_number()
+      .over(Window.partitionBy(col("__sn_b")).orderBy(col("__sn_k"), col("__sn_id")))
+      .cast(LongType) - 1L
+    Postings.shared("neighborhood", keyed.withColumn("__sn_r", localRank)) { local =>
+      // O(#buckets) driver state: sizes ordered by each bucket's min key
+      // (Spark's ordering, not the driver's collation) -> prefix offsets.
+      val sizes = local
+        .groupBy(col("__sn_b"))
+        .agg(count(lit(1)).as("__sn_n"), min(col("__sn_k")).as("__sn_min"))
+        .orderBy(col("__sn_min"), col("__sn_b"))
+        .select(col("__sn_b"), col("__sn_n"))
+        .collect()
+      var acc = 0L
+      val offsets = sizes.map { r =>
+        val o = (r.getString(0), acc); acc += r.getLong(1); o
+      }.toSeq
+      val offDf = offsets.toDF("__sn_b", "__sn_off")
+      val w = lit(window.toLong)
+      val banded = local
+        .join(broadcast(offDf), "__sn_b")
+        .select(
+          col("__sn_id"),
+          (col("__sn_r") + col("__sn_off")).as("__sn_g"))
+        .select(
+          col("__sn_id"),
+          col("__sn_g"),
+          explode(
+            array_distinct(
+              array(
+                integral_divide(col("__sn_g"), w),
+                integral_divide(col("__sn_g"), w) - 1L))).as("__sn_band"))
+        .filter(col("__sn_band") >= 0L)
+      banded.as("a")
+        .join(
+          banded.as("b"),
+          col("a.__sn_band") === col("b.__sn_band") &&
+            col("b.__sn_g") > col("a.__sn_g") &&
+            col("b.__sn_g") - col("a.__sn_g") < w)
+        .select(
+          col("a.__sn_id").as("id_a"),
+          col("b.__sn_id").as("id_b"),
+          (col("b.__sn_g") - col("a.__sn_g")).as("gap"))
+        .distinct()
+    }
   }
 }
 

@@ -2,12 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Plan-evidence hook for operators that `localCheckpoint()` (or
-  * `persist()`) an intermediate: the final query plan then shows only
-  * `Scan ExistingRDD` / `InMemoryTableScan`, so the interesting
+/** Plan-evidence hook for operators that `localCheckpoint()` an
+  * intermediate ([[Postings.shared]], [[ConnectedComponents]]): the
+  * final query plan then shows only `Scan ExistingRDD`, so the
   * candidate-path plan is invisible to a post-hoc
-  * `df.explain("formatted")` — the r13 plan dumps for the checkpointed
-  * dedup operators were opaque for exactly this reason.
+  * `df.explain("formatted")`.
   *
   * When `SPARK_GRAFT_PLAN_DIR` is set (the QTime measurement harness
   * sets it; Bench and production runs never do), `dump` writes the

@@ -115,6 +115,21 @@ private[graft] object Postings {
       .select("id_a", "id_b", m.score)
   }
 
+  /** The family's one materialization policy: `input` is persisted and
+    * counted once, `build` reads it, the built plan goes to
+    * [[PlanTrace.dump]] under `site` and is returned checkpointed, and
+    * `input` is unpersisted even when `build` throws. */
+  private[graft] def shared(site: String, input: DataFrame)(
+      build: DataFrame => DataFrame): DataFrame = {
+    val cached = input.persist()
+    try {
+      cached.count()
+      val out = build(cached)
+      PlanTrace.dump(site, out)
+      out.localCheckpoint()
+    } finally cached.unpersist()
+  }
+
   /** Every pair of an id array, one `(id_a, id_b)` row each (id_a <
     * id_b; use with `Dataset.transform`). */
   def pairsOf(ids: Column): DataFrame => DataFrame = df =>

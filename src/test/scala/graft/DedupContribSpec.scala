@@ -61,11 +61,36 @@ class DedupContribSpec extends SparkSpec {
   }
 
   test("uncapped candidatePairs and dedup leave nothing in the cache") {
-    spark.catalog.clearCache()
-    val withSig = MinHashSignature("words")(docs)
-    assert(MinHashLSH.candidatePairs(withSig, "doc_id").count() > 0)
-    assert(MinHashLSH.dedup(docs, "words", "doc_id", minJaccard = 0.5).count() > 0)
-    assert(spark.sharedState.cacheManager.isEmpty)
+    val emb = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.99, 0.1)), (3L, Seq(0.0, 1.0)))
+      .toDF("id", "e")
+    val cents = emb.filter(col("id") === 1L).select(col("id").as("cid"), col("e").as("ce"))
+    val hashes = Seq((1L, 77L), (2L, 77L), (3L, 1L << 40)).toDF("id", "sh")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "MinHashLSH.candidatePairs" ->
+        (() => MinHashLSH.candidatePairs(MinHashSignature("words")(docs), "doc_id")),
+      "MinHashLSH.dedup" ->
+        (() => MinHashLSH.dedup(docs, "words", "doc_id", minJaccard = 0.5)),
+      "PrefixFilterJoin.pairs" ->
+        (() => PrefixFilterJoin.pairs(docs, "doc_id", "words", 500000L)),
+      "SortedNeighborhood.pairs" ->
+        (() => SortedNeighborhood.pairs(docs, "doc_id", "text", window = 2)),
+      "MinHashLSH.containmentPairs" ->
+        (() => MinHashLSH.containmentPairs(docs, "words", "doc_id")),
+      "SemDeDup.dedup" -> (() => SemDeDup.dedup(emb, "e", "id", cents, eps = 0.9)),
+      "BitextMine.marginPairs" -> (() => BitextMine.marginPairs(emb, emb, "e", "id", k = 2)),
+      "SimHashNearDup.candidatePairs" ->
+        (() => SimHashNearDup.candidatePairs(hashes, "id", "sh")),
+      "Postings.shared with a throwing build" -> { () =>
+        intercept[IllegalStateException](Postings.shared("boom", docs)(_ =>
+          throw new IllegalStateException("boom")))
+        docs
+      }
+    )
+    calls.foreach { case (name, call) =>
+      spark.catalog.clearCache()
+      assert(call().count() > 0, name)
+      assert(spark.sharedState.cacheManager.isEmpty, name)
+    }
   }
 
   test("LSH banding rejects a signature length the band count does not divide") {

@@ -389,13 +389,15 @@ class OptimizedShapeParitySpec extends SparkSpec {
     }
   }
 
-  /** `MinHashLSH.dedup` as it stood before `Postings.verify`. */
+  /** `MinHashLSH.dedup` as it stood before `Postings.verify`, where a
+    * document with an empty or null words array matches nothing. */
   private def dedupRef(df: org.apache.spark.sql.DataFrame, minJaccard: Double) = {
     import graft.functions.functions.intersect_size
     import graft.operators.{MinHashLSH, MinHashSignature, TextShingles}
-    val pairs = MinHashLSH.candidatePairs(MinHashSignature("words", 3, 16)(df),
+    val worded = df.filter(size(col("words")) > 0)
+    val pairs = MinHashLSH.candidatePairs(MinHashSignature("words", 3, 16)(worded),
       "id", "minhash_sig", 4, 16)
-    val shingled = df.select(col("id").as("__id"),
+    val shingled = worded.select(col("id").as("__id"),
       array_distinct(TextShingles.shingles(col("words"), 3)).as("__sh"))
     val verified = pairs
       .join(shingled.withColumnRenamed("__id", "id_a")
@@ -437,8 +439,7 @@ class OptimizedShapeParitySpec extends SparkSpec {
   test("MinHashLSH.dedup via Postings.verify == its own verify block (a pair at jac = 0.8, empty word arrays)") {
     import graft.operators.MinHashLSH
     // 4 of 5 shingles: Jaccard exactly 0.8; near-dup clusters around
-    // it; two empty word arrays, whose one shingle "" makes them
-    // duplicates (1/1); a null one, whose shingle set is null
+    // it; two empty word arrays and a null one, which match nothing
     val docs: Seq[(Long, Option[Seq[String]])] =
       Seq((0L, Some(words("a", 6))), (1L, Some(words("a", 7))),
         (2L, Some(Seq.empty[String])), (3L, Some(Seq.empty[String])), (4L, None)) ++
@@ -455,8 +456,10 @@ class OptimizedShapeParitySpec extends SparkSpec {
       sameMultiset(got, want, s"dedup at $t")
       assert(want.filter(col("id") === 1L).count() === 0,
         s"dedup at $t: the jac = 0.8 pair was not verified")
-      assert(want.filter(col("id").isin(2L, 3L)).select("id").as[Long]
-        .collect().toSeq === Seq(2L))
+      for (kept <- Seq(want, MinHashLSH.dedupClusters(df, "words", "id", minJaccard = t),
+          MinHashLSH.dedupClustersBy(df, "words", "id", lit(0L), minJaccard = t)))
+        assert(kept.filter(col("id").isin(2L, 3L, 4L)).select("id").as[Long]
+          .collect().sorted.toSeq === Seq(2L, 3L, 4L))
     }
   }
 

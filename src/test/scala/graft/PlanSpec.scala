@@ -342,6 +342,15 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("__sh_band") && plan.contains("__sh_chunk"), plan)
   }
 
+  test("SimHashNearDup: the self-join's second leg is a ReusedExchange, nothing cached") {
+    val hs = (0L until 200L).map(i => (i, (i % 50) * 2654435761L)).toDF("id", "sh")
+    val out = SimHashNearDup.candidatePairs(hs, "id", "sh")
+    assert(out.collect().nonEmpty)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true") && plan.contains("ReusedExchange"), plan)
+    assert(!plan.contains("InMemory"), plan)
+  }
+
   test("SemDeDup assignment is a zero-shuffle fold over literal centroids") {
     val emb = (0L until 100L)
       .map(i => (i, (0 until 8).map(d => math.sin(i * 13 + d))))
